@@ -1,6 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import java.util.UUID
+import java.util.concurrent.{Callable, ExecutorCompletionService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+import scala.collection.mutable
 
 /** Per-round benchmark main. Runs every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and emits ONE JSON line with per-query seconds.
@@ -102,45 +106,20 @@ object Bench {
     // pipeline cost that must stay visible even though amortized, so
     // the total is transparently decomposable
     val tStage = System.nanoTime()
-    try {
-      def timed(label: String)(f: => Unit): Unit = {
-        val t = System.nanoTime()
-        f
-        System.err.println(f"[bench] staging $label: ${(System.nanoTime() - t) / 1e9}%.1f s")
-      }
-      // The four staged-artifact families are independent (separate
-      // memos, separate inputs), so they build CONCURRENTLY — Spark's
-      // scheduler interleaves their jobs and each family's stragglers
-      // backfill the others (guide §2.6). r22: 34.4 s sequential →
-      // ~max(family) wall; landing-dir prestaging joins the block so
-      // lifecycle drains no longer pay one-time dir builds in their
-      // single timed rep (the [stage] breadcrumbs in the bench log
-      // attribute every build).
-      // 4 in flight, 5 tasks: a wider pool was measured slower (r22 —
-      // 5 concurrent families oversubscribe the box: staging 16.9 →
-      // 22.7 s; guide §2.6's "2-3 jobs in flight is plenty")
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      try {
-        Seq[(String, () => Unit)](
-          ("dedup-clusters", () => queries.DedupQ.stageArtifacts(spark, sfDir)),
-          ("pq", () => queries.SimilarityQ.stagePq(spark, sfDir)),
-          ("kmeans+components", () =>
-            queries.SimilarityQ.stageKmComponents(spark, sfDir)),
-          ("containment-pairs", () => queries.R16Q.stageArtifacts(spark, sfDir)),
-          ("landing-dirs", () => streaming.MicroBatch.prestage(spark, sfDir)))
-          .map { case (label, f) =>
-            pool.submit(new Runnable { def run(): Unit = timed(label)(f()) })
-          }.foreach(_.get()) // propagate the first failure
-      } finally pool.shutdown()
-    } catch { case e: Throwable =>
-      val cause = e match {
-        case ee: java.util.concurrent.ExecutionException
-          if ee.getCause != null => ee.getCause
-        case other => other
-      }
-      errors("staging") =
-        Option(cause.getMessage).getOrElse(cause.getClass.getName).take(200)
-    }
+    // The four staged-artifact families are independent (separate
+    // memos, separate inputs), so they build CONCURRENTLY — Spark's
+    // scheduler interleaves their jobs and each family's stragglers
+    // backfill the others (guide §2.6). r22: 34.4 s sequential →
+    // ~max(family) wall; landing-dir prestaging joins the block so
+    // lifecycle drains no longer pay one-time dir builds in their
+    // single timed rep.
+    stage(spark, Seq(
+      ("dedup-clusters", () => queries.DedupQ.stageArtifacts(spark, sfDir)),
+      ("pq", () => queries.SimilarityQ.stagePq(spark, sfDir)),
+      ("kmeans+components", () => queries.SimilarityQ.stageKmComponents(spark, sfDir)),
+      ("containment-pairs", () => queries.R16Q.stageArtifacts(spark, sfDir)),
+      ("landing-dirs", () => streaming.MicroBatch.prestage(spark, sfDir))))
+      .foreach { case (label, err) => errors(s"staging:$label") = err }
     val staging = (System.nanoTime() - tStage) / 1e9
     val samples = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
     for (rep <- 1 to reps; name <- names
@@ -164,20 +143,15 @@ object Bench {
     // drifting reads as a plan regression.
     val minResults = names.map(n => n -> samples(n).min)
     val loadEnd = loadAvg()
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def qmap(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+      rs.map { case (k, v) => s"${Json.str(k)}:${fmt(v)}" }.mkString("{", ",", "}")
+    val errs = errors.map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val totalMin = minResults.map(_._2).sum
-    val cpus = Runtime.getRuntime.availableProcessors
+    // cpus = the session's parallelism; box_cpus = the machine's
     def line(rs: Seq[(String, Double)], ms: Seq[(String, Double)]): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_min":${fmt(totalMin)},"staging":${fmt(staging)},"load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},"cpus":$cpus,"queries":${qmap(rs)},"mins":${qmap(ms)},"n_queries":${results.size},"n_errors":${errors.size},"errors":$errs,"reps":$reps,"lifecycle_reps":$lifecycleReps,"proofs":${queries.Qx.proofs},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_min":${fmt(totalMin)},"staging":${fmt(staging)},"total_with_staging":${fmt(total + staging)},"total_min_with_staging":${fmt(totalMin + staging)},"load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},"cpus":${GraftSession.cpus},"box_cpus":${Runtime.getRuntime.availableProcessors},"queries":${qmap(rs)},"mins":${qmap(ms)},"n_queries":${results.size},"n_errors":${errors.size},"errors":$errs,"reps":$reps,"lifecycle_reps":$lifecycleReps,"proofs":${queries.Qx.proofs},"sf":${Json.str(sfDir)}}"""
     // stdout: headline subset only — must fit inside the driver's tail.
     // Written straight to fd 1: sbt's non-forked run swaps System.out
     // for its logger, so a plain println comes out "[info] {...}" —
@@ -194,115 +168,79 @@ object Bench {
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
     try Files.writeString(Paths.get(out), line(results, minResults) + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $out failed: ${e.getMessage}") }
-    // PERF.md's measured block is rewritten by THIS run (VERDICT r7
-    // wrong #1: a block rendered from a builder-side run drifted from
-    // the driver's re-run three rounds straight — the only reliable
-    // generator is the bench invocation itself). Gated to the
-    // documented sf0.1 bench scale so a local sf0.01 iteration loop
-    // doesn't clobber the committed numbers.
-    if (sfDir.contains("sf0.1") && only.isEmpty) {
-      try rewritePerfBlock(results, minResults.toMap, errors.size,
-        if (lifecycleReps == reps) s"$reps"
-        else s"$reps ($lifecycleReps for lifecycle-bound streaming drains)",
-        sfDir, total, totalMin, staging, loadStart, loadEnd)
-      catch { case e: Throwable => System.err.println(s"[bench] PERF.md rewrite failed: ${e.getMessage}") }
-    }
     if (errors.nonEmpty) System.err.println(s"[bench] ${errors.size} queries failed: ${errors.keys.mkString(",")}")
     spark.stop()
   }
 
-  private def rewritePerfBlock(results: Seq[(String, Double)],
-                               mins: Map[String, Double], nErrors: Int,
-                               reps: String, sfDir: String, total: Double,
-                               totalMin: Double, staging: Double,
-                               loadStart: Double, loadEnd: Double): Unit = {
-    val perf = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PERF_MD", "/root/repo/PERF.md"))
-    if (!Files.exists(perf)) return
-    val begin = "<!-- BEGIN GENERATED from bench_out.json (tools/perf_report.py) -->"
-    val end = "<!-- END GENERATED -->"
-    def f1(v: Double) = BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
-    def f2(v: Double) = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val top = results.sortBy(-_._2).take(12)
-    val rows = top.grouped(2).map { pair =>
-      val l = pair.head
-      val r = pair.lift(1)
-      def cell(x: (String, Double)) = s"${x._1} | ${f2(x._2)} | ${f2(mins(x._1))}"
-      s"| ${cell(l)} | ${r.map(cell).getOrElse("| |")} |"
-    }.toSeq
-    val block = (Seq(begin, "",
-      s"Bench (local[32], `$sfDir`, `graft.Bench`, $reps reps per query, " +
-        s"1-min system load ${f2(loadStart)}→${f2(loadEnd)} on a " +
-        s"${Runtime.getRuntime.availableProcessors}-cpu box): " +
-        s"**${results.size} queries, ${f1(total)} s total (median), " +
-        s"${f1(totalMin)} s total (min-of-reps), $nErrors errors** " +
-        s"(+ ${f2(staging)} s one-time staged artifacts, built concurrently " +
-        "since r22: the dedup cluster assignment shared by q103/q126/q128, " +
-        "the trained PQ index read by q191/q192, the k-means coarse " +
-        "assignment read by q120/q123, the SemDeDup component table shared " +
-        "by q199/q205, and the streaming landing dirs every drain reads — " +
-        "reported separately so the total decomposes). The min column is " +
-        "the contention-robust number: median≫min with min at its " +
-        "historical value reads as box noise, a drifted min as a plan " +
-        "regression (VERDICT r12 next #1).",
-      "", "Slowest 12 (median / min seconds):", "",
-      "| Query | med | min | Query | med | min |",
-      "|---|---|---|---|---|---|") ++ rows ++ Seq("", end))
-      .mkString("\n")
-    val text = Files.readString(perf)
-    val (i, j) = (text.indexOf(begin), text.indexOf(end))
-    if (i < 0 || j < 0) { System.err.println("[bench] PERF.md markers missing"); return }
-    val withBlock = text.substring(0, i) + block + text.substring(j + end.length)
-    // The round-final NARRATIVE drifted from the generated block in
-    // r13, r14 AND r15: when its round markers rode env vars
-    // (SPARK_GRAFT_ROUND / SPARK_GRAFT_NEW_QUERIES), the driver's
-    // re-bench — which doesn't set them — regenerated the block above
-    // but left the narrative stale, so "generated from the same bench
-    // artifact" went false. The markers now come from a COMMITTED
-    // state file (bench_round.json: {"round": "...", "new_queries":
-    // "q343,q344"}) so EVERY sf0.1 run, the driver's included,
-    // regenerates both blocks from the same artifact; the env vars
-    // remain as local overrides only. tools/perf_report.py is the
-    // manual fallback emitting the identical text from bench_out.json.
-    val nBegin = "<!-- BEGIN GENERATED NARRATIVE (tools/perf_report.py) -->"
-    val nEnd = "<!-- END GENERATED NARRATIVE -->"
-    val (ni, nj) = (withBlock.indexOf(nBegin), withBlock.indexOf(nEnd))
-    def stateField(key: String): Option[String] = {
-      val state = Paths.get(sys.env.getOrElse("SPARK_GRAFT_ROUND_STATE",
-        "/root/repo/bench_round.json"))
-      if (!Files.exists(state)) None
-      else ("\"" + key + "\"\\s*:\\s*\"([^\"]*)\"").r
-        .findFirstMatchIn(Files.readString(state))
-        .map(_.group(1)).filter(_.nonEmpty)
-    }
-    val roundLbl = sys.env.get("SPARK_GRAFT_ROUND").orElse(stateField("round"))
-    val finalText = roundLbl match {
-      case Some(lbl) if ni >= 0 && nj >= 0 =>
-        val (topQ, topMed) = results.maxBy(_._2)
-        val newQs = sys.env.get("SPARK_GRAFT_NEW_QUERIES")
-          .orElse(stateField("new_queries")).getOrElse("")
-          .split(",").filter(_.nonEmpty)
-        val newLine =
-          if (newQs.isEmpty) Nil
+  /** Builds the staging `families` on a `threads`-wide pool and returns
+    * each failed family's (label, error), in completion order. Every
+    * family runs under its own job group. At the first failure all
+    * groups are cancelled (jobs they submit later too) and the pool is
+    * interrupted; the call returns only once no staging job is still
+    * running, so a failure cannot spill into the timed reps. A family
+    * that never started is reported as an error as well.
+    * 4 in flight for 5 families: a wider pool was measured slower (r22
+    * — 5 concurrent families oversubscribe the box: staging 16.9 →
+    * 22.7 s; guide §2.6's "2-3 jobs in flight is plenty"). */
+  private[graft] def stage(spark: SparkSession, families: Seq[(String, () => Unit)],
+                           threads: Int = 4): Seq[(String, String)] = {
+    val sc = spark.sparkContext
+    val run = UUID.randomUUID().toString.take(8)
+    def group(label: String) = s"graft-staging-$run-$label"
+    def message(e: Throwable) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+    val notStarted = "not started: another staging family failed"
+    val stop = new AtomicBoolean(false)
+    val pool = Executors.newFixedThreadPool(threads)
+    val done = new ExecutorCompletionService[(String, Option[String])](pool)
+    families.foreach { case (label, f) =>
+      done.submit(new Callable[(String, Option[String])] {
+        def call(): (String, Option[String]) =
+          if (stop.get) label -> Some(notStarted)
           else {
-            val cells = newQs.toSeq.flatMap(p =>
-              results.filter(_._1.startsWith(p)).sortBy(_._1))
-              .map { case (q, med) => s"$q ${f2(med)}/${f2(mins(q))}" }
-            if (cells.isEmpty) Nil
-            else Seq("", s"New this round (med/min s): ${cells.mkString("; ")}.")
+            sc.setJobGroup(group(label), s"staging $label", interruptOnCancel = true)
+            val t = System.nanoTime()
+            try {
+              f()
+              System.err.println(f"[bench] staging $label: ${(System.nanoTime() - t) / 1e9}%.1f s")
+              label -> None
+            } catch { case e: Throwable =>
+              stop.set(true) // a worker freed by this failure must not start the next family
+              label -> Some(message(e))
+            } finally sc.clearJobGroup()
           }
-        val narrative = (Seq(nBegin, "",
-          s"**Round $lbl final (generated from the same bench artifact " +
-            s"as the block above): ${results.size} queries, " +
-            s"${f1(total)} s total median / ${f1(totalMin)} s " +
-            s"min-of-reps, $nErrors errors** under 1-min load " +
-            s"${f2(loadStart)}→${f2(loadEnd)}; staged artifacts " +
-            s"${f2(staging)} s; slowest entry $topQ at ${f2(topMed)} s " +
-            s"med / ${f2(mins(topQ))} s min.") ++ newLine ++ Seq("", nEnd))
-          .mkString("\n")
-        withBlock.substring(0, ni) + narrative + withBlock.substring(nj + nEnd.length)
-      case _ => withBlock
+      })
     }
-    Files.writeString(perf, finalText)
-    System.err.println(s"[bench] PERF.md block rewritten from this run")
+    pool.shutdown()
+    val errors = mutable.LinkedHashMap[String, String]()
+    var finished = Set.empty[String]
+    var failed = false
+    var pending = families.size
+    while (pending > 0) {
+      val (label, err) = done.take().get()
+      finished += label
+      pending -= 1
+      err.foreach { e =>
+        errors(label) = e
+        if (!failed) {
+          failed = true
+          families.foreach { case (l, _) => sc.cancelJobGroupAndFutureJobs(group(l)) }
+          pending -= pool.shutdownNow().size // queued, never started
+        }
+      }
+    }
+    if (failed) {
+      families.map(_._1).filterNot(finished).foreach(errors(_) = notStarted)
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+      // an interrupted family may return while its job still runs; wait
+      // for the cancellations to land
+      def running = {
+        val active = sc.statusTracker.getActiveJobIds().toSet
+        families.exists { case (l, _) => sc.statusTracker.getJobIdsForGroup(group(l)).exists(active) }
+      }
+      val deadline = System.nanoTime() + TimeUnit.MINUTES.toNanos(1)
+      while (running && System.nanoTime() < deadline) Thread.sleep(20)
+      if (running) errors("staging") = "staging jobs still running 60 s after cancel"
+    }
+    errors.toSeq
   }
 }

@@ -40,7 +40,11 @@ object GraftSession {
       // the only ones this repo can stand behind.
       .config("spark.ui.enabled", "false")
 
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
+  /** Local parallelism of [[local]]'s default session: SPARK_GRAFT_CPUS,
+    * else 4. Bench reports this number, so it must be the one used. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+
+  def local(cpus: String = GraftSession.cpus.toString): SparkSession = {
     val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -169,11 +169,7 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
   /** Materialize `df` as a fresh immutable data directory. */
   private def writeData(df: DataFrame, version: Long): String = {
     val rel = s"data/c$version-${UUID.randomUUID().toString.take(8)}"
-    val t0 = System.nanoTime()
     df.write.mode("overwrite").parquet(root.resolve(rel).toString)
-    if (LakeTable.probeSink)
-      System.err.println(
-        f"[sink]   writeData v$version ${(System.nanoTime() - t0) / 1e9}%.3f s")
     rel
   }
 
@@ -1209,9 +1205,6 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
 }
 
 object LakeTable {
-
-  // Profiling breadcrumb gate (read once; see MicroBatch.timedCommit).
-  private[lake] val probeSink = sys.env.contains("SPARK_GRAFT_PROBE_SINK")
 
   /** Create a new table at `root` with `df` as version 1. */
   def create(spark: SparkSession, root: Path, df: DataFrame,

@@ -53,9 +53,7 @@ object R17Q {
     * batches because a doc lives in exactly one), plus the two
     * ("stats", ·, ·) corpus rows. Fragment size is vocabulary-bounded,
     * never corpus-bounded. */
-  // private[graft]: ProbeR18 prices exactly this builder, so the
-  // probe must not drift from production (r18 review finding)
-  private[graft] def bm25Fragment(batch: DataFrame): DataFrame = {
+  private def bm25Fragment(batch: DataFrame): DataFrame = {
     val stats = batch
       .select(size(split(col("text"), " ")).cast("long").as("len"))
       .agg(count(lit(1)).as("n"), sum(col("len")).cast("long").as("sl"))

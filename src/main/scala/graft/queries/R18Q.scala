@@ -17,11 +17,8 @@ object R18Q {
 
   /** One ingest batch's (term, doc_id, len, tf) POSTINGS fragment —
     * disjoint ingest batches mean every (term, doc) posting lands
-    * exactly once, no merge needed.
-    * private[graft]: ProbeR19's postings-growth probe prices exactly
-    * this builder (the bm25Fragment discipline — the probe must not
-    * drift from production). */
-  private[graft] def postingsFragment(batch: DataFrame): DataFrame =
+    * exactly once, no merge needed. */
+  private def postingsFragment(batch: DataFrame): DataFrame =
     batch.select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("len"),
         explode(split(col("text"), " ")).as("term"))

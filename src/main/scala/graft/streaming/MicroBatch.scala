@@ -51,12 +51,13 @@ object MicroBatch {
     * keyed-state rows. */
   def lastRunStateStats: Seq[StateOpStats] = Option(lastStats.get).getOrElse(Nil)
 
-  // Raw progress entries of the most recent run on THIS thread —
-  // profiling surface for the optimization rounds (guide §1: measure
-  // first): durationMs decomposes each micro-batch into addBatch /
+  // Raw progress entries of the most recent run on THIS thread: its
+  // durationMs decomposes each micro-batch into addBatch /
   // queryPlanning / walCommit / commitOffsets / latestOffset, which is
   // what separates plan cost from checkpoint-lifecycle cost in the
-  // drain family. Same thread-local discipline as lastStats.
+  // drain family. perfbench reads it by reflection for its stream.*
+  // per-layer metrics (StateBudgetSpec pins the contract). Same
+  // thread-local discipline as lastStats.
   private val lastProg =
     new ThreadLocal[Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]]
 
@@ -149,8 +150,8 @@ object MicroBatch {
     graft.lake.Stamps.tableStamp(sfDir, "events")
   private def memoizedDir(key: String, stamp: Long)(build: => Path): Path =
     stagedDirs.getOrBuild(key, stamp) {
-      // stderr breadcrumb so a bench/probe run can attribute which
-      // TIMED query paid each one-time landing-dir build (guide §1.5)
+      // stderr breadcrumb so a bench run can attribute which TIMED
+      // query paid each one-time landing-dir build (guide §1.5)
       val t0 = System.nanoTime()
       val p = build
       System.err.println(
@@ -465,22 +466,8 @@ object MicroBatch {
     * append, where exactly-once comes from primary-key upsert
     * instead). foreachBatch runs driver-side, so capturing the table
     * handle is safe (never serialized to executors). */
-  // Optional per-batch sink-commit timing breadcrumb (profiling only;
-  // reads the env ONCE — zero steady-state cost when unset).
-  private val probeSink = sys.env.contains("SPARK_GRAFT_PROBE_SINK")
-  private[graft] def timedCommit(label: String, batchId: Long)(body: => Unit): Unit =
-    if (!probeSink) body
-    else {
-      val t0 = System.nanoTime()
-      body
-      System.err.println(
-        f"[sink] $label batch $batchId commit ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
-
   def batchWriter(table: LakeTable, appId: String): (Dataset[Row], Long) => Unit =
-    (batch, batchId) => {
-      timedCommit("append", batchId)(table.commitBatch(batch.toDF(), appId, batchId)); ()
-    }
+    (batch, batchId) => { table.commitBatch(batch.toDF(), appId, batchId); () }
 
   /** Fresh lake-table sink under a temp root (version 1 is empty; each
     * micro-batch is one streaming-append commit). */

@@ -30,6 +30,12 @@ class StateBudgetSpec extends AnyFunSuite {
       val stats = MicroBatch.lastRunStateStats
       assert(stats.nonEmpty, "no state operators reported for a session agg")
       assert(stats.head.batches >= 3, "drain did not split into micro-batches")
+      // perfbench reads lastRunProgress by reflection for its stream.*
+      // per-layer metrics: pin the entries and the durationMs keys it uses
+      val progress = MicroBatch.lastRunProgress
+      assert(progress.size >= 3, s"lastRunProgress holds ${progress.size} entries")
+      assert(progress.forall(_.durationMs.containsKey("addBatch")),
+        "a progress entry's durationMs lacks addBatch")
       totalRows(stats)
     }
     val at1 = run(1)

@@ -30,13 +30,12 @@ for a in it:
         args.append(a)
 
 # Round markers default to the COMMITTED state file (bench_round.json)
-# so this fallback emits the same narrative the in-bench generator
-# writes on every sf0.1 run (r15: env-var-only markers let the
-# driver's re-bench leave the narrative stale); flags override. The
-# state path honours the same SPARK_GRAFT_ROUND_STATE env var
-# Bench.scala uses, then falls back to the file next to this script's
-# repo root — not a hardcoded absolute path, so running the fallback
-# from another checkout reads THAT repo's state (ADVICE r16).
+# so every render of the same bench_out.json emits the same narrative
+# (r15: env-var-only markers let a re-bench leave the narrative stale);
+# flags override. The state path honours SPARK_GRAFT_ROUND_STATE, then
+# falls back to the file next to this script's repo root — not a
+# hardcoded absolute path, so running it from another checkout reads
+# THAT repo's state (ADVICE r16).
 _state_path = os.environ.get(
     "SPARK_GRAFT_ROUND_STATE",
     os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -63,8 +62,12 @@ mins = b.get("mins", {})
 
 def headline():
     lines = [BEGIN, ""]
-    load = (f", 1-min system load {b['load_start']:.2f}→{b['load_end']:.2f} on a "
-            f"{b.get('cpus', '?')}-cpu box" if "load_start" in b else "")
+    load = (f", 1-min system load {b['load_start']:.2f}→{b['load_end']:.2f}"
+            if "load_start" in b else "")
+    # bench lines before box_cpus existed reported the machine's count
+    # as "cpus", not the session's parallelism
+    par = b["cpus"] if "box_cpus" in b else "?"
+    box = b.get("box_cpus", b.get("cpus", "?"))
     staging = (f" (+ {b['staging']:.2f} s one-time staged artifacts, built "
                "concurrently since r22: the dedup cluster assignment shared "
                "by q103/q126/q128, the trained PQ index read by q191/q192, "
@@ -74,14 +77,18 @@ def headline():
                "separately so the total decomposes)" if "staging" in b else "")
     tmin = (f", {b['total_min']:.1f} s total (min-of-reps)"
             if "total_min" in b else "")
+    with_staging = (f"; {b['total_with_staging']:.1f} s median / "
+                    f"{b['total_min_with_staging']:.1f} s min including staging"
+                    if "total_with_staging" in b else "")
     reps = str(b.get("reps", 1))
     if "lifecycle_reps" in b and b["lifecycle_reps"] != b.get("reps", 1):
         reps += f" ({b['lifecycle_reps']} for lifecycle-bound streaming drains)"
     lines.append(
-        f"Bench (local[32], `{b['sf']}`, `graft.Bench`, {reps} "
-        f"reps per query{load}): **{b['n_queries']} queries, "
-        f"{b['value']:.1f} s total (median){tmin}, {b['n_errors']} "
-        f"errors**{staging}. The min column is the contention-robust "
+        f"Bench (local[{par}] on a {box}-cpu box, `{b['sf']}`, "
+        f"`graft.Bench`, {reps} reps per query{load}): "
+        f"**{b['n_queries']} queries, {b['value']:.1f} s total "
+        f"(median){tmin}, {b['n_errors']} errors**{staging}"
+        f"{with_staging}. The min column is the contention-robust "
         "number: median≫min with min at its historical value reads as "
         "box noise, a drifted min as a plan regression (VERDICT r12 "
         "next #1).")
@@ -114,11 +121,14 @@ def narrative():
             if "load_start" in b else "")
     tmin = (f" / {b['total_min']:.1f} s min-of-reps"
             if "total_min" in b else "")
+    with_staging = (f" ({b['total_with_staging']:.1f} s / "
+                    f"{b['total_min_with_staging']:.1f} s with staging)"
+                    if "total_with_staging" in b else "")
     top_q, top_med = qs[0]
     lines.append(
         f"**Round {label} final (generated from the same bench artifact "
         f"as the block above): {b['n_queries']} queries, "
-        f"{b['value']:.1f} s total median{tmin}, {b['n_errors']} "
+        f"{b['value']:.1f} s total median{tmin}{with_staging}, {b['n_errors']} "
         f"errors**{load}; staged artifacts {b.get('staging', 0):.2f} s; "
         f"slowest entry {top_q} at {top_med:.2f} s med / "
         f"{mins.get(top_q, top_med):.2f} s min.")
