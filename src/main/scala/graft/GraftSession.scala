@@ -11,8 +11,10 @@ import org.apache.spark.sql.SparkSession
   *   the config is inert when the testdata carries µs timestamps.
   * - AQE on: runtime coalescing + skew-join handling — the behaviors we
   *   rely on at real cluster scale.
-  * - shuffle.partitions = local core count (not 200) for local runs; on
-  *   a real cluster this would be sized to data volume / AQE target.
+  * - shuffle.partitions = local core count (not 200) for batch queries
+  *   and per-batch drain transforms. Drains whose plan can hold state
+  *   run on isolated per-run sessions whose count
+  *   `MicroBatch.drainPartitions` sizes to the micro-batch volume.
   */
 object GraftSession {
   def builder(cpus: String): SparkSession.Builder =

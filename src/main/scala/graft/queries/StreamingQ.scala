@@ -50,8 +50,7 @@ object StreamingQ {
     // watermark's late-row drop) must reduce the sink to exactly one
     // row per event_id — the oracle is the plain batch table.
     "q80_stream_dedup" -> ((s, d) =>
-      MicroBatch.appendRun(s, d, copies = 2, maxFilesPerTrigger = Some(1),
-        statePartitions = Some(8)) { stream =>
+      MicroBatch.appendRun(s, d, copies = 2, maxFilesPerTrigger = Some(1)) { stream =>
         graft.Tables.toEventTime(stream)
           .withWatermark("ts", "2 days")
           .dropDuplicatesWithinWatermark("event_id")

@@ -36,9 +36,14 @@ object MicroBatch {
     * run's micro-batches, from the engine's own progress reports
     * (StateOperatorProgress). The numbers a capacity plan needs: state
     * ROWS track keys/windows/buffered-horizon rows — never total
-    * events processed — and memory follows rows. */
+    * events processed — and memory follows rows. `partitions` is the
+    * operator's shuffle-partition count ([[drainPartitions]]' pick, or
+    * the count a resumed checkpoint restored) and `storeInstances` the
+    * state stores it opens per batch (partitions × stores per
+    * partition — 4 for a stream-stream join). */
   final case class StateOpStats(operator: String, peakRows: Long,
-                                peakMemBytes: Long, batches: Int)
+                                peakMemBytes: Long, batches: Int,
+                                partitions: Int, storeInstances: Int)
 
   // Runs start and drain on the CALLING thread (start + awaitTermination),
   // and Verify executes queries concurrently — a thread-local keeps one
@@ -84,7 +89,9 @@ object MicroBatch {
           StateOpStats(name,
             ps.map(_.numRowsTotal).max,
             ps.map(_.memoryUsedBytes).max,
-            ps.size)
+            ps.size,
+            ps.map(_.numShufflePartitions).max.toInt,
+            ps.map(_.numStateStoreInstances).max.toInt)
         }
         .toSeq.sortBy(_.operator))
   }
@@ -426,17 +433,6 @@ object MicroBatch {
     r.parquet(inDir.toString)
   }
 
-  /** Per-run ISOLATED session: same SparkContext/SharedState, fresh
-    * SQLConf (builder-time configs — nanosAsLong, UTC, AQE — carry over
-    * via initialSessionOptions). Streaming runs need per-query conf
-    * (state partition count = state-store instances per batch, which
-    * should track state size not cores; a state-store provider class),
-    * and Verify executes queries CONCURRENTLY on one shared session —
-    * a set/restore toggle on shared conf races across threads. That
-    * race is exactly how q188 dropped out of CORRECTNESS_r09: another
-    * run's `finally` restore landed between q188's provider set and
-    * its stream start, and `transformWithState` refused the HDFS
-    * provider. An isolated session makes the race impossible. */
   /** Progress entries retained per query. The engine keeps only this
     * many recentProgress entries; [[recordStats]] computes PEAKS over
     * them, so a drain with more micro-batches than the retention would
@@ -444,10 +440,67 @@ object MicroBatch {
     * above any drain in this suite and asserted in recordStats. */
   private val ProgressRetention = 10000
 
-  private def isolated(spark: SparkSession, statePartitions: Option[Int],
+  /** Landing bytes one drain partition carries per micro-batch. The
+    * events parquet holds ~22 bytes per event, so this is ~6,000 events
+    * of per-batch stateful work per partition. Measured on both sides
+    * of the choice: every multi-file sf0.01 drain admits ≤ 68 KB per
+    * trigger and runs fastest on one partition (`stream_drain`), while
+    * the sf0.1 headline drains admit 320–450 KB and run faster split
+    * 3–4 ways than on one. Spark's 64 MiB batch advisory size would
+    * give every drain here one partition. */
+  private[streaming] val DrainBytesPerPartition: Long = 128L * 1024
+
+  /** Shuffle/state partition count for a drain over landing dir `in`,
+    * sized to what one micro-batch can carry rather than to the
+    * machine (Presto at Scale, ICDE 2022): the on-disk bytes one
+    * trigger admits — the `maxFilesPerTrigger` largest files, or the
+    * whole dir without a limit — times the number of `sources` reading
+    * `in` (2 for a self-join), divided by [[DrainBytesPerPartition]],
+    * rounded up and clamped to [1, defaultParallelism]. Every stateful
+    * operator opens one state store per partition per batch (four for
+    * a stream-stream join), and each commits — an fsync'd RocksDB
+    * checkpoint — even when it holds a handful of keys: spreading a
+    * KB-sized micro-batch over many stores pays one commit per store
+    * for one store's worth of state. */
+  def drainPartitions(spark: SparkSession, in: Path,
+                      maxFilesPerTrigger: Option[Int], sources: Int): Int = {
+    // the file source skips hidden names (_SUCCESS, .crc) the same way
+    val sizes = scala.util.Using.resource(Files.list(in))(_.iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        !p.getFileName.toString.startsWith("_") &&
+        !p.getFileName.toString.startsWith("."))
+      .map(Files.size).toSeq).sorted(Ordering[Long].reverse)
+    val admitted = maxFilesPerTrigger.fold(sizes)(sizes.take).sum * sources
+    val wanted = (admitted + DrainBytesPerPartition - 1) / DrainBytesPerPartition
+    math.max(1L, math.min(wanted, spark.sparkContext.defaultParallelism.toLong)).toInt
+  }
+
+  /** Per-run ISOLATED session: same SparkContext/SharedState, fresh
+    * SQLConf (builder-time configs — nanosAsLong, UTC, AQE — carry over
+    * via initialSessionOptions). Streaming runs need per-query conf:
+    * drains whose plan can hold state pass `partitions` from
+    * [[drainPartitions]] over their own landing dir (it becomes
+    * `spark.sql.shuffle.partitions`, the state-store instances per
+    * batch), and some set a state-store provider class. The per-batch
+    * helpers pass None: they open no state store, and the batch
+    * transforms inside their foreachBatch keep the session's count.
+    * The shared session's shuffle partitions (the core count,
+    * [[graft.GraftSession]]) stay untouched, so batch queries never see
+    * a drain's count. Spark restores `spark.sql.shuffle.partitions`
+    * from a checkpoint's offset log, so a drain resumed from an
+    * existing checkpoint keeps the count it started with (state is
+    * hash-partitioned by it); the computed count only applies to a
+    * fresh checkpoint. Verify executes queries CONCURRENTLY on one
+    * shared session — a set/restore toggle on shared conf races across
+    * threads. That race is exactly how q188 dropped out of
+    * CORRECTNESS_r09: another run's `finally` restore landed between
+    * q188's provider set and its stream start, and `transformWithState`
+    * refused the HDFS provider. An isolated session makes the race
+    * impossible. */
+  private def isolated(spark: SparkSession, partitions: Option[Int],
                        conf: Map[String, String]): SparkSession = {
     val s = spark.newSession()
-    statePartitions.foreach(p => s.conf.set("spark.sql.shuffle.partitions", p.toString))
+    partitions.foreach(p => s.conf.set("spark.sql.shuffle.partitions", p.toString))
     s.conf.set("spark.sql.streaming.numRecentProgressUpdates",
       ProgressRetention.toString)
     conf.foreach { case (k, v) => s.conf.set(k, v) }
@@ -479,17 +532,17 @@ object MicroBatch {
     * micro-batch to a fresh lake-table sink via foreachBatch, drain
     * with AvailableNow, and return the sink table — every micro-batch
     * is one versioned commit, so callers can time-travel the stream's
-    * history. Pass statePartitions when the transform is stateful
-    * (dedup, join). */
+    * history. Stateful transforms (dedup, join) get their state
+    * partition count from [[drainPartitions]]. */
   def appendRunTable(spark: SparkSession, sfDir: String, copies: Int = 1,
-                     maxFilesPerTrigger: Option[Int] = None,
-                     statePartitions: Option[Int] = None)(
+                     maxFilesPerTrigger: Option[Int] = None)(
       transform: DataFrame => DataFrame): LakeTable = {
     val in = stageEvents(sfDir, copies)
     val sink = lakeSink(spark)
     val ckpt = graft.lake.TempDirs.create("graft-stream-ckpt")
     val writeBatch = batchWriter(sink, ckpt.toString)
-    val sess = isolated(spark, statePartitions, Map.empty)
+    val sess = isolated(spark,
+      Some(drainPartitions(spark, in, maxFilesPerTrigger, sources = 1)), Map.empty)
     val q = transform(fileSource(sess, in, maxFilesPerTrigger)).writeStream
       .foreachBatch(writeBatch)
       .outputMode("append")
@@ -503,10 +556,9 @@ object MicroBatch {
 
   /** [[appendRunTable]]'s final sink contents. */
   def appendRun(spark: SparkSession, sfDir: String, copies: Int = 1,
-                maxFilesPerTrigger: Option[Int] = None,
-                statePartitions: Option[Int] = None)(
+                maxFilesPerTrigger: Option[Int] = None)(
       transform: DataFrame => DataFrame): DataFrame =
-    appendRunTable(spark, sfDir, copies, maxFilesPerTrigger, statePartitions)(transform)
+    appendRunTable(spark, sfDir, copies, maxFilesPerTrigger)(transform)
       .snapshot()
 
   /** Per-micro-batch BATCH transform (the foreachBatch idiom every
@@ -577,7 +629,6 @@ object MicroBatch {
     * (the r17 eviction pin: bounded-disorder drains must emit
     * MID-drain, not everything at the final flush). */
   def updateRunTable(spark: SparkSession, sfDir: String,
-                     statePartitions: Option[Int] = Some(8),
                      splitParts: Option[Int] = None,
                      conf: Map[String, String] = Map.empty,
                      copies: Int = 1,
@@ -596,10 +647,11 @@ object MicroBatch {
     val sink = lakeSink(spark)
     val ckpt = graft.lake.TempDirs.create("graft-stream-ckpt")
     val writeBatch = batchWriter(sink, ckpt.toString)
-    val sess = isolated(spark, statePartitions, conf)
     val maxFiles =
       if (chronological || inDir.isDefined) Some(1)
       else splitParts.map(_ => 1)
+    val sess = isolated(spark,
+      Some(drainPartitions(spark, in, maxFiles, sources = 1)), conf)
     val q = transform(fileSource(sess, in, maxFiles)).writeStream
       .foreachBatch(writeBatch)
       .outputMode("update")
@@ -654,14 +706,13 @@ object MicroBatch {
     * not appends): every micro-batch's emissions land in the sink via
     * foreachBatch; returns the final sink contents. */
   def updateRun(spark: SparkSession, sfDir: String,
-                statePartitions: Option[Int] = Some(8),
                 splitParts: Option[Int] = None,
                 conf: Map[String, String] = Map.empty,
                 copies: Int = 1,
                 chronological: Boolean = false,
                 inDir: Option[Path] = None)(
       transform: DataFrame => DataFrame): DataFrame =
-    updateRunTable(spark, sfDir, statePartitions, splitParts, conf,
+    updateRunTable(spark, sfDir, splitParts, conf,
       copies, chronological, inDir)(transform).snapshot()
 
   /** Stream-stream inner join (engine extension per SURVEY §2.9): two
@@ -669,7 +720,6 @@ object MicroBatch {
     * watermarked by the caller, joined with an equi + event-time-range
     * condition, drained through a foreachBatch append sink. */
   def joinRun(spark: SparkSession, sfDir: String,
-              statePartitions: Option[Int] = Some(4),
               copies: Int = 1,
               maxFilesPerTrigger: Option[Int] = None,
               inDir: Option[Path] = None)(
@@ -678,7 +728,8 @@ object MicroBatch {
     val sink = lakeSink(spark)
     val ckpt = graft.lake.TempDirs.create("graft-stream-ckpt")
     val writeBatch = batchWriter(sink, ckpt.toString)
-    val sess = isolated(spark, statePartitions, Map.empty)
+    val sess = isolated(spark,
+      Some(drainPartitions(spark, in, maxFilesPerTrigger, sources = 2)), Map.empty)
     val q = join(fileSource(sess, in, maxFilesPerTrigger),
       fileSource(sess, in, maxFilesPerTrigger)).writeStream
       .foreachBatch(writeBatch)
@@ -696,7 +747,6 @@ object MicroBatch {
     * stream into a complete-mode memory sink and return the final
     * table. */
   def aggRun(spark: SparkSession, sfDir: String,
-             statePartitions: Int = 8,
              splitParts: Option[Int] = None,
              copies: Int = 1)(
       agg: DataFrame => DataFrame): DataFrame = {
@@ -704,8 +754,10 @@ object MicroBatch {
       stageEventsSplit(spark, sfDir, _, copies))
     val ckpt = graft.lake.TempDirs.create("graft-stream-ckpt")
     val name = s"graft_stream_agg_${runId.incrementAndGet()}"
-    val sess = isolated(spark, Some(statePartitions), Map.empty)
-    val q = agg(fileSource(sess, in, splitParts.map(_ => 1))).writeStream
+    val maxFiles = splitParts.map(_ => 1)
+    val sess = isolated(spark,
+      Some(drainPartitions(spark, in, maxFiles, sources = 1)), Map.empty)
+    val q = agg(fileSource(sess, in, maxFiles)).writeStream
       .format("memory")
       .queryName(name)
       .outputMode("complete")

@@ -41,14 +41,19 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream dedup collapses an at-least-once redelivery to the batch table") {
-    val streamed = MicroBatch.appendRun(spark, sf, copies = 2,
-      maxFilesPerTrigger = Some(1), statePartitions = Some(4)) { s =>
+    // each trigger admits one whole sf0.01 events file (221 KB), which
+    // drainPartitions spreads over both of local[2]'s partitions, so
+    // the dedup state spans two stores and redelivery crosses them
+    val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    val streamed = MicroBatch.appendRun(spark, sf01, copies = 2,
+      maxFilesPerTrigger = Some(1)) { s =>
       graft.Tables.toEventTime(s)
         .withWatermark("ts", "2 days")
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_id"))
     }
-    val n = Tables.events(spark, sf).count()
+    assert(MicroBatch.lastRunStateStats.map(_.partitions) === Seq(2))
+    val n = Tables.events(spark, sf01).count()
     assert(streamed.count() === n) // one row per event despite 2 deliveries
     assert(streamed.distinct().count() === n)
   }
@@ -130,6 +135,10 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(joined.count() === batch.count())
     assert(joined.filter(col("value").isNull).count() === expectedUnmatched)
+    // both sides read the whole sf0.001 dir (2 × 27 KB): one partition,
+    // and the join keeps four state stores in it
+    assert(MicroBatch.lastRunStateStats.map(o => (o.partitions, o.storeInstances)) ===
+      Seq((1, 4)))
   }
 
   test("stream-stream FULL OUTER join flushes unmatched rows from BOTH sides") {
