@@ -69,8 +69,7 @@ object Bench {
     // deltas into signal. Each rep is a full pass in query order (same
     // session, same interference profile as a single driver run);
     // per-query time = median across reps, total = sum of medians.
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption)
-      .filter(_ >= 1).getOrElse(3)
+    val reps = GraftSession.positiveIntEnv("SPARK_GRAFT_BENCH_REPS", 3)
     // In-query served≡scan proof legs are the ORACLE gate's job, not a
     // per-rep bench cost (VERDICT r20 next #2): the bench times the
     // served plan the engine would run in production. The returned
@@ -85,8 +84,7 @@ object Bench {
     // r20 driver budget (BENCH_r20 rc=124). They run `lifecycleReps`
     // passes (default 1); every other query keeps the full `reps`.
     // Old methodology (all queries × reps): SPARK_GRAFT_BENCH_LIFECYCLE_REPS=3.
-    val lifecycleReps = sys.env.get("SPARK_GRAFT_BENCH_LIFECYCLE_REPS")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
+    val lifecycleReps = GraftSession.positiveIntEnv("SPARK_GRAFT_BENCH_LIFECYCLE_REPS", 1)
     def isLifecycle(name: String): Boolean =
       name.contains("stream") || name.contains("stateful")
     val spark = GraftSession.local()

@@ -44,7 +44,20 @@ object GraftSession {
 
   /** Local parallelism of [[local]]'s default session: SPARK_GRAFT_CPUS,
     * else 4. Bench reports this number, so it must be the one used. */
-  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+  val cpus: Int = positiveIntEnv("SPARK_GRAFT_CPUS", 4)
+
+  /** A positive-int setting from the environment: `default` when
+    * `name` is unset, else its trimmed value — failing loudly on a
+    * non-integer or a value below 1 rather than silently running with
+    * the default. */
+  private[graft] def positiveIntEnv(name: String, default: Int,
+                                    env: String => Option[String] = sys.env.get): Int =
+    env(name).fold(default) { raw =>
+      val n = raw.trim.toIntOption.getOrElse(
+        throw new IllegalArgumentException(s"$name='$raw' is not an integer"))
+      require(n >= 1, s"$name=$n must be at least 1")
+      n
+    }
 
   def local(cpus: String = GraftSession.cpus.toString): SparkSession = {
     val s = builder(cpus).getOrCreate()

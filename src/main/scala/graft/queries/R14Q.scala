@@ -88,8 +88,7 @@ object R14Q {
     "q269_stream_cdc_asof" -> ((s, d) => {
       import s.implicits._
       val sink = graft.streaming.MicroBatch.updateRun(s, d,
-        splitParts = Some(3), conf = graft.streaming.Stateful.rocksDBConf,
-        chronological = true) { stream =>
+        splitParts = Some(3), chronological = true) { stream =>
         graft.streaming.Stateful.keyedAsOf(
           graft.Tables.toEventTime(stream)
             .filter(col("event_type").isin("signup", "purchase"))
@@ -108,27 +107,18 @@ object R14Q {
         ev.filter(col("event_type") === "signup").limit(0)
           .select(col("user_id"), col("event_id"), col("value")),
         "graft-cdcdim")
-      val in = graft.streaming.MicroBatch.stageEventsByTime(s, d, 3)
-      val ckpt = Qx.tempDir("graft-cdcdim-ckpt")
-      val q = graft.streaming.MicroBatch.fileSource(s, in, Some(1))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                         bid: Long) =>
-          val ups = graft.Tables.toEventTime(batch.toDF())
-            .filter(col("event_type") === "signup")
-            .withColumn("__rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("user_id"))
-                .orderBy(desc("ts"), desc("event_id"))))
-            .filter(col("__rn") === 1)
-            .select(col("user_id"), col("event_id"), col("value"))
-          dimT.mergeBatch(ups, Seq("user_id"), ckpt.toString, bid)
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      graft.streaming.MicroBatch.eachBatchRun(s,
+          graft.streaming.MicroBatch.stageEventsByTime(s, d, 3)) { (batch, bid) =>
+        val ups = graft.Tables.toEventTime(batch)
+          .filter(col("event_type") === "signup")
+          .withColumn("__rn", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy(col("user_id"))
+              .orderBy(desc("ts"), desc("event_id"))))
+          .filter(col("__rn") === 1)
+          .select(col("user_id"), col("event_id"), col("value"))
+        dimT.mergeBatch(ups, Seq("user_id"), "graft-cdcdim", bid)
+      }
       Qx.prove { // proof leg: Verify runs it, Bench times the drain itself
         val expect = Tables.events(s, d)
           .filter(col("event_type") === "signup")

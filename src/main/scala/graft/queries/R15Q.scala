@@ -113,8 +113,7 @@ object R15Q {
     // and DuckDB all hash-agree.
     "q288_stream_cep_alternation" -> ((s, d) => {
       val sink = graft.streaming.MicroBatch.updateRun(s, d,
-        splitParts = Some(3),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+        splitParts = Some(3)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.streamingSteps(
           graft.Tables.toEventTime(stream)

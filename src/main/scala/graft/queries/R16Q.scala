@@ -760,8 +760,7 @@ object R16Q {
     "q381_stream_scd2" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val changes = graft.streaming.MicroBatch.updateRun(s, d,
-        splitParts = Some(4), chronological = true,
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+        splitParts = Some(4), chronological = true) { stream =>
         import s.implicits._
         graft.streaming.Stateful.scd2Changes(
           graft.Tables.toEventTime(stream)

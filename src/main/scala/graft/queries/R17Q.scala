@@ -108,8 +108,7 @@ object R17Q {
   private def bufferedScd2Changes(s: org.apache.spark.sql.SparkSession,
                                   d: String, in: java.nio.file.Path,
                                   delay: String): DataFrame =
-    graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in),
-      conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+    graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
       import s.implicits._
       graft.streaming.Stateful.scd2Buffered(
         graft.Tables.toEventTime(stream)
@@ -431,8 +430,7 @@ object R17Q {
     // oracle. `Stateful.TransitionEmit`.
     "q396_stream_markov" -> ((s, d) => {
       val trans = graft.streaming.MicroBatch.updateRun(s, d,
-        splitParts = Some(4), chronological = true,
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+        splitParts = Some(4), chronological = true) { stream =>
         import s.implicits._
         graft.streaming.Stateful.transitionEmit(
           graft.Tables.toEventTime(stream)
@@ -456,8 +454,7 @@ object R17Q {
       val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
         s, d, parts = 4, sentinelInterval = "46 DAYS")
       val trans = graft.streaming.MicroBatch.updateRun(s, d,
-        inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+        inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.transitionBuffered(
           graft.Tables.toEventTime(stream)

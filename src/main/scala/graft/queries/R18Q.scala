@@ -103,8 +103,7 @@ object R18Q {
     "q399_stream_funnel_ooo" -> ((s, d) => {
       val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
         s, d, parts = 4, sentinelInterval = "46 DAYS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.funnelBuffered(
           graft.Tables.toEventTime(stream)
@@ -254,8 +253,7 @@ object R18Q {
     "q404_stream_asof_ooo" -> ((s, d) => {
       val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
         s, d, parts = 4, sentinelInterval = "46 DAYS")
-      graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.asOfBuffered(
           graft.Tables.toEventTime(stream)

@@ -95,8 +95,7 @@ object R19Q {
     "q408_stream_sessions_ooo" -> ((s, d) => {
       val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
         s, d, parts = 4, sentinelInterval = "46 DAYS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.sessionBuffered(
           graft.Tables.toEventTime(stream)
@@ -138,8 +137,7 @@ object R19Q {
       val in = graft.streaming.MicroBatch.stageEventsJitteredSentinel(
         s, d, parts = 6, maxJitterSecs = 21600L,
         sentinelInterval = "8 HOURS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.funnelBuffered(
           graft.Tables.toEventTime(stream)
@@ -170,8 +168,7 @@ object R19Q {
       val in = graft.streaming.MicroBatch.stageEventsJitteredSentinel(
         s, d, parts = 6, maxJitterSecs = 21600L,
         sentinelInterval = "8 HOURS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.sessionBuffered(
           graft.Tables.toEventTime(stream)
@@ -211,8 +208,7 @@ object R19Q {
         s, d, parts = 6, maxJitterSecs = 21600L,
         sentinelInterval = "8 HOURS")
       val trans = graft.streaming.MicroBatch.updateRun(s, d,
-        inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+        inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.transitionBuffered(
           graft.Tables.toEventTime(stream)
@@ -233,8 +229,7 @@ object R19Q {
       val in = graft.streaming.MicroBatch.stageEventsJitteredSentinel(
         s, d, parts = 6, maxJitterSecs = 21600L,
         sentinelInterval = "8 HOURS")
-      graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.asOfBuffered(
           graft.Tables.toEventTime(stream)
@@ -281,8 +276,7 @@ object R19Q {
       val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
         s, d, parts = 4, sentinelInterval = "46 DAYS")
       val facts = graft.streaming.MicroBatch.updateRun(s, d,
-        inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+        inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.gapBuffered(
           graft.Tables.toEventTime(stream)

@@ -302,8 +302,7 @@ object R20Q {
     "q420_stream_rate_ooo" -> ((s, d) => {
       val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
         s, d, parts = 4, sentinelInterval = "46 DAYS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.rateBuffered(
           graft.Tables.toEventTime(stream)
@@ -329,8 +328,7 @@ object R20Q {
       val in = graft.streaming.MicroBatch.stageEventsJitteredSentinel(
         s, d, parts = 6, maxJitterSecs = 21600L,
         sentinelInterval = "8 HOURS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.rateBuffered(
           graft.Tables.toEventTime(stream)

@@ -187,24 +187,14 @@ object StreamingQ {
       val base = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
       val t = graft.lake.LakeTable.createTemp(s, base, "graft-smerge")
-      val in = MicroBatch.stageEvents(d, copies = 2)
-      val ckpt = Qx.tempDir("graft-smerge-ckpt")
-      val q = MicroBatch.fileSource(s, in, maxFilesPerTrigger = Some(1))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                         bid: Long) =>
-          val ups = batch.filter(col("event_id") % 10 === 3)
-            .select(col("event_id"), lit("patched").as("event_type"),
-              (col("value") * 2).as("value"))
-          val dels = batch.filter(col("event_id") % 10 === 7)
-            .select(col("event_id"))
-          t.mergeBatch(ups, Seq("event_id"), "graft-cdc-stream", bid, Some(dels))
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      MicroBatch.eachBatchRun(s, MicroBatch.stageEvents(d, copies = 2)) { (batch, bid) =>
+        val ups = batch.filter(col("event_id") % 10 === 3)
+          .select(col("event_id"), lit("patched").as("event_type"),
+            (col("value") * 2).as("value"))
+        val dels = batch.filter(col("event_id") % 10 === 7)
+          .select(col("event_id"))
+        t.mergeBatch(ups, Seq("event_id"), "graft-cdc-stream", bid, Some(dels))
+      }
       t.snapshot()
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
@@ -330,8 +320,7 @@ object StreamingQ {
     // the update-mode sink is the final state — which must equal the
     // plain batch group-by (the oracle) iff cross-batch state held
     "q188_stateful_v2" -> ((s, d) =>
-      MicroBatch.updateRun(s, d, splitParts = Some(3),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      MicroBatch.updateRun(s, d, splitParts = Some(3)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.runningTotals(
           stream.select(col("user_id"), col("event_id"))
@@ -354,8 +343,7 @@ object StreamingQ {
     // rewrite, so the hash gate pins timer firing, state clearing AND
     // the open-tail exclusion
     "q189_stream_timer_sessions" -> ((s, d) =>
-      MicroBatch.updateRun(s, d,
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      MicroBatch.updateRun(s, d) { stream =>
         import s.implicits._
         graft.streaming.Stateful.timerSessions(
           graft.Tables.toEventTime(stream)
@@ -405,8 +393,7 @@ object StreamingQ {
     // final per-user depth then rolls up to q204's per-step converted
     // counts and must hash-match the BATCH windowed-funnel oracle.
     "q208_stream_funnel" -> ((s, d) => {
-      val sink = MicroBatch.updateRun(s, d, splitParts = Some(3),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      val sink = MicroBatch.updateRun(s, d, splitParts = Some(3)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.streamingFunnel(
           graft.Tables.toEventTime(stream)
@@ -435,8 +422,7 @@ object StreamingQ {
     // history, so the drained stream converges to exactly the batch
     // matchPattern answer (seq + last-write reader, the q208 rule).
     "q260_stream_pattern" -> ((s, d) => {
-      val sink = MicroBatch.updateRun(s, d, splitParts = Some(3),
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+      val sink = MicroBatch.updateRun(s, d, splitParts = Some(3)) { stream =>
         import s.implicits._
         graft.streaming.Stateful.streamingPattern(
           graft.Tables.toEventTime(stream)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout,
   ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
   ValueState}
@@ -158,13 +158,12 @@ object Stateful {
     grouped.transformWithState(new EventTimeSessions(gapUs), TimeMode.EventTime(),
       OutputMode.Update())(Encoders.product[(Long, Long)])
 
-  /** transformWithState requires the RocksDB state store provider.
-    * Queries pass this through `MicroBatch.updateRun(conf = ...)`,
-    * which applies it on a per-run ISOLATED session — never on the
-    * shared one. (The r9 lesson: q188 vanished from the correctness
-    * gate because [[withRocksDBStateStore]]'s set/restore toggle on
-    * the shared session raced Verify's concurrent query threads.) */
-  val rocksDBConf: Map[String, String] = Map(
+  /** The RocksDB state store with changelog checkpointing — the store
+    * `transformWithState` requires. Drains never name it:
+    * [[stateStoreConf]] picks it from the plan, and
+    * [[withRocksDBStateStore]] applies the same settings for specs that
+    * drive their own streams. */
+  private val rocksDBConf: Map[String, String] = Map(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     // changelogCheckpointing: per-batch checkpoint = the state DELTA
@@ -181,18 +180,31 @@ object Stateful {
     // tracks the delta, not the store size.
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
-  /** Set/restore wrapper over a session's conf — ONLY safe when the
-    * caller owns the session and runs sequentially (unit specs). Query
-    * registrations must use [[rocksDBConf]] + the isolated-session
-    * path instead. */
+  /** State-store settings a drain of `plan` runs with: [[rocksDBConf]]
+    * exactly when the plan holds a `transformWithState` node (the
+    * operator refuses any other store), none otherwise — every other
+    * stateful operator (flatMapGroupsWithState, dedup, stream-stream
+    * joins, window aggregations) stays on Spark's default HDFS-backed
+    * store. `MicroBatch`'s drain core applies it to the run's isolated
+    * session. */
+  private[streaming] def stateStoreConf(plan: DataFrame): Map[String, String] =
+    if (plan.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState]))
+      rocksDBConf
+    else Map.empty
+
+  /** Set/restore [[rocksDBConf]] on a session's conf — ONLY safe when
+    * the caller owns the session and runs sequentially (unit specs that
+    * start their own streams). Query drains never need it: the drain
+    * core picks the store per run on an isolated session (the r9
+    * lesson: q188 vanished from the correctness gate when this toggle
+    * on the shared session raced Verify's concurrent query threads). */
   def withRocksDBStateStore[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    val prev = rocksDBConf.keys.map(k => k -> spark.conf.getOption(k))
+    rocksDBConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

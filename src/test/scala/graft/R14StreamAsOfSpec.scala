@@ -20,7 +20,7 @@ class R14StreamAsOfSpec extends AnyFunSuite {
   test("hash-interleaved drain converges to the batch point-in-time join") {
     import spark.implicits._
     val sink = MicroBatch.updateRun(spark, sf,
-      splitParts = Some(3), conf = Stateful.rocksDBConf) { stream =>
+      splitParts = Some(3)) { stream =>
       Stateful.keyedAsOf(
         Tables.toEventTime(stream)
           .filter(col("event_type").isin("signup", "purchase"))

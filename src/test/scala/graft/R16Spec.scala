@@ -806,8 +806,7 @@ class R16Spec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     val thrown = intercept[Throwable] {
       graft.streaming.MicroBatch.updateRun(spark, sf,
-        splitParts = Some(3), chronological = false,
-        conf = graft.streaming.Stateful.rocksDBConf) { stream =>
+        splitParts = Some(3), chronological = false) { stream =>
         graft.streaming.Stateful.scd2Changes(
           graft.Tables.toEventTime(stream)
             .select(col("user_id"), col("event_type"),

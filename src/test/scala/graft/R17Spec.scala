@@ -33,8 +33,7 @@ class R17Spec extends AnyFunSuite {
   test("bounded disorder evicts buffered SCD2 state MID-drain") {
     import graft.streaming.{MicroBatch, Stateful}
     def drain(in: java.nio.file.Path, delay: String): Seq[Long] = {
-      val t = MicroBatch.updateRunTable(spark, sf, inDir = Some(in),
-        conf = Stateful.rocksDBConf) { stream =>
+      val t = MicroBatch.updateRunTable(spark, sf, inDir = Some(in)) { stream =>
         import spark.implicits._
         Stateful.scd2Buffered(
           graft.Tables.toEventTime(stream)

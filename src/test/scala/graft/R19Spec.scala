@@ -37,8 +37,7 @@ class R19Spec extends AnyFunSuite {
     import graft.streaming.{MicroBatch, Stateful}
     val in = MicroBatch.stageEventsJitteredSentinel(spark, sf, parts = 6,
       maxJitterSecs = 21600L, sentinelInterval = "8 HOURS")
-    val t = MicroBatch.updateRunTable(spark, sf, inDir = Some(in),
-      conf = Stateful.rocksDBConf) { stream =>
+    val t = MicroBatch.updateRunTable(spark, sf, inDir = Some(in)) { stream =>
       import spark.implicits._
       Stateful.funnelBuffered(
         graft.Tables.toEventTime(stream)
@@ -75,8 +74,7 @@ class R19Spec extends AnyFunSuite {
     // node, the final watermark never advances past the real rows, and
     // before r19 the buffered tail silently vanished from the result
     val e = intercept[IllegalArgumentException] {
-      MicroBatch.updateRun(spark, sf, inDir = Some(in),
-        conf = Stateful.rocksDBConf) { stream =>
+      MicroBatch.updateRun(spark, sf, inDir = Some(in)) { stream =>
         import spark.implicits._
         Stateful.funnelBuffered(
           graft.Tables.toEventTime(stream)

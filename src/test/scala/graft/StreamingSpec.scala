@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.MicroBatch
@@ -9,6 +11,17 @@ import graft.streaming.MicroBatch
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
+
+  /** The last drain's state operators all ran on the default
+    * HDFS-backed store: a RocksDB store reports `rocksdb*` custom
+    * metrics, the HDFS one none. */
+  private def assertHdfsStore(drain: String): Unit = {
+    val names = MicroBatch.lastRunProgress.flatMap(_.stateOperators)
+      .map(_.customMetrics.keySet.asScala.toSet)
+    assert(names.nonEmpty, s"$drain reported no state operator")
+    assert(names.forall(!_.exists(_.startsWith("rocksdb"))),
+      s"$drain runs on RocksDB, but only transformWithState plans need it: $names")
+  }
 
   test("foreachBatch append sink reproduces the batch projection") {
     val streamed = MicroBatch.appendRun(spark, sf)(
@@ -53,6 +66,7 @@ class StreamingSpec extends AnyFunSuite {
         .select(col("event_id"))
     }
     assert(MicroBatch.lastRunStateStats.map(_.partitions) === Seq(2))
+    assertHdfsStore("the dedup drain")
     val n = Tables.events(spark, sf01).count()
     assert(streamed.count() === n) // one row per event despite 2 deliveries
     assert(streamed.distinct().count() === n)
@@ -139,6 +153,25 @@ class StreamingSpec extends AnyFunSuite {
     // and the join keeps four state stores in it
     assert(MicroBatch.lastRunStateStats.map(o => (o.partitions, o.storeInstances)) ===
       Seq((1, 4)))
+    assertHdfsStore("the stream-stream join drain")
+  }
+
+  test("a flatMapGroupsWithState drain (q93) keeps the default HDFS state store") {
+    val counted = graft.queries.StreamingQ.queries("q93_stateful_count")(spark, sf)
+    assertHdfsStore("q93")
+    assert(counted.count() === Tables.events(spark, sf).select("user_id").distinct().count())
+  }
+
+  test("q156's foreachBatch MERGE drain is recorded in lastRunProgress") {
+    // two staged copies drained one file per trigger: two micro-batches,
+    // each carrying the whole events table (numInputRows counts every
+    // read of the batch inside the body, so it is at least the table)
+    val merged = graft.queries.StreamingQ.queries("q156_stream_cdc_merge")(spark, sf)
+    val progress = MicroBatch.lastRunProgress
+    val n = Tables.events(spark, sf).count()
+    assert(progress.map(_.batchId) === Seq(0L, 1L))
+    assert(progress.forall(_.numInputRows >= n), progress.map(_.numInputRows))
+    assert(merged.count() > 0)
   }
 
   test("stream-stream FULL OUTER join flushes unmatched rows from BOTH sides") {

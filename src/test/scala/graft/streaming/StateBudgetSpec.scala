@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,7 +54,7 @@ class StateBudgetSpec extends AnyFunSuite {
     def run(copies: Int): Long = {
       import spark.implicits._
       MicroBatch.updateRun(spark, sf,
-        conf = Stateful.rocksDBConf, copies = copies) { stream =>
+        copies = copies) { stream =>
         val grouped = graft.Tables.toEventTime(stream)
           .withWatermark("ts", "0 seconds")
           .filter(col("user_id") < 50)
@@ -64,6 +66,15 @@ class StateBudgetSpec extends AnyFunSuite {
       }.count()
       val stats = MicroBatch.lastRunStateStats
       assert(stats.nonEmpty, "no state operators reported for transformWithState")
+      // the drain core picks RocksDB with changelog checkpointing from
+      // the transformWithState plan: every operator entry reports the
+      // store's metrics, and the per-batch changelog commits took time
+      val metrics = MicroBatch.lastRunProgress.flatMap(_.stateOperators)
+        .map(_.customMetrics.asScala.map { case (k, v) => k -> v.longValue })
+      assert(metrics.nonEmpty && metrics.forall(_.keys.exists(_.startsWith("rocksdb"))),
+        s"transformWithState drain without RocksDB metrics: $metrics")
+      assert(metrics.map(_.getOrElse("rocksdbChangeLogWriterCommitLatencyMs", 0L)).sum > 0,
+        "no changelog commit time: the RocksDB store is not changelog-checkpointed")
       totalRows(stats)
     }
     val at1 = run(1)
