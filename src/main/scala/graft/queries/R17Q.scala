@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.queries.Qx._
+import graft.streaming.MicroBatch.{Arrival, replayRun}
+import graft.streaming.Stateful
 
 /** Round-17 additions — the production-contract faces of the r16
   * machinery: out-of-order-tolerant streaming SCD2 (watermark-
@@ -102,23 +104,6 @@ object R17Q {
       .groupBy(col("kind"), col("term"))
       .agg(sum(col("v")).cast("long").as("v"))
 
-  /** Shared drain of the buffered SCD2 faces (q382/q383): the
-    * watermarked event stream through [[graft.streaming.Stateful.scd2Buffered]]
-    * over a caller-staged sentinel landing dir. */
-  private def bufferedScd2Changes(s: org.apache.spark.sql.SparkSession,
-                                  d: String, in: java.nio.file.Path,
-                                  delay: String): DataFrame =
-    graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
-      import s.implicits._
-      graft.streaming.Stateful.scd2Buffered(
-        graft.Tables.toEventTime(stream)
-          .withWatermark("ts", delay)
-          .select(col("user_id"), col("event_type"),
-            unix_micros(col("ts")), col("event_id"))
-          .as[(Long, String, Long, Long)].groupByKey(_._1))
-        .toDF("user_id", "event_type", "ts_us", "event_id")
-    }
-
   /** Shared read side of the streaming SCD2 faces (q381's shape):
     * version + valid_to windows over the CHANGE relation (already
     * collapsed — never raw events), sentinel key filtered. */
@@ -152,38 +137,29 @@ object R17Q {
   val queries: Map[String, Q] = Map(
 
     // OUT-OF-ORDER STREAMING SCD2 (r17 — VERDICT r16 #2): q381's
-    // change detection under the arrival contract a production CDC
-    // feed actually has. The drain is HASH-interleaved (4 batches,
-    // each spanning the full event-time range — genuine disorder) +
-    // one far-future sentinel control record staged last; the
-    // watermark delay (45 days) covers the full 30-day event range so
-    // nothing is dropped, rows buffer in ListState until the
-    // watermark passes them, and the sentinel advances the final
-    // watermark past every real row so the buffer flushes
-    // deterministically. Change rows re-sort inside the watermark, so
-    // the multi-batch RocksDB drain must reproduce the BATCH interval
-    // build BIT-EXACTLY — the oracle is q376's SQL, unchanged.
-    // `Stateful.Scd2Buffered`.
+    // change detection under full disorder (`Arrival.FullDisorder`:
+    // every batch spans the whole event-time range, nothing is late,
+    // rows buffer until the sentinel flushes them). Change rows
+    // re-sort inside the watermark, so the multi-batch RocksDB drain
+    // must reproduce the BATCH interval build BIT-EXACTLY — the oracle
+    // is q376's SQL, unchanged. `Stateful.Scd2Buffered`.
     "q382_stream_scd2_ooo" -> ((s, d) =>
-      scd2Intervals(bufferedScd2Changes(s, d,
-        graft.streaming.MicroBatch.stageEventsSplitSentinel(
-          s, d, parts = 4, sentinelInterval = "46 DAYS"),
-        delay = "45 days"))),
+      scd2Intervals(replayRun(s, d, Arrival.FullDisorder, lit(true))(
+        new Stateful.Scd2Buffered, "user_id", "event_type", "ts_us", "event_id")
+        .snapshot())),
 
     // BOUNDED-DISORDER STREAMING SCD2 (r17): the same buffered
-    // detector under the steady-state production arrival pattern —
-    // per-event jitter ≤ 6 h on a 30-day stream, 6 chronological-
-    // by-ARRIVAL batches, watermark delay 7 h ≥ the jitter bound. The
+    // detector under the steady-state production arrival pattern
+    // (`Arrival.BoundedJitter`: chronological-by-ARRIVAL batches,
+    // watermark delay ≥ the jitter bound). The
     // watermark genuinely ADVANCES mid-drain here, so buffered state
     // flushes incrementally (peak state ≪ corpus — R17Spec asserts
     // the eviction via the engine's own state stats); the sentinel
     // flushes only the final tail. Same batch oracle, bit-exact.
     "q383_stream_scd2_jitter" -> ((s, d) =>
-      scd2Intervals(bufferedScd2Changes(s, d,
-        graft.streaming.MicroBatch.stageEventsJitteredSentinel(
-          s, d, parts = 6, maxJitterSecs = 21600L,
-          sentinelInterval = "8 HOURS"),
-        delay = "7 hours"))),
+      scd2Intervals(replayRun(s, d, Arrival.BoundedJitter, lit(true))(
+        new Stateful.Scd2Buffered, "user_id", "event_type", "ts_us", "event_id")
+        .snapshot())),
     // MAINTAINED NOVELTY INDEX (r17 — VERDICT r16 #6): q362's
     // admission readout at STEADY-STATE cost — the corpus
     // distinct-shingle relation is a maintained lake artifact (one
@@ -446,26 +422,12 @@ object R17Q {
     // maintenance under the q382 arrival contract — the
     // WatermarkOrderedReplay skeleton with the transition step, so
     // the strict/buffered duality holds for a SECOND replay family
-    // (the fail-loud chronological face stays q396). Hash-interleaved
-    // 4-batch drain + sentinel, full-range watermark delay; the
+    // (the fail-loud chronological face stays q396). The
     // re-sorted replay must reproduce the batch lag-window matrix
     // BIT-EXACTLY. `Stateful.TransitionBuffered`.
-    "q398_stream_markov_ooo" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
-        s, d, parts = 4, sentinelInterval = "46 DAYS")
-      val trans = graft.streaming.MicroBatch.updateRun(s, d,
-        inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.transitionBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "45 days")
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1))
-          .toDF("from_type", "to_type")
-      }
-      transitionRollup(trans)
-    }),
+    "q398_stream_markov_ooo" -> ((s, d) =>
+      transitionRollup(replayRun(s, d, Arrival.FullDisorder, lit(true))(
+        new Stateful.TransitionBuffered, "from_type", "to_type").snapshot())),
 
     // ASYMMETRIC NEAR-DUP AUDIT (r17): the containment pairs Jaccard
     // CANNOT see — ≥9/10 contained but Jaccard < 1/2 (quote

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.queries.Qx._
+import graft.streaming.MicroBatch.{Arrival, replayRun}
+import graft.streaming.Stateful
 
 /** Round-18 additions — the third ordered-replay family (the windowed
   * FUNNEL under genuine disorder, closing the strict/buffered duality
@@ -95,39 +97,13 @@ object R18Q {
     // why q208 re-derives per-user depth from FULL history each
     // update; watermark-ordered replay makes it monotone again — in
     // exact (ts, id) order the per-user state is just the entry
-    // timestamps reached so far, O(|steps|) per key. Hash-interleaved
-    // 4-batch drain + sentinel, full-range watermark delay; the
+    // timestamps reached so far, O(|steps|) per key. The
     // replayed depths roll up to the per-step converted counts and
     // must hash-match the BATCH windowed-funnel oracle (q204's SQL,
     // unchanged). `Stateful.FunnelBuffered`.
-    "q399_stream_funnel_ooo" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
-        s, d, parts = 4, sentinelInterval = "46 DAYS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.funnelBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "45 days")
-            // the pre-processor filter MUST keep the sentinel type:
-            // Catalyst pushes this filter BELOW the watermark node, so
-            // a filtered-out sentinel would never advance the final
-            // watermark and the buffered tail would never flush (found
-            // r18 — the funnel face is the first replay consumer that
-            // filters its stream; since r19 updateRun's
-            // sentinel-survival guard fails loud on exactly this)
-            .filter(col("event_type").isin(
-              "view", "click", "purchase", "__sentinel__"))
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1),
-          steps = Seq("view", "click", "purchase"),
-          withinUs = Seq(86400L * 1000000L, 86400L * 1000000L))
-          .toDF("user_id", "depth")
-      }
-      // shared read side with the jittered face (R19Q.funnelRollup):
-      // max(depth) per user, per-step scalar counts
-      R19Q.funnelRollup(sink, Seq("view", "click", "purchase"))
-    }),
+    "q399_stream_funnel_ooo" -> ((s, d) =>
+      // shared with the jittered face (R19Q.funnelDrain)
+      R19Q.funnelDrain(s, d, Arrival.FullDisorder)),
 
     // STREAMING SEQUENCE SUPPORT (r18): q395's 2-step behavior
     // readout maintained in-stream — per-batch (user, type,
@@ -247,31 +223,21 @@ object R18Q {
     // order by keeping FULL per-key history and re-deriving; the
     // ordered replay keeps O(1) state (the last click id) and emits
     // each match exactly once, final by construction — no seq +
-    // last-write reader on the read side. Hash-interleaved 4-batch
-    // drain + sentinel; must hash-match the batch point-in-time
-    // window oracle. `Stateful.AsOfBuffered`.
-    "q404_stream_asof_ooo" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
-        s, d, parts = 4, sentinelInterval = "46 DAYS")
-      graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.asOfBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "45 days")
-            // keep the sentinel: this filter pushes BELOW the
-            // watermark node (the q399 lesson; guard-enforced r19)
-            .filter(col("event_type").isin(
-              "click", "purchase", "__sentinel__"))
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1),
-          dimType = "click", obsType = "purchase")
-          .toDF("user_id", "purchase_id", "click_id")
-      }
-        .filter(col("user_id") >= 0)
-        .orderBy("user_id", "purchase_id")
-    })
+    // last-write reader on the read side. Must hash-match the batch
+    // point-in-time window oracle. `Stateful.AsOfBuffered`.
+    "q404_stream_asof_ooo" -> ((s, d) => asOfDrain(s, d, Arrival.FullDisorder))
   )
+
+  /** The keyed as-of replay faces (q404/q414): each purchase against
+    * the user's latest strictly-preceding click, drained under
+    * `arrival`. */
+  private[queries] def asOfDrain(s: org.apache.spark.sql.SparkSession, d: String,
+                                 arrival: Arrival): DataFrame =
+    replayRun(s, d, arrival, col("event_type").isin("click", "purchase"))(
+      new Stateful.AsOfBuffered("click", "purchase"),
+      "user_id", "purchase_id", "click_id").snapshot()
+      .filter(col("user_id") >= 0)
+      .orderBy("user_id", "purchase_id")
 
   /** q401/q402 share this contingency-residual SQL — cell fragments
     * are additive, so the streaming fold equals the one-shot residual

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.queries.Qx._
+import graft.streaming.MicroBatch.{Arrival, replayRun}
+import graft.streaming.Stateful
 
 /** Round-19 additions — the replay skeleton's FIFTH face (dynamic-gap
   * sessionization under disorder, the first whose batch semantics are
@@ -75,57 +77,59 @@ object R19Q {
       .orderBy("step")
   }
 
+  /** The windowed-funnel replay faces (q399/q409): view → click →
+    * purchase, each step within a day of the last, drained under
+    * `arrival` and rolled up by [[funnelRollup]]. */
+  private[queries] def funnelDrain(s: org.apache.spark.sql.SparkSession, d: String,
+                                   arrival: Arrival): DataFrame = {
+    val steps = Seq("view", "click", "purchase")
+    funnelRollup(replayRun(s, d, arrival, col("event_type").isin(steps: _*))(
+      new Stateful.FunnelBuffered(steps, Seq(86400L * 1000000L, 86400L * 1000000L)),
+      "user_id", "depth").snapshot(), steps)
+  }
+
+  /** The dynamic-gap session replay faces (q408/q410): clicks/views
+    * cool off in 10 minutes, everything else holds the session an
+    * hour; users below 30, drained under `arrival`, folded by max(n)
+    * per (user, session start). */
+  private def sessionsDrain(s: org.apache.spark.sql.SparkSession, d: String,
+                            arrival: Arrival): DataFrame =
+    replayRun(s, d, arrival, col("user_id") < 30)(
+      new Stateful.SessionBuffered(
+        Map("click" -> 600L * 1000000L, "view" -> 600L * 1000000L),
+        3600L * 1000000L),
+      "user_id", "start_us", "n").snapshot()
+      .filter(col("user_id") >= 0)
+      .groupBy(col("user_id"), col("start_us"))
+      .agg(max(col("n")).as("n"))
+      .select(col("user_id"),
+        date_format(timestamp_micros(col("start_us")),
+          "yyyy-MM-dd HH:mm:ss").as("session_start"),
+        col("n"))
+      .orderBy("user_id", "session_start")
+
   val queries: Map[String, Q] = Map(
 
     // OUT-OF-ORDER STREAMING DYNAMIC SESSIONS (r19 — VERDICT r18 next
     // #6, the FIFTH replay face): q190's dynamic-gap session windows
-    // (clicks/views cool off in 10 minutes, everything else holds the
-    // session an hour) under the q382 arrival contract. This is the
+    // (`sessionsDrain`) under the q382 arrival contract. This is the
     // face the skeleton exists to make possible: in ARRIVAL order a
     // late row can MERGE two sessions an incremental builder already
     // closed — non-monotone state no append-only fold can express —
     // but under watermark-ordered replay rows reach the step in exact
     // (ts, id) event order, the merge case is structurally impossible,
     // and per-key state is O(1): (session start, running max ts+gap,
-    // count). Hash-interleaved 4-batch drain + sentinel; the replayed
+    // count). The replayed
     // (user, session_start, n) emissions fold by max(n) — a session's
     // start is immutable and its count monotone under ordered replay —
     // and must hash-match the BATCH dynamic session_window oracle
     // (q190's SQL, unchanged). `Stateful.SessionBuffered`.
-    "q408_stream_sessions_ooo" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
-        s, d, parts = 4, sentinelInterval = "46 DAYS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.sessionBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "45 days")
-            // pushes BELOW the watermark node; keeps the sentinel
-            // (user −1 < 30) — guard-enforced since r19
-            .filter(col("user_id") < 30)
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1),
-          gapUsByType = Map("click" -> 600L * 1000000L,
-            "view" -> 600L * 1000000L),
-          defaultGapUs = 3600L * 1000000L)
-          .toDF("user_id", "start_us", "n")
-      }
-      sink.filter(col("user_id") >= 0)
-        .groupBy(col("user_id"), col("start_us"))
-        .agg(max(col("n")).as("n"))
-        .select(col("user_id"),
-          date_format(timestamp_micros(col("start_us")),
-            "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n"))
-        .orderBy("user_id", "session_start")
-    }),
+    "q408_stream_sessions_ooo" -> ((s, d) => sessionsDrain(s, d, Arrival.FullDisorder)),
 
     // BOUNDED-JITTER STREAMING WINDOWED FUNNEL (r19 — VERDICT r18 next
     // #4): q399's processor under the steady-state production arrival
-    // pattern — per-event jitter ≤ 6 h, 6 chronological-by-ARRIVAL
-    // batches, watermark delay 7 h ≥ the jitter bound (the q383
-    // treatment). The watermark genuinely ADVANCES mid-drain, so the
+    // pattern, `Arrival.BoundedJitter` (the q383 treatment). The
+    // watermark genuinely ADVANCES mid-drain, so the
     // Seq-typed replay state (the entry timestamps reached so far)
     // survives REPEATED PARTIAL flushes with per-flush prefix deletion
     // and re-arms — the one engine-level combination the full-disorder
@@ -133,66 +137,17 @@ object R19Q {
     // the many-flush unit property covers it only on MemoryStream).
     // R19Spec asserts the mid-drain emissions from per-commit sink
     // versions. Same batch oracle as q204, bit-exact.
-    "q409_stream_funnel_jitter" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsJitteredSentinel(
-        s, d, parts = 6, maxJitterSecs = 21600L,
-        sentinelInterval = "8 HOURS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.funnelBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "7 hours")
-            // keep the sentinel (guard-enforced since r19)
-            .filter(col("event_type").isin(
-              "view", "click", "purchase", "__sentinel__"))
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1),
-          steps = Seq("view", "click", "purchase"),
-          withinUs = Seq(86400L * 1000000L, 86400L * 1000000L))
-          .toDF("user_id", "depth")
-      }
-      funnelRollup(sink, Seq("view", "click", "purchase"))
-    }),
+    "q409_stream_funnel_jitter" -> ((s, d) => funnelDrain(s, d, Arrival.BoundedJitter)),
 
     // BOUNDED-JITTER STREAMING DYNAMIC SESSIONS (r19): q408's
-    // processor under the q383/q409 arrival contract — ≤6 h jitter,
-    // 6 chronological-by-arrival batches, 7 h delay. Completes the
+    // processor under the q383/q409 arrival contract. Completes the
     // full-disorder/bounded-jitter duality for the session face the
     // round introduced: the watermark advances mid-drain, so session
     // state opens, grows, and is superseded across REPEATED partial
     // flushes (gap windows here are minutes-to-an-hour ≪ the 6 h
     // jitter, so most sessions span flush boundaries). Same q190
     // batch oracle, bit-exact.
-    "q410_stream_sessions_jitter" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsJitteredSentinel(
-        s, d, parts = 6, maxJitterSecs = 21600L,
-        sentinelInterval = "8 HOURS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.sessionBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "7 hours")
-            // pushes below the watermark node; keeps the sentinel
-            // (user −1 < 30) — guard-enforced
-            .filter(col("user_id") < 30)
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1),
-          gapUsByType = Map("click" -> 600L * 1000000L,
-            "view" -> 600L * 1000000L),
-          defaultGapUs = 3600L * 1000000L)
-          .toDF("user_id", "start_us", "n")
-      }
-      sink.filter(col("user_id") >= 0)
-        .groupBy(col("user_id"), col("start_us"))
-        .agg(max(col("n")).as("n"))
-        .select(col("user_id"),
-          date_format(timestamp_micros(col("start_us")),
-            "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n"))
-        .orderBy("user_id", "session_start")
-    }),
+    "q410_stream_sessions_jitter" -> ((s, d) => sessionsDrain(s, d, Arrival.BoundedJitter)),
 
     // BOUNDED-JITTER STREAMING MARKOV (r19): q398's transition
     // emission under the jittered arrival contract — with this and
@@ -203,49 +158,15 @@ object R19Q {
     // drains are the steady-state production path; the full-disorder
     // twins price the honest worst case. Same q235-family batch
     // oracle, bit-exact.
-    "q413_stream_markov_jitter" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsJitteredSentinel(
-        s, d, parts = 6, maxJitterSecs = 21600L,
-        sentinelInterval = "8 HOURS")
-      val trans = graft.streaming.MicroBatch.updateRun(s, d,
-        inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.transitionBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "7 hours")
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1))
-          .toDF("from_type", "to_type")
-      }
-      R17Q.transitionRollup(trans)
-    }),
+    "q413_stream_markov_jitter" -> ((s, d) =>
+      R17Q.transitionRollup(replayRun(s, d, Arrival.BoundedJitter, lit(true))(
+        new Stateful.TransitionBuffered, "from_type", "to_type").snapshot())),
 
     // BOUNDED-JITTER STREAMING KEYED AS-OF (r19): q404's O(1)-state
     // ordered replay under the jittered contract — the last-click
     // dimension state survives repeated partial flushes. Same batch
     // point-in-time oracle, bit-exact.
-    "q414_stream_asof_jitter" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsJitteredSentinel(
-        s, d, parts = 6, maxJitterSecs = 21600L,
-        sentinelInterval = "8 HOURS")
-      graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.asOfBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "7 hours")
-            // keep the sentinel (guard-enforced)
-            .filter(col("event_type").isin(
-              "click", "purchase", "__sentinel__"))
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1),
-          dimType = "click", obsType = "purchase")
-          .toDF("user_id", "purchase_id", "click_id")
-      }
-        .filter(col("user_id") >= 0)
-        .orderBy("user_id", "purchase_id")
-    }),
+    "q414_stream_asof_jitter" -> ((s, d) => R18Q.asOfDrain(s, d, Arrival.BoundedJitter)),
 
     // SOURCE COSINE SIMILARITY (r19): the L2 member of the
     // slice-similarity family — beside TV (L1 shape, q389), Ruzicka
@@ -273,19 +194,8 @@ object R19Q {
     // row, so it emits no gap and needs no filter. Must hash-match
     // q412's batch oracle bit-exactly.
     "q415_stream_gap_burstiness" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
-        s, d, parts = 4, sentinelInterval = "46 DAYS")
-      val facts = graft.streaming.MicroBatch.updateRun(s, d,
-        inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.gapBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "45 days")
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1))
-          .toDF("event_type", "value")
-      }
+      val facts = replayRun(s, d, Arrival.FullDisorder, lit(true))(
+        new Stateful.GapBuffered, "event_type", "value").snapshot()
       graft.operators.Stats.fanoFromCounts(
         facts.groupBy(col("event_type"), col("value"))
           .agg(count(lit(1)).as("c")),

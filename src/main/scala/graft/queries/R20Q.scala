@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.queries.Qx._
+import graft.streaming.MicroBatch.{Arrival, replayRun}
+import graft.streaming.Stateful
 
 /** Round-20 additions — the retrieval composition wave (arbitrary-arity
   * phrase matching through the extracted operator, proximity-aware BM25
@@ -294,64 +296,35 @@ object R20Q {
     // (ts, id) row_number minus a RANGE-framed prefix count) is not
     // incrementally maintainable — a late row retro-inflates every
     // window it lands in; under watermark-ordered replay eviction is
-    // a dropWhile over an ascending ring. Hash-interleaved 4-batch
-    // drain + sentinel; the per-event (user, event, n) emissions fold
-    // to the per-user PEAK rate (+ the smallest event id achieving
-    // it) and must hash-match the batch two-window oracle.
+    // a dropWhile over an ascending ring. The per-event (user, event,
+    // n) emissions fold to the per-user PEAK rate (+ the smallest
+    // event id achieving it) and must hash-match the batch two-window
+    // oracle.
     // `Stateful.RateBuffered`.
-    "q420_stream_rate_ooo" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsSplitSentinel(
-        s, d, parts = 4, sentinelInterval = "46 DAYS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.rateBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "45 days")
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1),
-          windowUs = 86400L * 1000000L)
-          .toDF("user_id", "event_id", "n")
-      }
-      rapPeakRollup(sink)
-    }),
+    "q420_stream_rate_ooo" -> ((s, d) => rateDrain(s, d, Arrival.FullDisorder)),
 
     // BOUNDED-JITTER STREAMING SLIDING-WINDOW RATE (r20): q420's
-    // processor under the steady-state arrival contract (≤6 h jitter,
-    // 6 chronological-by-arrival batches, 7 h delay — the q383/q409
+    // processor under the steady-state arrival contract (the q383/q409
     // treatment), completing the full-disorder/bounded-jitter DUALITY
     // for the sixth face on arrival. The 24 h ring spans flush
     // boundaries (median inter-event gap ≈7 h), so ring state grows,
     // partially evicts, and re-arms across REPEATED mid-drain partial
     // flushes. Same batch two-window oracle, bit-exact.
-    "q421_stream_rate_jitter" -> ((s, d) => {
-      val in = graft.streaming.MicroBatch.stageEventsJitteredSentinel(
-        s, d, parts = 6, maxJitterSecs = 21600L,
-        sentinelInterval = "8 HOURS")
-      val sink = graft.streaming.MicroBatch.updateRun(s, d, inDir = Some(in)) { stream =>
-        import s.implicits._
-        graft.streaming.Stateful.rateBuffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", "7 hours")
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1),
-          windowUs = 86400L * 1000000L)
-          .toDF("user_id", "event_id", "n")
-      }
-      rapPeakRollup(sink)
-    })
+    "q421_stream_rate_jitter" -> ((s, d) => rateDrain(s, d, Arrival.BoundedJitter))
   )
 
-  /** Shared read side of the sliding-rate faces (q420/q421): each
-    * event's in-window count is emitted exactly once under ordered
-    * replay, so the sink IS the per-event rate relation; the readout
-    * is the per-user peak + the smallest event id achieving it (ties
-    * on the peak are resolved by min id — deterministic without an
-    * IEEE fold). Both faces fold through this one body so the arrival
-    * contracts cannot drift (the funnelRollup discipline). */
-  private def rapPeakRollup(sink: DataFrame): DataFrame = {
-    val per = sink.filter(col("user_id") >= 0)
+  /** The sliding-rate faces (q420/q421): the trailing-24 h count per
+    * event, drained under `arrival`. Each event's in-window count is
+    * emitted exactly once under ordered replay, so the sink IS the
+    * per-event rate relation; the readout is the per-user peak + the
+    * smallest event id achieving it (ties on the peak are resolved by
+    * min id — deterministic without an IEEE fold). Both faces run
+    * through this one body so the arrival contracts cannot drift. */
+  private def rateDrain(s: org.apache.spark.sql.SparkSession, d: String,
+                        arrival: Arrival): DataFrame = {
+    val per = replayRun(s, d, arrival, lit(true))(
+        new Stateful.RateBuffered(86400L * 1000000L), "user_id", "event_id", "n")
+      .snapshot().filter(col("user_id") >= 0)
     val peak = per.groupBy(col("user_id"))
       .agg(max(col("n")).as("peak_rate"))
     per.join(peak, "user_id")

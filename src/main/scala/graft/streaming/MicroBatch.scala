@@ -1,10 +1,11 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.time.Duration
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
@@ -248,6 +249,9 @@ object MicroBatch {
     }
   }
 
+  /** The sentinel control record's event_type. */
+  private val SentinelType = "__sentinel__"
+
   /** One far-future SENTINEL row (key −1) with the staged events
     * schema, `interval` past the real max ts — the file-source analog
     * of a CDC feed's control/heartbeat record: it advances the final
@@ -257,7 +261,7 @@ object MicroBatch {
     * REAL event-time in µs — the [[assertSentinelSurvived]] guard
     * needs the boundary the final watermark must clear. */
   private def sentinelEvents(spark: SparkSession, sfDir: String,
-                             interval: String): (DataFrame, Long) = {
+                             interval: Duration): (DataFrame, Long) = {
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
     val mx = ev.agg(max(col("ts")).as("__mx"))
     // boundary in the WATERMARK's µs space: the drains watermark on
@@ -267,10 +271,10 @@ object MicroBatch {
       .toEventTime(mx.select(col("__mx").as("ts")), "ts")
       .select(unix_micros(col("ts"))).head().getLong(0)
     (mx.select(ev.columns.toSeq.map {
-      case "ts"         => (col("__mx") + expr(s"INTERVAL $interval")).as("ts")
+      case "ts"         => (col("__mx") + lit(interval)).as("ts")
       case "event_id"   => lit(-1L).as("event_id")
       case "user_id"    => lit(-1L).as("user_id")
-      case "event_type" => lit("__sentinel__").as("event_type")
+      case "event_type" => lit(SentinelType).as("event_type")
       case "value"      => lit(0.0d).as("value")
       case "props"      => lit("{}").as("props")
       case other        => lit(null).cast(ev.schema(other).dataType).as(other)
@@ -292,102 +296,97 @@ object MicroBatch {
   private[graft] def sentinelBoundaryUs(in: Path): Option[Long] =
     Option(sentinelRealMaxUs.get(in)).map(_.longValue)
 
-  /** The sentinel stagers' shared tail: write `arrivals` as the
-    * chronological part files of a fresh landing dir, append the
-    * [[sentinelEvents]] control record as the LAST file, and register
-    * the dir's real-max boundary for [[assertSentinelSurvived]]. */
-  private def stageWithSentinel(spark: SparkSession, sfDir: String,
-                                arrivals: DataFrame, interval: String): Path = {
-    val in = graft.lake.TempDirs.create("graft-stream-in")
-    val files = writeParts(arrivals)
-    val (sentinel, mxUs) = sentinelEvents(spark, sfDir, interval)
-    placeChronological(in, files ++ writeParts(sentinel.coalesce(1)))
-    sentinelRealMaxUs.put(in, mxUs)
-    in
+  /** How events reach a watermark-ordered replay drain — the two
+    * arrival contracts every replay query runs under. A value fixes the
+    * landing order of the real events, the watermark delay its drains
+    * use, and how far past the last real event its sentinel control
+    * record lands; [[stageArrival]] builds its memoized landing dir.
+    *
+    * COUPLING: the final watermark is realMax + sentinelInterval −
+    * delay, so `delay` must be strictly less than `sentinelInterval`.
+    * A delay at or past the interval leaves the final watermark at or
+    * behind the last real event and [[assertSentinelSurvived]] fails
+    * loud — correctly, the tail never flushed, but the failure is a
+    * staging mismatch, not a dropped sentinel: widen the interval, not
+    * the delay. ArrivalSpec pins this for every value. */
+  sealed abstract class Arrival(val delay: Duration, val sentinelInterval: Duration) {
+    /** The real events in landing order, one file per partition. */
+    private[streaming] def arrivals(events: DataFrame): DataFrame
   }
 
-  /** Stage a HASH-SPLIT drain (the adversarial full-disorder arrival
-    * order — every batch spans the whole event-time range) PLUS the
-    * [[sentinelEvents]] control record as the last file. Paired with
-    * a watermark delay covering the real event-time range: nothing is
-    * ever late mid-drain (so no row is dropped), and the sentinel
-    * advances the final watermark past every real row. COUPLING
-    * CONTRACT (ADVICE r19): the final watermark is realMax +
-    * sentinelInterval − delay, so the consumer's watermark DELAY must
-    * be strictly less than `sentinelInterval` — a delay ≥ the interval
-    * leaves the final watermark at or behind the last real event and
-    * [[assertSentinelSurvived]] fails loud (correctly: the tail never
-    * flushed), but the failure is a STAGING mismatch, not a dropped
-    * sentinel; widen the interval, not the delay. READ-ONLY
-    * CONTRACT: memoized and shared — see [[stageEvents]]. */
-  def stageEventsSplitSentinel(spark: SparkSession, sfDir: String,
-                               parts: Int, sentinelInterval: String): Path =
-    memoizedDir(
-      s"splitsent|$sfDir|$parts|$sentinelInterval", contentStamp(sfDir)) {
-      stageWithSentinel(spark, sfDir, spark.read.parquet(s"$sfDir/events.parquet")
-        .repartition(parts, col("event_id")), sentinelInterval)
+  object Arrival {
+
+    /** FULL DISORDER: 4 files hash-split on event_id, so every batch
+      * spans the whole event-time range — the adversarial order. The
+      * 45-day delay covers the real 30-day event range: nothing is ever
+      * late mid-drain (no row is dropped), state buffers until the
+      * sentinel, 46 days past the last real event, flushes it. */
+    case object FullDisorder extends Arrival(Duration.ofDays(45), Duration.ofDays(46)) {
+      private[streaming] def arrivals(events: DataFrame): DataFrame =
+        events.repartition(4, col("event_id"))
     }
 
-  /** Stage a BOUNDED-DISORDER drain — the arrival pattern a real
-    * Kafka CDC feed has: each row's ARRIVAL time is its event ts plus
-    * a deterministic per-event jitter in [0, maxJitterSecs), files are
-    * chronological in ARRIVAL order (range-partitioned, mtime-stamped)
-    * so event-time disorder crosses batch boundaries but never exceeds
-    * the jitter bound, and the [[sentinelEvents]] control record lands
-    * last. Paired with a watermark delay ≥ the jitter bound: no row is
-    * late, the watermark genuinely ADVANCES mid-drain (buffered state
-    * flushes incrementally — the eviction a full-range delay never
-    * exercises), and the sentinel flushes the tail. Same COUPLING
-    * CONTRACT as [[stageEventsSplitSentinel]]: the watermark delay
-    * must be strictly less than `sentinelInterval` (final wm =
-    * realMax + interval − delay), so pick delay in
-    * [maxJitterSecs, sentinelInterval). READ-ONLY
-    * CONTRACT: memoized and shared — see [[stageEvents]]. */
-  def stageEventsJitteredSentinel(spark: SparkSession, sfDir: String,
-                                  parts: Int, maxJitterSecs: Long,
-                                  sentinelInterval: String): Path = {
-    // 0 would make the md5-jitter `% 0` evaluate to NULL arrival times
-    // and a garbage-partitioned drain that only surfaces later as
-    // frontier-violation errors inside the stateful processor (ADVICE
-    // r17) — the crossCorrelation/heapsCurve parameter-guard pattern
-    require(maxJitterSecs > 0,
-      s"stageEventsJitteredSentinel: maxJitterSecs must be > 0 " +
-        s"(got $maxJitterSecs); a zero-jitter drain is stageEventsByTime")
-    memoizedDir(s"jitsent|$sfDir|$parts|$maxJitterSecs|$sentinelInterval",
-      contentStamp(sfDir)) {
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
-      // md5-derived jitter: deterministic, uniform-ish, RNG-free (the
-      // repo's sampling convention)
-      val jitterSecs = (conv(substring(md5(col("event_id").cast("string")),
-        1, 8), 16, 10).cast("long") % maxJitterSecs).cast("double")
-      val arrival = col("ts") +
-        make_dt_interval(lit(0), lit(0), lit(0), jitterSecs)
-      stageWithSentinel(spark, sfDir, ev.withColumn("__arrival", arrival)
-        .repartitionByRange(parts, col("__arrival"))
-        .sortWithinPartitions(col("__arrival"))
-        .drop("__arrival"), sentinelInterval)
+    /** BOUNDED JITTER — the arrival pattern a real Kafka CDC feed has:
+      * each row ARRIVES at its event ts plus a deterministic per-event
+      * jitter in [0, maxJitter), and the 6 files are chronological in
+      * ARRIVAL order (range-partitioned, mtime-stamped), so event-time
+      * disorder crosses batch boundaries but never exceeds the jitter.
+      * With delay ≥ maxJitter no row is late, the watermark genuinely
+      * ADVANCES mid-drain (buffered state flushes incrementally — the
+      * eviction a full-range delay never exercises), and the sentinel,
+      * 8 hours past the last real event, flushes the tail. */
+    case object BoundedJitter extends Arrival(Duration.ofHours(7), Duration.ofHours(8)) {
+      val maxJitter: Duration = Duration.ofHours(6)
+      private[streaming] def arrivals(events: DataFrame): DataFrame = {
+        // md5-derived jitter: deterministic, uniform-ish, RNG-free (the
+        // repo's sampling convention)
+        val jitterSecs = (conv(substring(md5(col("event_id").cast("string")),
+          1, 8), 16, 10).cast("long") % maxJitter.getSeconds).cast("double")
+        events.withColumn("__arrival",
+            col("ts") + make_dt_interval(lit(0), lit(0), lit(0), jitterSecs))
+          .repartitionByRange(6, col("__arrival"))
+          .sortWithinPartitions(col("__arrival"))
+          .drop("__arrival")
+      }
     }
+
+    val values: Seq[Arrival] = Seq(FullDisorder, BoundedJitter)
   }
+
+  /** Stage the events table under `arrival`: its real events as
+    * chronological part files, then the [[sentinelEvents]] control
+    * record as the LAST file, with the dir's real-max boundary
+    * registered for [[assertSentinelSurvived]]. READ-ONLY CONTRACT:
+    * memoized and shared — see [[stageEvents]]. */
+  def stageArrival(spark: SparkSession, sfDir: String, arrival: Arrival): Path =
+    memoizedDir(s"arrival|$arrival|$sfDir", contentStamp(sfDir)) {
+      val in = graft.lake.TempDirs.create("graft-stream-in")
+      val files = writeParts(arrival.arrivals(spark.read.parquet(s"$sfDir/events.parquet")))
+      val (sentinel, mxUs) = sentinelEvents(spark, sfDir, arrival.sentinelInterval)
+      placeChronological(in, files ++ writeParts(sentinel.coalesce(1)))
+      sentinelRealMaxUs.put(in, mxUs)
+      in
+    }
 
   /** Pre-build every landing-dir the CURRENT query surface drains
     * from (r22). Staging models "messages already in the topic" — a
     * harness cost the bench reports under its `staging` metric, not an
     * operator cost — but before r22 each distinct dir was lazily built
     * by whichever TIMED drain touched it first (~0.4–6 s landing
-    * inside that query's single lifecycle rep). The combos below
-    * mirror the registrations' call sites; a drift is harmless — an
-    * unlisted combo is simply built lazily by its first drain, exactly
-    * as before (the [stage] stderr breadcrumb makes any such gap
-    * visible in the bench log). Builds run on the caller's thread;
-    * callers parallelize across a pool (guide §2.6 — independent jobs
-    * backfill each other's stragglers). */
+    * inside that query's single lifecycle rep). Every [[Arrival]] is
+    * staged, so the replay drains' dirs cannot drift from the queries;
+    * the copy/split/by-time combos mirror the registrations' call
+    * sites, and a drift there is harmless — an unlisted combo is simply
+    * built lazily by its first drain, exactly as before (the [stage]
+    * stderr breadcrumb makes any such gap visible in the bench log).
+    * Builds run on the caller's thread; callers parallelize across a
+    * pool (guide §2.6 — independent jobs backfill each other's
+    * stragglers). */
   def prestage(spark: SparkSession, sfDir: String): Unit = {
     stageEvents(sfDir, 1); stageEvents(sfDir, 2)
     stageEventsSplit(spark, sfDir, 3); stageEventsSplit(spark, sfDir, 4)
     stageEventsByTime(spark, sfDir, 3); stageEventsByTime(spark, sfDir, 4)
-    stageEventsSplitSentinel(spark, sfDir, 4, "46 DAYS")
-    stageEventsJitteredSentinel(spark, sfDir, 6, 21600L, "8 HOURS")
-    ()
+    Arrival.values.foreach(stageArrival(spark, sfDir, _))
   }
 
   /** Unbounded read over the landing dir (T1 source stage).
@@ -646,10 +645,10 @@ object MicroBatch {
     * never advances the watermark) or never watermarked the stream,
     * and watermark-buffered replay state silently retained its tail: a
     * truncated result on AvailableNow, a hang on a continuous trigger.
-    * Enforced on every drain over a dir staged by
-    * [[stageEventsSplitSentinel]]/[[stageEventsJitteredSentinel]] —
-    * zero call-site opt-in, so every FUTURE replay consumer inherits
-    * the loud failure. */
+    * Enforced on every drain over a dir staged by [[stageArrival]] —
+    * zero call-site opt-in, so a consumer that bypasses [[replayRun]]
+    * (which keeps the sentinel by construction) inherits the loud
+    * failure. */
   private def assertSentinelSurvived(in: Path,
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
     Option(sentinelRealMaxUs.get(in)).foreach { mx =>
@@ -672,6 +671,31 @@ object MicroBatch {
           "never the delay); keep the sentinel type in every " +
           "pre-processor filter so buffered replay state flushes " +
           "instead of stranding")
+    }
+
+  /** The ordered-replay drain: events staged under `arrival`, one file
+    * per trigger, replayed per user through `processor`
+    * ([[Stateful.replay]]). The chain every replay query shares:
+    * event time, watermark `arrival.delay`, rows kept where `keep`
+    * holds OR the row is the sentinel — Catalyst pushes this filter
+    * BELOW the watermark node, so a sentinel filtered out here would
+    * never advance the final watermark and the buffered tail would
+    * never flush — then the `(user_id, event_type, ts µs, event_id)`
+    * replay row keyed by user. Emissions land in the returned sink
+    * table under the names `cols`; every micro-batch is one commit.
+    * The sentinel's own emissions carry user −1 (read sides filter
+    * `user_id >= 0` where the face emits per-user rows). */
+  def replayRun[O](spark: SparkSession, sfDir: String, arrival: Arrival, keep: Column)(
+      processor: Stateful.WatermarkOrderedReplay[_, O], cols: String*): LakeTable =
+    updateRunTable(spark, sfDir, inDir = Some(stageArrival(spark, sfDir, arrival))) { stream =>
+      import spark.implicits._
+      Stateful.replay(graft.Tables.toEventTime(stream)
+          .withWatermark("ts", s"${arrival.delay.getSeconds} seconds")
+          .filter(keep || (col("event_type") === SentinelType))
+          .select(col("user_id"), col("event_type"),
+            unix_micros(col("ts")), col("event_id"))
+          .as[(Long, String, Long, Long)].groupByKey(_._1), processor)
+        .toDF(cols: _*)
     }
 
   /** Update-mode drain for arbitrary-stateful transforms

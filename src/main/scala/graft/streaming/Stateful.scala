@@ -14,6 +14,17 @@ object Stateful {
 
   private implicit val longEncoder: Encoder[Long] = Encoders.scalaLong
 
+  // Per-key state budgets: a key past its budget fails loud (the
+  // processors' `require`s) instead of growing without bound.
+  /** Rows of one key in one micro-batch ([[Scd2Changes]], [[TransitionEmit]]). */
+  private val MaxPerKeyBatch = 1 << 20
+  /** Events per funnel step ([[StreamingFunnel]]). */
+  private val MaxPerStep = 4096
+  /** Rows per role ([[StreamingPattern]], [[KeyedAsOf]]). */
+  private val MaxPerRole = 4096
+  /** Pattern-relevant events per key ([[StreamingSteps]]). */
+  private val MaxEvents = 16384
+
   /** Running event count per key, emitted on every update. */
   def runningCount[K: Encoder](grouped: KeyValueGroupedDataset[K, _])(
       implicit e: Encoder[(K, Long)]): Dataset[(K, Long)] =
@@ -216,12 +227,12 @@ object Stateful {
     * must be recomputed from the accumulated per-step sets, never
     * folded left-to-right in arrival order. State per user is bounded
     * by that user's funnel-type events (capped fail-loud at
-    * `maxPerStep`; a production cap would evict by window distance).
+    * `MaxPerStep`; a production cap would evict by window distance).
     * Each touched user emits (user, updateSeq, depth) with a strictly
     * increasing per-user sequence, so the non-monotone depth reduces
     * deterministically to the LAST update (`max_by(depth, seq)`) —
     * the q188 max() trick generalized to a non-monotone measure. */
-  class StreamingFunnel(withinUs: Long, maxPerStep: Int = 4096)
+  class StreamingFunnel(withinUs: Long)
       extends StatefulProcessor[Long, (Long, Int, Long), (Long, Long, Long)] {
     @transient private var ev:
       ValueState[(Seq[Long], Seq[Long], Seq[Long], Long)] = _
@@ -240,8 +251,8 @@ object Stateful {
           case _ => p :+= r._3
         }
       }
-      require(v.size <= maxPerStep && c.size <= maxPerStep && p.size <= maxPerStep,
-        s"user $key exceeds $maxPerStep funnel events in one step")
+      require(v.size <= MaxPerStep && c.size <= MaxPerStep && p.size <= MaxPerStep,
+        s"user $key exceeds $MaxPerStep funnel events in one step")
       seq += 1
       ev.update((v, c, p, seq))
       val t1 = v.minOption
@@ -264,14 +275,14 @@ object Stateful {
   /** STREAMING CEP — the in-stream twin of
     * `EventAnalytics.matchPattern` ("A then B within T, no C
     * between"): per user the state carries the (ts, id) stream of
-    * each role (bounded by `maxPerRole`, fail-loud like
+    * each role (bounded by `MaxPerRole`, fail-loud like
     * [[StreamingFunnel]]), and every micro-batch re-derives the match
     * COUNT from the merged (ts, id)-ordered history — the same
     * first-B / first-C / exclusive-guard rule as the batch operator,
     * so the drained stream converges to exactly the batch answer
     * (the q208 convergence discipline: outputs carry a seq and the
     * reader keeps the last). Roles: 0 = A, 1 = B, 2 = C. */
-  class StreamingPattern(withinUs: Long, maxPerRole: Int = 4096)
+  class StreamingPattern(withinUs: Long)
       extends StatefulProcessor[Long, (Long, Int, Long, Long), (Long, Long, Long)] {
     @transient private var ev:
       ValueState[(Seq[(Long, Long)], Seq[(Long, Long)], Seq[(Long, Long)], Long)] = _
@@ -293,9 +304,9 @@ object Stateful {
           case _ => cs :+= ((r._3, r._4))
         }
       }
-      require(as.size <= maxPerRole && bs.size <= maxPerRole &&
-        cs.size <= maxPerRole,
-        s"user $key exceeds $maxPerRole pattern events per role")
+      require(as.size <= MaxPerRole && bs.size <= MaxPerRole &&
+        cs.size <= MaxPerRole,
+        s"user $key exceeds $MaxPerRole pattern events per role")
       seq += 1
       ev.update((as, bs, cs, seq))
       val ord = Ordering.Tuple2[Long, Long]
@@ -333,7 +344,7 @@ object Stateful {
     * hash-interleaved, or late (seq + last-write reader, the q208
     * rule). Emits (key, seq, obs_id, dim_id | -1, dim_value | null)
     * per observation per update. */
-  class KeyedAsOf(maxPerRole: Int = 4096)
+  class KeyedAsOf
       extends StatefulProcessor[Long, (Long, Int, Long, Long, Double),
         (Long, Long, Long, Long, Option[Double])] {
     @transient private var st:
@@ -353,8 +364,8 @@ object Stateful {
         if (r._2 == 0) dims :+= ((r._3, r._4, r._5))
         else obs :+= ((r._3, r._4))
       }
-      require(dims.size <= maxPerRole && obs.size <= maxPerRole,
-        s"key $key exceeds $maxPerRole as-of rows per role")
+      require(dims.size <= MaxPerRole && obs.size <= MaxPerRole,
+        s"key $key exceeds $MaxPerRole as-of rows per role")
       seq += 1
       st.update((dims, obs, seq))
       val sorted = dims.sortBy(t => (t._1, t._2))
@@ -391,8 +402,7 @@ object Stateful {
   class StreamingSteps(steps: Seq[(Seq[String], String)],
                        guards: Map[Int, Seq[String]],
                        withinUs: Long,
-                       contiguous: Boolean = false,
-                       maxEvents: Int = 16384)
+                       contiguous: Boolean = false)
       extends StatefulProcessor[Long, (Long, String, Long, Long),
         (Long, Long, Long, Long, Long)] {
     private val alphabet =
@@ -412,8 +422,8 @@ object Stateful {
       rows.foreach { r =>
         if (alphabet.contains(r._2)) evs :+= ((r._2, r._3, r._4))
       }
-      require(evs.size <= maxEvents,
-        s"key $key exceeds $maxEvents pattern-relevant events")
+      require(evs.size <= MaxEvents,
+        s"key $key exceeds $MaxEvents pattern-relevant events")
       seq += 1
       st.update((evs, seq))
       graft.operators.EventAnalytics
@@ -462,7 +472,7 @@ object Stateful {
     * window, never the corpus) and must equal the batch q376 build
     * BIT-EXACTLY. State per key is O(1) — the smallest state shape in
     * this file. */
-  class Scd2Changes(maxPerKeyBatch: Int = 1 << 20)
+  class Scd2Changes
       extends StatefulProcessor[Long, (Long, String, Long, Long),
         (Long, String, Long, Long)] {
     @transient private var last: ValueState[(String, Long, Long)] = _
@@ -474,8 +484,8 @@ object Stateful {
                                  timers: TimerValues):
         Iterator[(Long, String, Long, Long)] = {
       val buf = rows.toArray
-      require(buf.length <= maxPerKeyBatch,
-        s"key $key exceeds $maxPerKeyBatch rows in one batch")
+      require(buf.length <= MaxPerKeyBatch,
+        s"key $key exceeds $MaxPerKeyBatch rows in one batch")
       val sorted = buf.sortBy(r => (r._3, r._4))
       var st = if (last.exists()) Some(last.get()) else None
       val out = Seq.newBuilder[(Long, String, Long, Long)]
@@ -538,9 +548,10 @@ object Stateful {
     * forward-replay semantics (funnel progress, as-of dimension
     * state) ride the same skeleton instead of being limited to
     * last-row lookback. */
-  abstract class WatermarkOrderedReplay[S, O](maxBufferedPerKey: Int)(
-      implicit sEnc: Encoder[S], oEnc: Encoder[O])
+  abstract class WatermarkOrderedReplay[S, O](sEnc: Encoder[S],
+                                              val outputEncoder: Encoder[O])
       extends StatefulProcessor[Long, (Long, String, Long, Long), O] {
+    import WatermarkOrderedReplay.MaxBufferedPerKey
     /** The per-row replay step: (updated state, emissions) for `row`
       * given the replay state so far (None at key birth). The
       * skeleton guarantees rows arrive here in exact (ts, id) order,
@@ -594,9 +605,9 @@ object Stateful {
       // the budget bounds the ACCUMULATED buffer, not just one batch —
       // with a slow watermark the buffer grows across batches, and the
       // flush materializes it all, so the cap must track the total
-      require(n <= maxBufferedPerKey,
+      require(n <= MaxBufferedPerKey,
         s"key $key: $n buffered rows exceed the per-key budget " +
-          s"$maxBufferedPerKey — the watermark is not advancing past " +
+          s"$MaxBufferedPerKey — the watermark is not advancing past " +
           "the disorder window")
       bufN.update(n)
       // FLOOR of the earliest buffered µs deadline (the
@@ -664,15 +675,19 @@ object Stateful {
     }
   }
 
+  object WatermarkOrderedReplay {
+    /** Rows one key may hold buffered ahead of the watermark. */
+    val MaxBufferedPerKey: Int = 1 << 22
+  }
+
   /** OUT-OF-ORDER-TOLERANT STREAMING SCD2 — the
     * [[WatermarkOrderedReplay]] skeleton with [[Scd2Changes]]'s
     * change-detection step (first-ever observation counts as a
     * change, the SCD2 convention); replay state = the last observed
     * attr. */
-  class Scd2Buffered(maxBufferedPerKey: Int = 1 << 22)
+  class Scd2Buffered
       extends WatermarkOrderedReplay[String, (Long, String, Long, Long)](
-        maxBufferedPerKey)(Encoders.STRING,
-        Encoders.product[(Long, String, Long, Long)]) {
+        Encoders.STRING, Encoders.product[(Long, String, Long, Long)]) {
     protected def step(key: Long, st: Option[String],
                        row: (String, Long, Long)):
         (String, IterableOnce[(Long, String, Long, Long)]) =
@@ -685,10 +700,9 @@ object Stateful {
     * [[WatermarkOrderedReplay]] skeleton with the transition step:
     * every consecutive (from, to) pair, emitted once the watermark
     * has fixed the order; replay state = the last observed attr. */
-  class TransitionBuffered(maxBufferedPerKey: Int = 1 << 22)
+  class TransitionBuffered
       extends WatermarkOrderedReplay[String, (String, String)](
-        maxBufferedPerKey)(Encoders.STRING,
-        Encoders.product[(String, String)]) {
+        Encoders.STRING, Encoders.product[(String, String)]) {
     protected def step(key: Long, st: Option[String],
                        row: (String, Long, Long)):
         (String, IterableOnce[(String, String)]) =
@@ -712,10 +726,8 @@ object Stateful {
     * monotone under ordered replay); the read side folds max(depth)
     * per key and rolls up to the per-step converted counts, which
     * must equal the batch funnel BIT-EXACTLY. */
-  class FunnelBuffered(steps: Seq[String], withinUs: Seq[Long],
-                       maxBufferedPerKey: Int = 1 << 22)
+  class FunnelBuffered(steps: Seq[String], withinUs: Seq[Long])
       extends WatermarkOrderedReplay[Tuple1[Seq[Long]], (Long, Int)](
-        maxBufferedPerKey)(
         // a bare Seq encoder does not resolve inside the state store;
         // the product wrapper does (the KeyedAsOf nested-Seq pattern)
         Encoders.product[Tuple1[Seq[Long]]],
@@ -744,15 +756,6 @@ object Stateful {
     }
   }
 
-  /** [[FunnelBuffered]] over a keyed WATERMARKED `(key, type, ts, id)`
-    * stream. */
-  def funnelBuffered(grouped: KeyValueGroupedDataset[Long, (Long, String, Long, Long)],
-                     steps: Seq[String], withinUs: Seq[Long])
-      : Dataset[(Long, Int)] =
-    grouped.transformWithState(new FunnelBuffered(steps, withinUs),
-      TimeMode.EventTime(), OutputMode.Update())(
-      Encoders.product[(Long, Int)])
-
   /** KEYED AS-OF ordered replay (r18 — the FOURTH face of the
     * [[WatermarkOrderedReplay]] skeleton, the other family VERDICT
     * r17 next #5 named): each OBSERVATION row joins the latest
@@ -766,11 +769,9 @@ object Stateful {
     * watermark contract a processed match can never be invalidated).
     * Dimension and observation rows are distinguished by their type
     * string. */
-  class AsOfBuffered(dimType: String, obsType: String,
-                     maxBufferedPerKey: Int = 1 << 22)
+  class AsOfBuffered(dimType: String, obsType: String)
       extends WatermarkOrderedReplay[Long, (Long, Long, Long)](
-        maxBufferedPerKey)(Encoders.scalaLong,
-        Encoders.product[(Long, Long, Long)]) {
+        Encoders.scalaLong, Encoders.product[(Long, Long, Long)]) {
     protected def step(key: Long, st: Option[Long],
                        row: (String, Long, Long)):
         (Long, IterableOnce[(Long, Long, Long)]) = {
@@ -780,15 +781,6 @@ object Stateful {
       else (lastDim, Nil)
     }
   }
-
-  /** [[AsOfBuffered]] over a keyed WATERMARKED `(key, type, ts, id)`
-    * stream. */
-  def asOfBuffered(grouped: KeyValueGroupedDataset[Long, (Long, String, Long, Long)],
-                   dimType: String, obsType: String)
-      : Dataset[(Long, Long, Long)] =
-    grouped.transformWithState(new AsOfBuffered(dimType, obsType),
-      TimeMode.EventTime(), OutputMode.Update())(
-      Encoders.product[(Long, Long, Long)])
 
   /** DYNAMIC-GAP SESSIONIZATION ordered replay (r19 — VERDICT r18 next
     * #6, the FIFTH face of [[WatermarkOrderedReplay]]): q190's
@@ -813,11 +805,9 @@ object Stateful {
     * window, since win_end > ts). The final open session per key needs
     * no close event — its last emission already carries its full
     * count. */
-  class SessionBuffered(gapUsByType: Map[String, Long], defaultGapUs: Long,
-                        maxBufferedPerKey: Int = 1 << 22)
+  class SessionBuffered(gapUsByType: Map[String, Long], defaultGapUs: Long)
       extends WatermarkOrderedReplay[(Long, Long, Long), (Long, Long, Long)](
-        maxBufferedPerKey)(Encoders.product[(Long, Long, Long)],
-        Encoders.product[(Long, Long, Long)]) {
+        Encoders.product[(Long, Long, Long)], Encoders.product[(Long, Long, Long)]) {
     require(defaultGapUs > 0 && gapUsByType.values.forall(_ > 0),
       s"session gaps must be strictly positive (got default=$defaultGapUs, " +
         s"byType=$gapUsByType) — a non-positive gap makes every row its " +
@@ -836,15 +826,6 @@ object Stateful {
       (ns, Seq((key, ns._1, ns._3)))
     }
   }
-
-  /** [[SessionBuffered]] over a keyed WATERMARKED `(key, type, ts, id)`
-    * stream. */
-  def sessionBuffered(grouped: KeyValueGroupedDataset[Long, (Long, String, Long, Long)],
-                      gapUsByType: Map[String, Long], defaultGapUs: Long)
-      : Dataset[(Long, Long, Long)] =
-    grouped.transformWithState(new SessionBuffered(gapUsByType, defaultGapUs),
-      TimeMode.EventTime(), OutputMode.Update())(
-      Encoders.product[(Long, Long, Long)])
 
   /** SLIDING-WINDOW RATE under ordered replay (r20 — VERDICT r19 next
     * #4, the SIXTH face of [[WatermarkOrderedReplay]], and the first
@@ -871,9 +852,8 @@ object Stateful {
     * on both ends would count equal-ts successors too and diverge
     * from any per-row incremental semantics). Emits (key, event id,
     * in-window count), exactly once, final by construction. */
-  class RateBuffered(windowUs: Long, maxBufferedPerKey: Int = 1 << 22)
+  class RateBuffered(windowUs: Long)
       extends WatermarkOrderedReplay[Tuple1[Seq[Long]], (Long, Long, Long)](
-        maxBufferedPerKey)(
         // bare Seq encoders don't resolve in the state store; the
         // product wrapper does (the FunnelBuffered pattern)
         Encoders.product[Tuple1[Seq[Long]]],
@@ -906,14 +886,6 @@ object Stateful {
     }
   }
 
-  /** [[RateBuffered]] over a keyed WATERMARKED `(key, type, ts, id)`
-    * stream. */
-  def rateBuffered(grouped: KeyValueGroupedDataset[Long, (Long, String, Long, Long)],
-                   windowUs: Long): Dataset[(Long, Long, Long)] =
-    grouped.transformWithState(new RateBuffered(windowUs),
-      TimeMode.EventTime(), OutputMode.Update())(
-      Encoders.product[(Long, Long, Long)])
-
   /** INTER-EVENT GAP EMISSION under ordered replay (r19) — the
     * [[TransitionBuffered]] shape carrying the TIME DELTA instead of
     * the type pair: for each replayed row with a predecessor, emits
@@ -925,37 +897,24 @@ object Stateful {
     * q412/q407 readouts at steady-state cost. Exactly-once and final
     * by construction (a processed gap can never be invalidated under
     * the watermark contract). */
-  class GapBuffered(maxBufferedPerKey: Int = 1 << 22)
+  class GapBuffered
       extends WatermarkOrderedReplay[Long, (String, Long)](
-        maxBufferedPerKey)(Encoders.scalaLong,
-        Encoders.product[(String, Long)]) {
+        Encoders.scalaLong, Encoders.product[(String, Long)]) {
     protected def step(key: Long, st: Option[Long],
                        row: (String, Long, Long)):
         (Long, IterableOnce[(String, Long)]) =
       (row._2, st.map(prev => (row._1, (row._2 - prev) / 1000000L)))
   }
 
-  /** [[GapBuffered]] over a keyed WATERMARKED `(key, type, ts, id)`
-    * stream. */
-  def gapBuffered(grouped: KeyValueGroupedDataset[Long, (Long, String, Long, Long)])
-      : Dataset[(String, Long)] =
-    grouped.transformWithState(new GapBuffered(), TimeMode.EventTime(),
-      OutputMode.Update())(Encoders.product[(String, Long)])
-
-  /** [[TransitionBuffered]] over a keyed WATERMARKED
-    * `(key, type, ts, id)` stream. */
-  def transitionBuffered(grouped: KeyValueGroupedDataset[Long, (Long, String, Long, Long)])
-      : Dataset[(String, String)] =
-    grouped.transformWithState(new TransitionBuffered(), TimeMode.EventTime(),
-      OutputMode.Update())(Encoders.product[(String, String)])
-
-  /** [[Scd2Buffered]] over a keyed WATERMARKED `(key, attr, ts, id)`
-    * stream (event-time mode — the caller's watermark delay is the
-    * disorder bound). */
-  def scd2Buffered(grouped: KeyValueGroupedDataset[Long, (Long, String, Long, Long)])
-      : Dataset[(Long, String, Long, Long)] =
-    grouped.transformWithState(new Scd2Buffered(), TimeMode.EventTime(),
-      OutputMode.Update())(Encoders.product[(Long, String, Long, Long)])
+  /** Run a [[WatermarkOrderedReplay]] face over a keyed WATERMARKED
+    * `(key, type, ts µs, id)` stream: event-time mode (the caller's
+    * watermark delay is the disorder bound), update output, the
+    * processor's own output encoder. [[MicroBatch.replayRun]] builds
+    * that stream for the staged arrival contracts. */
+  def replay[O](grouped: KeyValueGroupedDataset[Long, (Long, String, Long, Long)],
+                p: WatermarkOrderedReplay[_, O]): Dataset[O] =
+    grouped.transformWithState(p, TimeMode.EventTime(), OutputMode.Update())(
+      p.outputEncoder)
 
   /** STREAMING TRANSITION EMIT (r17) — the batch transition matrix
     * (`EventAnalytics.transitionMatrix`, q235) maintained in-stream:
@@ -968,7 +927,7 @@ object Stateful {
     * (fails loud, the Scd2Changes discipline); the drained sink is
     * the transition fact relation and the read side rolls it up to
     * the bounded |types|² matrix. */
-  class TransitionEmit(maxPerKeyBatch: Int = 1 << 20)
+  class TransitionEmit
       extends StatefulProcessor[Long, (Long, String, Long, Long),
         (String, String)] {
     @transient private var last: ValueState[(String, Long, Long)] = _
@@ -980,8 +939,8 @@ object Stateful {
                                  timers: TimerValues):
         Iterator[(String, String)] = {
       val buf = rows.toArray
-      require(buf.length <= maxPerKeyBatch,
-        s"key $key exceeds $maxPerKeyBatch rows in one batch")
+      require(buf.length <= MaxPerKeyBatch,
+        s"key $key exceeds $MaxPerKeyBatch rows in one batch")
       val sorted = buf.sortBy(r => (r._3, r._4))
       var st = if (last.exists()) Some(last.get()) else None
       val out = Seq.newBuilder[(String, String)]

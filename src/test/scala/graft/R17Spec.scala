@@ -31,18 +31,11 @@ class R17Spec extends AnyFunSuite {
   }
 
   test("bounded disorder evicts buffered SCD2 state MID-drain") {
-    import graft.streaming.{MicroBatch, Stateful}
-    def drain(in: java.nio.file.Path, delay: String): Seq[Long] = {
-      val t = MicroBatch.updateRunTable(spark, sf, inDir = Some(in)) { stream =>
-        import spark.implicits._
-        Stateful.scd2Buffered(
-          graft.Tables.toEventTime(stream)
-            .withWatermark("ts", delay)
-            .select(col("user_id"), col("event_type"),
-              unix_micros(col("ts")), col("event_id"))
-            .as[(Long, String, Long, Long)].groupByKey(_._1))
-          .toDF("user_id", "event_type", "ts_us", "event_id")
-      }
+    import graft.streaming.MicroBatch.{Arrival, replayRun}
+    import graft.streaming.Stateful
+    def drain(arrival: Arrival): Seq[Long] = {
+      val t = replayRun(spark, sf, arrival, lit(true))(
+        new Stateful.Scd2Buffered, "user_id", "event_type", "ts_us", "event_id")
       // per-commit emission counts: every micro-batch is one version
       val vs = t.versions.sorted
       val counts = vs.map(v => t.snapshot(v).count())
@@ -51,17 +44,14 @@ class R17Spec extends AnyFunSuite {
     // full-range delay (q382 shape): the watermark never passes a real
     // row mid-drain, so EVERYTHING flushes at the sentinel-driven final
     // timer batch — the honest worst case of unbounded disorder
-    val full = drain(MicroBatch.stageEventsSplitSentinel(
-      spark, sf, parts = 4, sentinelInterval = "46 DAYS"), "45 days")
+    val full = drain(Arrival.FullDisorder)
     assert(full.sum > 0 && full.takeWhile(_ == 0L).length == full.length - 1
       && full.last == full.sum,
       s"full-range drain should emit only at the final flush: $full")
     // bounded 6h jitter under a 7h delay (q383 shape): the watermark
     // genuinely advances mid-drain, so buffered rows flush (and state
     // evicts) incrementally across commits, not just at the sentinel
-    val bounded = drain(MicroBatch.stageEventsJitteredSentinel(
-      spark, sf, parts = 6, maxJitterSecs = 21600L,
-      sentinelInterval = "8 HOURS"), "7 hours")
+    val bounded = drain(Arrival.BoundedJitter)
     val midEmitting = bounded.dropRight(1).count(_ > 0L)
     assert(midEmitting >= 2,
       s"bounded-disorder drain must emit mid-drain (eviction), got $bounded")

@@ -34,23 +34,13 @@ class R19Spec extends AnyFunSuite {
 
   test("bounded jitter flushes buffered funnel state MID-drain " +
       "(per-commit eviction of the Seq-typed replay state)") {
-    import graft.streaming.{MicroBatch, Stateful}
-    val in = MicroBatch.stageEventsJitteredSentinel(spark, sf, parts = 6,
-      maxJitterSecs = 21600L, sentinelInterval = "8 HOURS")
-    val t = MicroBatch.updateRunTable(spark, sf, inDir = Some(in)) { stream =>
-      import spark.implicits._
-      Stateful.funnelBuffered(
-        graft.Tables.toEventTime(stream)
-          .withWatermark("ts", "7 hours")
-          .filter(col("event_type").isin(
-            "view", "click", "purchase", "__sentinel__"))
-          .select(col("user_id"), col("event_type"),
-            unix_micros(col("ts")), col("event_id"))
-          .as[(Long, String, Long, Long)].groupByKey(_._1),
-        steps = Seq("view", "click", "purchase"),
-        withinUs = Seq(86400L * 1000000L, 86400L * 1000000L))
-        .toDF("user_id", "depth")
-    }
+    import graft.streaming.MicroBatch.{Arrival, replayRun}
+    import graft.streaming.Stateful
+    val t = replayRun(spark, sf, Arrival.BoundedJitter,
+        col("event_type").isin("view", "click", "purchase"))(
+      new Stateful.FunnelBuffered(Seq("view", "click", "purchase"),
+        Seq(86400L * 1000000L, 86400L * 1000000L)),
+      "user_id", "depth")
     // per-commit emission counts: every micro-batch is one version
     val vs = t.versions.sorted
     val counts = vs.map(v => t.snapshot(v).count())
@@ -65,26 +55,27 @@ class R19Spec extends AnyFunSuite {
   test("dropping the sentinel from a buffered replay drain fails LOUD " +
       "(sentinel-survival guard)") {
     import graft.streaming.{MicroBatch, Stateful}
-    val in = MicroBatch.stageEventsSplitSentinel(spark, sf, parts = 4,
-      sentinelInterval = "46 DAYS")
+    val in = MicroBatch.stageArrival(spark, sf, MicroBatch.Arrival.FullDisorder)
     assert(MicroBatch.sentinelBoundaryUs(in).nonEmpty,
       "sentinel staging must register the real-max boundary")
     // the q399 shape with the sentinel FILTERED OUT of the
     // pre-processor — Catalyst pushes the filter below the watermark
     // node, the final watermark never advances past the real rows, and
-    // before r19 the buffered tail silently vanished from the result
+    // before r19 the buffered tail silently vanished from the result.
+    // Plain updateRun, not replayRun: replayRun keeps the sentinel by
+    // construction, so only a hand-built chain can drop it.
     val e = intercept[IllegalArgumentException] {
       MicroBatch.updateRun(spark, sf, inDir = Some(in)) { stream =>
         import spark.implicits._
-        Stateful.funnelBuffered(
+        Stateful.replay(
           graft.Tables.toEventTime(stream)
             .withWatermark("ts", "45 days")
             .filter(col("event_type").isin("view", "click", "purchase"))
             .select(col("user_id"), col("event_type"),
               unix_micros(col("ts")), col("event_id"))
             .as[(Long, String, Long, Long)].groupByKey(_._1),
-          steps = Seq("view", "click", "purchase"),
-          withinUs = Seq(86400L * 1000000L, 86400L * 1000000L))
+          new Stateful.FunnelBuffered(Seq("view", "click", "purchase"),
+            Seq(86400L * 1000000L, 86400L * 1000000L)))
           .toDF("user_id", "depth")
       }
     }

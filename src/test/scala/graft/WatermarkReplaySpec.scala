@@ -92,7 +92,7 @@ class WatermarkReplaySpec extends AnyFunSuite {
         .as[(Long, String, Long, Long)]
         .groupByKey(_._1)
       val name = s"wmcollision_${System.nanoTime()}"
-      val q = Stateful.scd2Buffered(grouped).toDF().writeStream
+      val q = Stateful.replay(grouped, new Stateful.Scd2Buffered).toDF().writeStream
         .format("memory").queryName(name).outputMode("update").start()
       try {
         // batch 1: the victim row + a max-ts row pushing wm to 10_000ms
@@ -137,7 +137,7 @@ class WatermarkReplaySpec extends AnyFunSuite {
     val batches = byArrival.grouped(40).toSeq ++ Seq(
       Seq((-1L, "s", maxTs + 2L * hourUs, -1L)),
       Seq((-1L, "s", maxTs + 4L * hourUs, -2L)))
-    val got = drain(batches, delay = "35 minutes")(Stateful.scd2Buffered)
+    val got = drain(batches, delay = "35 minutes")(Stateful.replay(_, new Stateful.Scd2Buffered))
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .filter(_._1 >= 0).sorted
     val expect = events.groupBy(_._1).toSeq.flatMap { case (k, rs) =>
@@ -152,7 +152,7 @@ class WatermarkReplaySpec extends AnyFunSuite {
   for (seed <- Seq(171, 172, 173)) {
     test(s"scd2Buffered ≡ batch change replay under bounded disorder (seed $seed)") {
       val (events, batches) = scenario(seed)
-      val got = drain(batches)(Stateful.scd2Buffered)
+      val got = drain(batches)(Stateful.replay(_, new Stateful.Scd2Buffered))
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
         .filter(_._1 >= 0).sorted
       val expect = events.groupBy(_._1).toSeq.flatMap { case (k, rs) =>
@@ -169,8 +169,8 @@ class WatermarkReplaySpec extends AnyFunSuite {
       val (events, batches) = scenario(seed)
       val steps = Seq("a", "b", "c")
       val withinUs = Seq(48L * hourUs, 48L * hourUs)
-      val got = drain(batches)(g =>
-          Stateful.funnelBuffered(g, steps, withinUs))
+      val got = drain(batches)(
+          Stateful.replay(_, new Stateful.FunnelBuffered(steps, withinUs)))
         .map(r => (r.getLong(0), r.getInt(1)))
         .filter(_._1 >= 0)
         .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
@@ -190,7 +190,7 @@ class WatermarkReplaySpec extends AnyFunSuite {
 
     test(s"asOfBuffered ≡ batch point-in-time replay under bounded disorder (seed $seed)") {
       val (events, batches) = scenario(seed)
-      val got = drain(batches)(g => Stateful.asOfBuffered(g, "a", "b"))
+      val got = drain(batches)(Stateful.replay(_, new Stateful.AsOfBuffered("a", "b")))
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .filter(_._1 >= 0).sorted
       val expect = events.groupBy(_._1).toSeq.flatMap { case (k, rs) =>
@@ -211,7 +211,7 @@ class WatermarkReplaySpec extends AnyFunSuite {
       // q190 two-gap shape on the property's alphabet
       val gaps = Map("a" -> 2L * hourUs)
       val dflt = 5L * hourUs
-      val got = drain(batches)(g => Stateful.sessionBuffered(g, gaps, dflt))
+      val got = drain(batches)(Stateful.replay(_, new Stateful.SessionBuffered(gaps, dflt)))
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .filter(_._1 >= 0)
         .groupBy(t => (t._1, t._2)).view.mapValues(_.map(_._3).max)
@@ -234,7 +234,7 @@ class WatermarkReplaySpec extends AnyFunSuite {
 
     test(s"gapBuffered ≡ batch lag-delta replay under bounded disorder (seed $seed)") {
       val (events, batches) = scenario(seed)
-      val got = drain(batches)(Stateful.gapBuffered)
+      val got = drain(batches)(Stateful.replay(_, new Stateful.GapBuffered))
         .map(r => (r.getString(0), r.getLong(1)))
         .filterNot(_._1 == "s")
         .groupBy(identity).view.mapValues(_.size).toMap
@@ -250,7 +250,7 @@ class WatermarkReplaySpec extends AnyFunSuite {
     test(s"rateBuffered ≡ batch sliding-window count replay under bounded disorder (seed $seed)") {
       val (events, batches) = scenario(seed)
       val windowUs = 24L * hourUs
-      val got = drain(batches)(g => Stateful.rateBuffered(g, windowUs))
+      val got = drain(batches)(Stateful.replay(_, new Stateful.RateBuffered(windowUs)))
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .filter(_._1 >= 0).sorted
       // local forward replay: each event counts the (ts, id)-ordered
@@ -268,7 +268,7 @@ class WatermarkReplaySpec extends AnyFunSuite {
 
     test(s"transitionBuffered ≡ batch pair replay under bounded disorder (seed $seed)") {
       val (events, batches) = scenario(seed)
-      val got = drain(batches)(Stateful.transitionBuffered)
+      val got = drain(batches)(Stateful.replay(_, new Stateful.TransitionBuffered))
         .map(r => (r.getString(0), r.getString(1)))
         .filterNot(p => p._1 == "s" || p._2 == "s")
         .groupBy(identity).view.mapValues(_.size).toMap

@@ -36,7 +36,7 @@ class DrainPartitionsSpec extends AnyFunSuite {
     assert(Paths.get(sf01).toFile.isDirectory)
     for (in <- Seq(MicroBatch.stageEventsSplit(spark, sf01, 4),
                    MicroBatch.stageEventsByTime(spark, sf01, 3),
-                   MicroBatch.stageEventsJitteredSentinel(spark, sf01, 6, 21600L, "8 HOURS")))
+                   MicroBatch.stageArrival(spark, sf01, MicroBatch.Arrival.BoundedJitter)))
       assert(parts(in, Some(1)) === 1, in)
     assert(parts(MicroBatch.stageEvents(sf01, 1), None) === 2) // 221 KB
   }

@@ -2,19 +2,20 @@
 """Regenerate COVERAGE.md's correctness-count lines from artifacts.
 
 Hand-written counts drifted from reality in rounds 3-5 (VERDICT r5
-wrong #3), so the footer is now derived: query names come from
-bench_out.json (the bench enumerates every SparkEntry query), the
-oracle-checked subset from the last Verify dump's oracle_sql.json,
-and the test count (optional) from `sbt test`'s summary line.
+wrong #3), so the footer is now derived from the last correctness dump
+(`python3 tools/check.py` runs graft.Verify into DUMP): every query
+writes one parquet dir named after it, beside oracle_sql.json, which
+holds the oracle-checked subset. The test count (optional) comes from
+`sbt test`'s summary line.
 
 Usage: python3 tools/coverage_footer.py [--tests N]
 """
 import json
+import os
 import re
 import sys
 
-BENCH = "bench_out.json"
-ORACLE = "/tmp/graft_verify/oracle_sql.json"
+DUMP = "/tmp/graft_verify"
 COV = "COVERAGE.md"
 BEGIN = "<!-- BEGIN GENERATED counts (tools/coverage_footer.py) -->"
 END = "<!-- END GENERATED counts -->"
@@ -23,8 +24,15 @@ tests = None
 if "--tests" in sys.argv:
     tests = int(sys.argv[sys.argv.index("--tests") + 1])
 
-all_queries = set(json.load(open(BENCH))["queries"])
-oracled = set(json.load(open(ORACLE)))
+oracle_path = os.path.join(DUMP, "oracle_sql.json")
+if not os.path.isfile(oracle_path):
+    sys.exit(f"no correctness dump at {DUMP} (missing oracle_sql.json); "
+             "run `python3 tools/check.py` first")
+all_queries = {n for n in os.listdir(DUMP)
+               if re.match(r"^q\d+_", n) and os.path.isdir(os.path.join(DUMP, n))}
+if not all_queries:
+    sys.exit(f"no query dirs in {DUMP}; run `python3 tools/check.py` first")
+oracled = set(json.load(open(oracle_path)))
 rows_only = sorted(all_queries - oracled)
 missing = sorted(oracled - all_queries)
 if missing:
