@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.lake.{NoForkLocalFileSystem, NoForkLocalFs}
+
 /** One place for session config so Verify/Bench/tests agree.
   *
   * - `nanosAsLong`: kept so a TIMESTAMP(NANOS) encoding of `events.ts`
@@ -15,6 +17,15 @@ import org.apache.spark.sql.SparkSession
   *   and per-batch drain transforms. Drains whose plan can hold state
   *   run on isolated per-run sessions whose count
   *   `MicroBatch.drainPartitions` sizes to the micro-batch volume.
+  * - `fs.file.impl` / `fs.AbstractFileSystem.file.impl`: every `file:`
+  *   path, through both Hadoop APIs (parquet writers use `FileSystem`,
+  *   streaming checkpoints and state stores `FileContext`), goes
+  *   through `graft.lake.NoForkLocalFs`, which sets permissions and
+  *   reads link status in-process. Hadoop's stock local FS forks a
+  *   `chmod`/`readlink` per checkpoint, state-store and sink file when
+  *   libhadoop is absent: one `stream_drain` run (seed 1, 4-cpu VM)
+  *   started 716 `chmod` and 1,328 `readlink` processes, and none
+  *   through these classes.
   */
 object GraftSession {
   def builder(cpus: String): SparkSession.Builder =
@@ -41,6 +52,8 @@ object GraftSession {
       // keeps Spark defaults here because the local measurements are
       // the only ones this repo can stand behind.
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName)
 
   /** Local parallelism of [[local]]'s default session: SPARK_GRAFT_CPUS,
     * else 4. Bench reports this number, so it must be the one used. */

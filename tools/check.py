@@ -11,6 +11,10 @@ of the shipped engine.
 Usage: python3 tools/check.py [sfdir] [outdir] [--skip-verify] [names...]
 """
 import json, math, re, subprocess, sys
+from pathlib import Path
+
+# the checkout that holds this script: Verify runs its code, not another's
+REPO = Path(__file__).resolve().parents[1]
 
 
 def load_exact(rel):
@@ -99,7 +103,7 @@ def main():
     if not args.skip_verify:
         r = subprocess.run(
             ["sbt", f'runMain graft.Verify {sf} {out}'],
-            cwd="/root/repo", capture_output=True, text=True)
+            cwd=REPO, capture_output=True, text=True)
         sys.stdout.write(r.stdout[-3000:])
         if r.returncode != 0:
             sys.stderr.write(r.stderr[-3000:])

@@ -9,10 +9,11 @@ included), so the local gate is at least as strict as the driver's
 hash. Run: python3 tools/selftest_check.py
 """
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 import check  # noqa: E402
 
 con = duckdb.connect()
