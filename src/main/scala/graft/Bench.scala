@@ -70,13 +70,6 @@ object Bench {
     // session, same interference profile as a single driver run);
     // per-query time = median across reps, total = sum of medians.
     val reps = GraftSession.positiveIntEnv("SPARK_GRAFT_BENCH_REPS", 3)
-    // In-query served≡scan proof legs are the ORACLE gate's job, not a
-    // per-rep bench cost (VERDICT r20 next #2): the bench times the
-    // served plan the engine would run in production. The returned
-    // relations are identical either way (Verify hashes the proofs-ON
-    // run against DuckDB every round); SPARK_GRAFT_PROVE=1 restores
-    // the r20-and-earlier timed-proofs behavior for A/B comparison.
-    queries.Qx.proofs = sys.env.get("SPARK_GRAFT_PROVE").contains("1")
     // Lifecycle-bound streaming drains re-measure checkpoint/state-store
     // I/O, not plan cost — their min tracks their median every round
     // (VERDICT r20 perf notes) — so extra reps carry no signal while
@@ -149,7 +142,7 @@ object Bench {
     val totalMin = minResults.map(_._2).sum
     // cpus = the session's parallelism; box_cpus = the machine's
     def line(rs: Seq[(String, Double)], ms: Seq[(String, Double)]): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_min":${fmt(totalMin)},"staging":${fmt(staging)},"total_with_staging":${fmt(total + staging)},"total_min_with_staging":${fmt(totalMin + staging)},"load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},"cpus":${GraftSession.cpus},"box_cpus":${Runtime.getRuntime.availableProcessors},"queries":${qmap(rs)},"mins":${qmap(ms)},"n_queries":${results.size},"n_errors":${errors.size},"errors":$errs,"reps":$reps,"lifecycle_reps":$lifecycleReps,"proofs":${queries.Qx.proofs},"sf":${Json.str(sfDir)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_min":${fmt(totalMin)},"staging":${fmt(staging)},"total_with_staging":${fmt(total + staging)},"total_min_with_staging":${fmt(totalMin + staging)},"load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},"cpus":${GraftSession.cpus},"box_cpus":${Runtime.getRuntime.availableProcessors},"queries":${qmap(rs)},"mins":${qmap(ms)},"n_queries":${results.size},"n_errors":${errors.size},"errors":$errs,"reps":$reps,"lifecycle_reps":$lifecycleReps,"sf":${Json.str(sfDir)}}"""
     // stdout: headline subset only — must fit inside the driver's tail.
     // Written straight to fd 1: sbt's non-forked run swaps System.out
     // for its logger, so a plain println comes out "[info] {...}" —

@@ -650,7 +650,7 @@ object Corpus {
     * incremental training pipeline needs (rank-based stratified
     * splits re-deal assignments when n changes; hash splits hold
     * proportions only in md5-expectation). Row-level map, no shuffle
-    * at all. q358 proves the stability in-query. */
+    * at all. R16Spec pins the stability on q358's corpus. */
   def hashSplit(docs: DataFrame, idCol: String = "doc_id",
                 trainNum: Int = 8, valNum: Int = 9,
                 den: Int = 10): DataFrame = {

@@ -557,8 +557,8 @@ object Dedup {
     * the stats it was built with; unseen shingles get df 0 — rarest
     * first). Any consistent total order preserves the recall-1.0
     * theorem, so the incremental result equals the full recompute
-    * filtered to incoming-touching pairs BIT-EXACTLY — q333 proves
-    * that equality in-query.
+    * filtered to incoming-touching pairs BIT-EXACTLY — R15dSpec pins
+    * that equality on q333's inputs.
     *
     * Scale shape: the one corpus-sized term is the frozen df
     * aggregate (a staged artifact in a real lake — counts are
@@ -703,9 +703,9 @@ object Dedup {
     * (pigeonhole needs only |A| − o_min + 1 DISTINCT shingles of A),
     * and the exact verify recount makes the output order-independent
     * — so the incremental result equals the full-union recompute
-    * restricted to incoming contained-sides BIT-EXACTLY (q360 proves
-    * that equality in-query). Prefixes come from the BATCH side only;
-    * the candidate space tracks the batch, never corpus². */
+    * restricted to incoming contained-sides BIT-EXACTLY (R16Spec pins
+    * that equality on q360's inputs). Prefixes come from the BATCH
+    * side only; the candidate space tracks the batch, never corpus². */
   def containmentJoinAgainst(incoming: DataFrame, corpus: DataFrame,
                              n: Int = 3, minConNum: Int = 9,
                              minConDen: Int = 10): DataFrame = {

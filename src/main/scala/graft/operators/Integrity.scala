@@ -81,10 +81,10 @@ object Integrity {
     * `delete` (only_b). The plan is DIFF-SIZED, not table-sized —
     * exactly what an anti-entropy repairer ships to the damaged
     * replica; applying it touches only the affected keys (a lake
-    * MERGE on the key). Correctness is provable in-query: b minus
-    * (deleted ∪ upserted keys) plus a's rows for (upserted ∪
-    * inserted) keys must equal a row-for-row — q356 runs that proof
-    * via except both directions before returning the plan. */
+    * MERGE on the key). Correctness: b minus (deleted ∪ upserted
+    * keys) plus a's rows for (upserted ∪ inserted) keys equals a
+    * row-for-row — R16Spec checks it by exceptAll both directions,
+    * on random damage and on q355's inputs. */
   def repairPlan(a: DataFrame, b: DataFrame, keyCol: String,
                  cols: Seq[String], buckets: Int = 64): DataFrame =
     merkleDiff(a, b, keyCol, cols, buckets)

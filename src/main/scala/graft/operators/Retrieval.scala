@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * (term, doc, pos) positional postings index. Every served plan
   * touches ONLY the query terms' postings — on a term-partitioned
   * cluster layout a partition-pruned point read, never a corpus scan —
-  * and every operator has a full-scan twin for the served≡scan
-  * in-query proofs (the q384/q405 discipline).
+  * and every operator has a full-scan twin, the reference the
+  * served≡scan specs (ServedTwinSpec, R20Spec) compare it against.
   *
   * DETERMINISM CONTRACT: per-doc contributions fold in TERM-SORTED
   * order through an explicit left-associated `aggregate()` chain from

@@ -592,7 +592,8 @@ object TextAnalysis {
     * component's min label equals the full component's min name
     * because each prior label already IS its subset's min. The
     * result is therefore BIT-IDENTICAL to [[goldenRecords]] over the
-    * union (proven in-query by q290), at delta cost. */
+    * union (R15DifferentialSpec pins it, q290's inputs included), at
+    * delta cost. */
   def goldenRecordsIncremental(existing: DataFrame, batch: DataFrame,
                                idCol: String, nameCol: String,
                                maxDist: Int,

@@ -249,9 +249,9 @@ object TextMining {
 
   /** The FULL-SCAN twin of [[phraseMatch]] — the same (doc_id, n_occ)
     * relation derived by direct adjacency counting over (doc_id,
-    * text), used by the served≡scan in-query proofs (the q384/q405
-    * discipline). Docs shorter than the phrase count 0 and are
-    * filtered; anchor positions are 1-based `split` slots (empty
+    * text), the reference the served≡scan specs compare
+    * [[phraseMatch]] against. Docs shorter than the phrase count 0 and
+    * are filtered; anchor positions are 1-based `split` slots (empty
     * tokens keep their slot — the postings builder's convention, so
     * both sides quantify over identical position arithmetic). */
   def phraseScan(docs: DataFrame, terms: Seq[String]): DataFrame = {

@@ -80,11 +80,7 @@ object R14Q {
     // CHRONOLOGICAL multi-batch drain and a `transformWithState`
     // keyed as-of (state = interleaved per-key history, the q238
     // backward rule) re-derives every enrichment per update, so the
-    // drained result hash-matches the batch point-in-time join. The
-    // q156 CDC-merge composition runs alongside: the same dimension
-    // stream maintains a lake table via idempotent mergeBatch, and
-    // the final snapshot must equal last-version-per-key (proven
-    // in-query) — current state from CDC, history from the processor.
+    // drained result hash-matches the batch point-in-time join.
     "q269_stream_cdc_asof" -> ((s, d) => {
       import s.implicits._
       val sink = graft.streaming.MicroBatch.updateRun(s, d,
@@ -99,40 +95,6 @@ object R14Q {
               col("value"))
             .as[(Long, Int, Long, Long, Double)].groupByKey(_._1))
           .toDF("user_id", "seq", "obs_id", "dim_id", "dim_value")
-      }
-      // q156 composition: the dim stream CDC-merges into a lake table;
-      // its final snapshot must be exactly the last version per key
-      val ev = Tables.events(s, d)
-      val dimT = graft.lake.LakeTable.createTemp(s,
-        ev.filter(col("event_type") === "signup").limit(0)
-          .select(col("user_id"), col("event_id"), col("value")),
-        "graft-cdcdim")
-      graft.streaming.MicroBatch.eachBatchRun(s,
-          graft.streaming.MicroBatch.stageEventsByTime(s, d, 3)) { (batch, bid) =>
-        val ups = graft.Tables.toEventTime(batch)
-          .filter(col("event_type") === "signup")
-          .withColumn("__rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("user_id"))
-              .orderBy(desc("ts"), desc("event_id"))))
-          .filter(col("__rn") === 1)
-          .select(col("user_id"), col("event_id"), col("value"))
-        dimT.mergeBatch(ups, Seq("user_id"), "graft-cdcdim", bid)
-      }
-      Qx.prove { // proof leg: Verify runs it, Bench times the drain itself
-        val expect = Tables.events(s, d)
-          .filter(col("event_type") === "signup")
-          .withColumn("__rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("user_id"))
-              .orderBy(desc("ts"), desc("event_id"))))
-          .filter(col("__rn") === 1)
-          .select(col("user_id"), col("event_id"), col("value"))
-        require(dimT.snapshot().select("user_id", "event_id", "value")
-            .except(expect).isEmpty &&
-            expect.except(dimT.snapshot()
-              .select("user_id", "event_id", "value")).isEmpty,
-          "CDC-merged dim table must equal last-version-per-key")
       }
       // converged enrichment: the last emission per observation
       sink.groupBy(col("user_id"), col("obs_id"))

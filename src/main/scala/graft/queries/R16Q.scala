@@ -13,8 +13,9 @@ import graft.queries.Qx._
   * streaming fragment face), cumulative-gains deciles for model eval,
   * exact HITS steps, the asymmetric set-CONTAINMENT join Jaccard
   * misses, deterministic stratified splits, and the Merkle repair
-  * plan with an in-query apply-and-prove. All oracle-gated; decimal
-  * width budgets mirror DuckDB's hard multiply cap (p1+p2 ≤ 38). */
+  * plan (its apply-and-reconcile identity pinned by R16Spec). All
+  * oracle-gated; decimal width budgets mirror DuckDB's hard multiply
+  * cap (p1+p2 ≤ 38). */
 object R16Q {
 
   private val stagedPairs =
@@ -221,11 +222,10 @@ object R16Q {
 
     // MERKLE REPAIR (r16): q342's diff turned into the minimal
     // reconciliation plan (upsert/insert/delete — DIFF-sized, what an
-    // anti-entropy repairer actually ships), then APPLIED in-query:
-    // b minus (delete ∪ upsert keys) plus a's rows for (upsert ∪
-    // insert) keys must equal a row-for-row — proven by except both
-    // directions (the q310 proof idiom) before the plan is returned.
-    // `Integrity.repairPlan`.
+    // anti-entropy repairer actually ships): b minus (delete ∪ upsert
+    // keys) plus a's rows for (upsert ∪ insert) keys equals a
+    // row-for-row (exceptAll both directions, pinned by R16Spec on
+    // this query's a/b). `Integrity.repairPlan`.
     "q355_merkle_repair" -> ((s, d) => {
       val cols = Seq("event_id", "user_id", "event_type", "props")
       val a = Tables.events(s, d).select(cols.map(col): _*)
@@ -235,20 +235,8 @@ object R16Q {
           concat(col("props"), lit(" "))).otherwise(col("props")))
         .unionByName(a.filter(col("event_id") % 49999 === 5)
           .withColumn("event_id", col("event_id") + 100000000L))
-      val plan = graft.operators.Integrity.repairPlan(
-        a, b, "event_id", cols, buckets = 64).transform(Qx.stageForProof)
-      Qx.prove { // proof leg: Verify applies the plan and proves it repairs
-        val drop = plan.filter(col("action").isin("delete", "upsert"))
-          .select(col("event_id"))
-        val take = plan.filter(col("action").isin("upsert", "insert"))
-          .select(col("event_id"))
-        val repaired = b.join(drop, Seq("event_id"), "left_anti")
-          .unionByName(a.join(take, Seq("event_id"), "left_semi"))
-          .localCheckpoint(true)
-        require(repaired.exceptAll(a).isEmpty && a.exceptAll(repaired).isEmpty,
-          "merkle repair must reconcile b to a exactly")
-      }
-      plan.orderBy("event_id")
+      graft.operators.Integrity.repairPlan(
+        a, b, "event_id", cols, buckets = 64).orderBy("event_id")
     }),
 
     // STREAMING MODE (r16): q346's per-type mode maintained in-stream
@@ -282,26 +270,15 @@ object R16Q {
     // HASH-THRESHOLD SPLIT + GROWTH-STABILITY PROOF (r16): the
     // growth-STABLE split design (assignment = pure function of the
     // id) vs q351's exact-proportion rank split (which re-deals when
-    // n changes). The query PROVES the stability contract in-query:
-    // splitting the corpus-minus-batch must assign every surviving
-    // doc identically to splitting the full corpus. `Corpus.hashSplit`.
+    // n changes). The stability contract — splitting the
+    // corpus-minus-batch assigns every surviving doc identically to
+    // splitting the full corpus — is pinned by R16Spec on this query's
+    // corpus. `Corpus.hashSplit`.
     "q358_stable_split" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val full = graft.operators.Corpus.hashSplit(docs)
+      graft.operators.Corpus.hashSplit(docs)
         .select(col("doc_id"), col("bucket"), col("split"))
-        .transform(Qx.stageForProof)
-      Qx.prove { // proof leg: Verify runs it, Bench times the split itself
-        val pre = graft.operators.Corpus.hashSplit(
-            docs.filter(col("doc_id") % 5 =!= 0))
-          .select(col("doc_id"), col("bucket").as("b0"),
-            col("split").as("split0"))
-          .localCheckpoint(true)
-        require(full.join(pre, "doc_id")
-          .filter(col("split") =!= col("split0") ||
-            col("bucket") =!= col("b0")).isEmpty,
-          "hash split must be stable under corpus growth")
-      }
-      full.orderBy("doc_id")
+        .orderBy("doc_id")
     }),
 
     // CHARACTER DIVERSITY (r16): per-doc Gini–Simpson over the first
@@ -324,21 +301,14 @@ object R16Q {
     // global order frozen on the CORPUS document frequencies (the
     // q333 index design; the containment prefix theorem holds under
     // ANY total order, and the exact verify recount makes the output
-    // order-independent). The query PROVES bit-identity to the full
-    // recompute restricted to incoming contained-sides, then returns
-    // the incremental result. `Dedup.containmentJoinAgainst`.
+    // order-independent). Bit-identity to the full recompute
+    // restricted to incoming contained-sides is pinned by R16Spec.
+    // `Dedup.containmentJoinAgainst`.
     "q360_containment_incremental" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val got = graft.operators.Dedup.containmentJoinAgainst(
+      graft.operators.Dedup.containmentJoinAgainst(
         docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0)).transform(Qx.stageForProof)
-      Qx.prove { // proof leg: Verify runs it, Bench times the incremental plan
-        val full = graft.operators.Dedup.containmentJoin(docs)
-          .filter(col("doc_a") % 5 === 0).localCheckpoint(true)
-        require(got.except(full).isEmpty && full.except(got).isEmpty,
-          "incremental containment must equal the full recompute")
-      }
-      got.orderBy("doc_a", "doc_b")
+        docs.filter(col("doc_id") % 5 =!= 0)).orderBy("doc_a", "doc_b")
     }),
 
     // STREAMING TREND TEST (r16): q357's statistic maintained
@@ -1046,8 +1016,8 @@ object R16Q {
     // mirrors q357/q361: same six exact sums, same width budget
     "q357_trend_test" -> trendSql,
 
-    // mirrors q358: the pure md5-threshold assignment; the in-query
-    // growth-stability proof needs no oracle leg
+    // mirrors q358: the pure md5-threshold assignment; growth
+    // stability is pinned by R16Spec, so it needs no oracle leg
     "q358_stable_split" ->
       """SELECT doc_id,
         |  CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
@@ -1085,7 +1055,7 @@ object R16Q {
         |FROM g ORDER BY doc_id""".stripMargin,
 
     // mirrors q360: the full quadratic replay restricted to incoming
-    // contained-sides — the incremental path is proven equal in-query,
+    // contained-sides — R16Spec pins the incremental path equal to it,
     // so the oracle needs no frozen-order replica (the q333 rule)
     "q360_containment_incremental" ->
       """WITH toks AS (
@@ -1487,8 +1457,8 @@ object R16Q {
         |SELECT doc_id, cluster FROM labels ORDER BY doc_id""".stripMargin,
 
     // mirrors q355: the direct by-key diff (q342's oracle) with the
-    // status→action mapping; the in-query apply-and-prove needs no
-    // oracle leg — a failed proof fails the query loudly
+    // status→action mapping; R16Spec applies the plan and pins that
+    // it reconciles b to a, so that identity needs no oracle leg
     "q355_merkle_repair" ->
       """WITH bb AS (
         |  SELECT event_id, user_id, event_type,

@@ -14,9 +14,9 @@ import graft.streaming.Stateful
   * contract a real Kafka CDC feed offers, where q381's chronological
   * requirement becomes the strict-mode option), and the maintained
   * incremental novelty index (the q362 corpus shingle relation as a
-  * lake artifact appended per admitted batch, read as-of N−1 and
-  * proven equal to the from-scratch rebuild in-query). All
-  * oracle-gated. */
+  * lake artifact appended per admitted batch, read as-of N−1; its
+  * equality to the from-scratch rebuild is pinned by ServedTwinSpec).
+  * All oracle-gated. */
 object R17Q {
 
   private val stagedIndex =
@@ -29,8 +29,8 @@ object R17Q {
     * batch (only never-seen shingles land, the q209/q360 incremental
     * shape), so version k+1 is exactly the index as-of batch k.
     * Memoized per (session, sf); the consumers time-travel it. */
-  private def noveltyIndexArtifact(s: org.apache.spark.sql.SparkSession,
-                                   d: String): graft.lake.LakeTable =
+  private[queries] def noveltyIndexArtifact(
+      s: org.apache.spark.sql.SparkSession, d: String): graft.lake.LakeTable =
     stagedIndex.getOrBuild(
       s"${Qx.sessionKey(s)}|$d", Qx.tableStamp(d, "documents")) {
       val docs = Tables.documents(s, d)
@@ -55,7 +55,7 @@ object R17Q {
     * batches because a doc lives in exactly one), plus the two
     * ("stats", ·, ·) corpus rows. Fragment size is vocabulary-bounded,
     * never corpus-bounded. */
-  private def bm25Fragment(batch: DataFrame): DataFrame = {
+  private[queries] def bm25Fragment(batch: DataFrame): DataFrame = {
     val stats = batch
       .select(size(split(col("text"), " ")).cast("long").as("len"))
       .agg(count(lit(1)).as("n"), sum(col("len")).cast("long").as("sl"))
@@ -82,8 +82,8 @@ object R17Q {
     * version k+1 is the index as-of batch k, any as-of read is one
     * bounded fold, and ANY query term resolves from the stored
     * relation. Memoized per (session, sf). */
-  private def bm25IndexArtifact(s: org.apache.spark.sql.SparkSession,
-                                d: String): graft.lake.LakeTable =
+  private[queries] def bm25IndexArtifact(s: org.apache.spark.sql.SparkSession,
+                                         d: String): graft.lake.LakeTable =
     stagedBm25.getOrBuild(
       s"${Qx.sessionKey(s)}|$d", Qx.tableStamp(d, "documents")) {
       val docs = Tables.documents(s, d)
@@ -165,32 +165,19 @@ object R17Q {
     // distinct-shingle relation is a maintained lake artifact (one
     // anti-join + append per admitted batch, `noveltyIndexArtifact`),
     // and batch 3's novelty scores probe the index AS-OF batch 2
-    // (time travel to the pre-admission version). The query PROVES
-    // both legs in-query: the final index equals the from-scratch
-    // distinct-shingle rebuild, and the as-of scores equal q362's
-    // from-scratch computation against batches 0–2. Returns the
-    // scored admission batch. `TextAnalysis.noveltyScoreAgainst`.
+    // (time travel to the pre-admission version). Returns the scored
+    // admission batch. ServedTwinSpec pins both identities: the final
+    // index equals the from-scratch distinct-shingle rebuild, and the
+    // as-of scores equal q362's from-scratch computation against
+    // batches 0–2. `TextAnalysis.noveltyScoreAgainst`.
     "q384_novelty_index_maintained" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val idx = noveltyIndexArtifact(s, d)
       val vs = idx.versions.sorted
       val asOfPrev = idx.snapshot(vs(vs.length - 2))
-      val got = graft.operators.TextAnalysis.noveltyScoreAgainst(
+      graft.operators.TextAnalysis.noveltyScoreAgainst(
         docs.filter(col("doc_id") % 4 === 3), asOfPrev)
-        .transform(Qx.stageForProof)
-      Qx.prove { // proof legs: Verify runs them, Bench times the served plan
-        val fullIdx = graft.operators.Dedup.shingles(docs, 3)
-          .select(col("shingle")).distinct()
-        require(idx.snapshot().except(fullIdx).isEmpty &&
-          fullIdx.except(idx.snapshot()).isEmpty,
-          "maintained novelty index must equal the from-scratch rebuild")
-        val scratch = graft.operators.TextAnalysis.noveltyScore(
-          docs.filter(col("doc_id") % 4 === 3),
-          docs.filter(col("doc_id") % 4 =!= 3))
-        require(got.except(scratch).isEmpty && scratch.except(got).isEmpty,
-          "as-of index scores must equal the from-scratch novelty scores")
-      }
-      got.orderBy("doc_id")
+        .orderBy("doc_id")
     }),
 
     // MANN–WHITNEY U (r17): do even- and odd-user cohorts draw spend
@@ -300,10 +287,10 @@ object R17Q {
     // with the q102 BM25 chain against the index AS-OF batch 2. The
     // query terms are NOT enumerated at build time: scoring resolves
     // them from the stored per-term relation at query time (an
-    // unanticipated term is one more lookup, df 0 if absent), and the
-    // in-query proof covers the WHOLE vocabulary — the folded as-of
-    // index must equal the from-scratch per-term aggregation over
-    // batches 0–2. `bm25IndexArtifact`.
+    // unanticipated term is one more lookup, df 0 if absent).
+    // ServedTwinSpec pins the WHOLE vocabulary: the folded as-of index
+    // equals the from-scratch per-term aggregation over batches 0–2.
+    // `bm25IndexArtifact`.
     "q392_bm25_index_maintained" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val idx = bm25IndexArtifact(s, d)
@@ -311,14 +298,6 @@ object R17Q {
       val asOfPrev = idx.snapshot(vs(vs.length - 2))
       val folded = asOfPrev.groupBy(col("kind"), col("term"))
         .agg(sum(col("v")).cast("long").as("v"))
-        .transform(Qx.stageForProof)
-      Qx.prove { // proof leg: Verify runs it, Bench times the served plan
-        val scratch = bm25Fragment(docs.filter(col("doc_id") % 4 =!= 3))
-          .select(col("kind"), col("term"), col("v"))
-        require(folded.except(scratch).isEmpty &&
-          scratch.except(folded).isEmpty,
-          "as-of BM25 index must equal the from-scratch per-term build")
-      }
       // query-time term resolution from the as-of relation — the terms
       // appear HERE only, never in the index build
       def dfOf(term: String) = coalesce(

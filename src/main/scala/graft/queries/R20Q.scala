@@ -11,11 +11,34 @@ import graft.streaming.Stateful
 /** Round-20 additions — the retrieval composition wave (arbitrary-arity
   * phrase matching through the extracted operator, proximity-aware BM25
   * over BOTH maintained indexes, a compaction story for maintained
-  * index artifacts with a served-identical proof) and the replay
+  * index artifacts that serves identical reads) and the replay
   * skeleton's SIXTH face (sliding-window rate — the first whose replay
   * state is a time-keyed bounded collection with eviction inside the
   * state value). All oracle-gated. */
 object R20Q {
+
+  /** q418's query terms (term-sorted, so the BM25 fold order is the
+    * term order). */
+  private[queries] val proximityTerms = Seq("data", "join", "spark")
+
+  /** q418's composition: a BM25 score relation plus, per consecutive
+    * query-term pair in fixed pair order, 1/(1 + min |Δpos|) from
+    * `gapOf` (exactly +0.0 when the pair is absent). The served plan
+    * and its full-scan twin both go through here. */
+  private[queries] def proximityScores(
+      bm: DataFrame, gapOf: (String, String) => DataFrame): DataFrame = {
+    val pairs = proximityTerms.zip(proximityTerms.tail)
+    val joined = pairs.zipWithIndex.foldLeft(bm) {
+      case (acc, ((a, b), k)) =>
+        acc.join(gapOf(a, b)
+          .select(col("doc_id"), col("gap").as(s"__g$k")),
+          Seq("doc_id"), "left")
+    }
+    joined.select(col("doc_id"),
+      pairs.indices.foldLeft(col("score")) { (acc, k) =>
+        acc + graft.operators.Retrieval.proximityTerm(col(s"__g$k"))
+      }.as("score"))
+  }
 
   val queries: Map[String, Q] = Map(
 
@@ -24,25 +47,15 @@ object R20Q {
     // 2-term join — a THREE-term phrase served through the extracted
     // `TextMining.phraseMatch` (n−1 position-arithmetic equi-joins
     // over the maintained (term, doc, pos) postings artifact, anchors
-    // shrinking monotonically), with occurrence multiplicity and the
-    // served≡scan adjacency proof retained (`TextMining.phraseScan`).
+    // shrinking monotonically), with occurrence multiplicity;
+    // ServedTwinSpec pins served ≡ `TextMining.phraseScan`.
     // Reference anchor: the keyword-containment retrieval shape at
     // dags/get_data/kpis_search.py:48-50 — phrase is its
     // exact-adjacency strengthening.
-    "q417_phrase_trigram" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val post = R19Q.posPostingsArtifact(s, d).snapshot()
-      val phrase = Seq("big", "order", "scan")
-      val served = graft.operators.TextMining.phraseMatch(post, phrase)
-        .transform(Qx.stageForProof)
-      Qx.prove { // proof leg: Verify runs it, Bench times the served plan
-        val scan = graft.operators.TextMining.phraseScan(docs, phrase)
-        require(served.except(scan).isEmpty && scan.except(served).isEmpty,
-          "postings-served trigram matches must equal the full-scan " +
-            "adjacency count")
-      }
-      served.orderBy("doc_id")
-    }),
+    "q417_phrase_trigram" -> ((s, d) =>
+      graft.operators.TextMining.phraseMatch(
+        R19Q.posPostingsArtifact(s, d).snapshot(), Seq("big", "order", "scan"))
+        .orderBy("doc_id")),
 
     // PROXIMITY-AWARE BM25 TOP-K (r20 — VERDICT r19 next #2): the
     // composition both maintained indexes exist FOR — the q405 BM25
@@ -52,47 +65,18 @@ object R20Q {
     // 1/(1 + min |Δpos|), exactly +0.0 when a pair is absent (the
     // bit-exact identity the chain discipline rests on), added in
     // fixed pair order. Every served read is term-pruned; the pair
-    // space is per-doc tf·tf, occurrence-bounded. In-query proof:
-    // the fully-composed served relation must equal the full-scan
-    // computation (bm25Scan + minPairGapScan) EXACTLY, pre-top-k;
-    // the oracle mirrors the whole addition chain token-for-token.
+    // space is per-doc tf·tf, occurrence-bounded. ServedTwinSpec pins
+    // the fully-composed served relation ≡ the full-scan computation
+    // (bm25Scan + minPairGapScan) EXACTLY, pre-top-k; the oracle
+    // mirrors the whole addition chain token-for-token.
     "q418_proximity_topk" -> ((s, d) => {
       import graft.operators.Retrieval
-      val docs = Tables.documents(s, d)
-      val postings = R18Q.postingsArtifact(s, d).snapshot()
       val positional = R19Q.posPostingsArtifact(s, d).snapshot()
-      val stats = R17Q.bm25FoldedIndex(s, d)
-      val qterms = Seq("data", "join", "spark") // term-sorted
-      val pairs = qterms.zip(qterms.tail) // consecutive query pairs
-      def compose(bm: DataFrame, gapOf: (String, String) => DataFrame) = {
-        val joined = pairs.zipWithIndex.foldLeft(bm) {
-          case (acc, ((a, b), k)) =>
-            acc.join(gapOf(a, b)
-              .select(col("doc_id"), col("gap").as(s"__g$k")),
-              Seq("doc_id"), "left")
-        }
-        joined.select(col("doc_id"),
-          pairs.indices.foldLeft(col("score")) { (acc, k) =>
-            acc + Retrieval.proximityTerm(col(s"__g$k"))
-          }.as("score"))
-      }
-      val served = compose(
-        Retrieval.bm25Served(postings, stats, qterms),
+      proximityScores(
+        Retrieval.bm25Served(R18Q.postingsArtifact(s, d).snapshot(),
+          R17Q.bm25FoldedIndex(s, d), proximityTerms),
         (a, b) => Retrieval.minPairGap(positional, a, b))
-        .transform(Qx.stageForProof)
-      Qx.prove { // proof leg: Verify runs it, Bench times the served plan
-        // checkpointed too: the two excepts below would otherwise
-        // recompute the 3-corpus-scan chain twice (r20 bench: 18 s →
-        // ~12 s, same rows)
-        val scan = compose(
-          Retrieval.bm25Scan(docs, stats, qterms),
-          (a, b) => Retrieval.minPairGapScan(docs, a, b))
-          .localCheckpoint(true)
-        require(served.except(scan).isEmpty && scan.except(served).isEmpty,
-          "index-served proximity scores must equal the full-scan " +
-            "computation")
-      }
-      served.orderBy(desc("score"), asc("doc_id")).limit(20)
+        .orderBy(desc("score"), asc("doc_id")).limit(20)
     }),
 
     // MAINTAINED-INDEX COMPACTION (r20 — VERDICT r19 next #3): the
@@ -101,12 +85,11 @@ object R20Q {
     // and the q227 OPTIMIZE machinery must run OVER the index without
     // disturbing a single served read. A fresh positional postings
     // index (4 ingest commits × 4-way writes = 16 small files) exports
-    // its full history to the Delta log, serves a phrase read, is
-    // bin-packed to ONE file (reads identical before/after — the
-    // served≡served proof), vacuums the 16 tombstoned originals, and
-    // the compacted single-file read still equals the full-scan
-    // adjacency truth. File count collapsed 16 → 1 is asserted, not
-    // assumed.
+    // its full history to the Delta log, is bin-packed to ONE file,
+    // vacuums the 16 tombstoned originals, and serves the phrase read
+    // from the compacted single file (ServedTwinSpec pins it ≡ the
+    // full-scan adjacency truth). File count collapsed 16 → 1 and the
+    // 16-file vacuum are asserted, not assumed.
     "q419_index_compaction" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       // fresh (non-memoized) index — this query rewrites its layout
@@ -117,32 +100,17 @@ object R20Q {
       val dest = Qx.tempDir("graft-pc-q").resolve("t")
       val nCommits = graft.lake.DeltaInterop.exportHistory(idx, dest)
       require(nCommits == 4, s"expected 4 exported commits, got $nCommits")
-      val phrase = Seq("order", "scan")
-      def serve() = graft.operators.TextMining.phraseMatch(
-        graft.lake.DeltaInterop.readDelta(s, dest), phrase)
-        .transform(Qx.stageForProof)
-      // the pre-compaction read exists only for the identity proof —
-      // the maintenance op itself (optimize + vacuum) always runs
-      val pre = if (Qx.proofs) Some(serve()) else None
       val res = graft.lake.DeltaInterop.optimize(s, dest)
       require(res.compactedFiles == 16 && res.newFiles == 1 &&
         res.carriedFiles == 0,
         s"expected the index's 16 ingest files packed into 1, got $res")
-      val post = serve()
-      pre.foreach(p =>
-        require(p.except(post).isEmpty && post.except(p).isEmpty,
-          "the served phrase read must be identical pre/post compaction"))
       val vacuumed = graft.lake.DeltaInterop.vacuumDelta(s, dest)
       require(vacuumed == 16,
         s"vacuum must reclaim exactly the 16 tombstoned ingest files, " +
           s"got $vacuumed")
-      Qx.prove { // proof leg: Verify runs it, Bench times the served plan
-        val scan = graft.operators.TextMining.phraseScan(docs, phrase)
-        require(post.except(scan).isEmpty && scan.except(post).isEmpty,
-          "the compacted single-file read must still equal the full-scan " +
-            "adjacency count")
-      }
-      post.orderBy("doc_id")
+      graft.operators.TextMining.phraseMatch(
+        graft.lake.DeltaInterop.readDelta(s, dest), Seq("order", "scan"))
+        .orderBy("doc_id")
     }),
 
     // MIN COVERING SPAN (r20): the classical positional-proximity
@@ -152,23 +120,14 @@ object R20Q {
     // combinations of max − min + 1; 3 = the trigram-tight case).
     // Arbitrary-arity `Retrieval.minSpan`: n−1 doc-equi-joins over
     // term-pruned reads, combination space per-doc Π tf — never
-    // corpus-bounded. All-integer output (no IEEE anywhere). In-query
-    // artifact proof: served ≡ the posexplode raw-text twin (no
-    // ingest batch dropped/doubled); the independent-computation
-    // check is the mirrored oracle itself.
-    "q422_min_span" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val positional = R19Q.posPostingsArtifact(s, d).snapshot()
-      val qterms = Seq("data", "join", "spark")
-      val served = graft.operators.Retrieval.minSpan(positional, qterms)
-        .transform(Qx.stageForProof)
-      Qx.prove { // proof leg: Verify runs it, Bench times the served plan
-        val scan = graft.operators.Retrieval.minSpanScan(docs, qterms)
-        require(served.except(scan).isEmpty && scan.except(served).isEmpty,
-          "index-served min spans must equal the raw-text derivation")
-      }
-      served.orderBy("doc_id")
-    }),
+    // corpus-bounded. All-integer output (no IEEE anywhere). R20Spec
+    // pins served ≡ the posexplode raw-text twin on this query's
+    // inputs (no ingest batch dropped/doubled); the
+    // independent-computation check is the mirrored oracle itself.
+    "q422_min_span" -> ((s, d) =>
+      graft.operators.Retrieval.minSpan(
+        R19Q.posPostingsArtifact(s, d).snapshot(), Seq("data", "join", "spark"))
+        .orderBy("doc_id")),
 
     // SLOPPY PHRASE (ordered within-k) RETRIEVAL (r20): the proximity
     // member between exact adjacency (q417, k = 1) and unordered
@@ -176,25 +135,14 @@ object R20Q {
     // each within 5 positions of the previous match, chains counted
     // with combinatorial multiplicity (`TextMining.orderedWithin`:
     // n−1 doc-equi-joins with band residuals, chain space per doc
-    // window-bounded at Π min(tf, k)). All-integer. Artifact proof
-    // against the posexplode raw-text twin; the independent scan is
-    // the mirrored BETWEEN-join oracle.
-    "q424_sloppy_phrase" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val positional = R19Q.posPostingsArtifact(s, d).snapshot()
-      val qterms = Seq("data", "join", "spark")
-      val served = graft.operators.TextMining
-        .orderedWithin(positional, qterms, k = 5L)
-        .transform(Qx.stageForProof)
-      Qx.prove { // proof leg: Verify runs it, Bench times the served plan
-        val scan = graft.operators.TextMining
-          .orderedWithinScan(docs, qterms, k = 5L)
-        require(served.except(scan).isEmpty && scan.except(served).isEmpty,
-          "index-served sloppy-phrase chains must equal the raw-text " +
-            "derivation")
-      }
-      served.orderBy("doc_id")
-    }),
+    // window-bounded at Π min(tf, k)). All-integer. R20Spec pins
+    // served ≡ the posexplode raw-text twin on this query's inputs;
+    // the independent scan is the mirrored BETWEEN-join oracle.
+    "q424_sloppy_phrase" -> ((s, d) =>
+      graft.operators.TextMining.orderedWithin(
+        R19Q.posPostingsArtifact(s, d).snapshot(), Seq("data", "join", "spark"),
+        k = 5L)
+        .orderBy("doc_id")),
 
     // STREAM-MAINTAINED POSITIONAL POSTINGS INDEX (r20): the q416
     // index family maintained BY THE STREAM itself — each micro-batch
@@ -206,9 +154,10 @@ object R20Q {
     // events in many batches is indexed EXACTLY ONCE by algebra
     // (anti-join), not by dedup bookkeeping, and batch redelivery is a
     // no-op under the (appId, batchId) txn contract. The served phrase
-    // read over the final index must equal the full-scan adjacency
-    // truth over exactly the mapped doc subset — served≡scan, plus
-    // the mirrored oracle recomputing the subset from raw events.
+    // read over the final index equals the full-scan adjacency truth
+    // over exactly the mapped doc subset (served≡scan, pinned by
+    // R20Spec), and the mirrored oracle recomputes the subset from raw
+    // events.
     "q423_stream_postings_maintained" -> ((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val index = graft.streaming.MicroBatch.appendRunPerBatchAgainstSink(
@@ -225,19 +174,8 @@ object R20Q {
             else cand // the pre-first-commit empty sink has no schema
           R19Q.positionalFragment(newDocs)
       }
-      val phrase = Seq("spark", "join")
-      val served = graft.operators.TextMining.phraseMatch(index, phrase)
-        .transform(Qx.stageForProof)
-      Qx.prove { // proof leg: Verify runs it, Bench times the served plan
-        val mapped = Tables.events(s, d)
-          .select((col("event_id") % 500).as("doc_id")).distinct()
-        val scan = graft.operators.TextMining
-          .phraseScan(docs.join(mapped, "doc_id"), phrase)
-        require(served.except(scan).isEmpty && scan.except(served).isEmpty,
-          "stream-maintained postings must serve exactly the mapped " +
-            "subset's adjacency truth")
-      }
-      served.orderBy("doc_id")
+      graft.operators.TextMining.phraseMatch(index, Seq("spark", "join"))
+        .orderBy("doc_id")
     }),
 
     // TERM-CLUSTERED POSTINGS with BLOOM-PRUNED serving (r20): the
@@ -249,9 +187,9 @@ object R20Q {
     // directory carrying a bloom on term, and the served phrase read
     // goes through `phraseMatchVia` with a `scanPrunedEq` lookup per
     // term: the pruning assertion REQUIRES each probe to keep ≤ 1/4
-    // of the directories, and the pruned read must equal both the
-    // pre-cluster flat read (layout moves bytes, never rows) and the
-    // full-scan adjacency truth.
+    // of the directories. Layout moves bytes, never rows:
+    // ServedTwinSpec pins the pruned read ≡ the full-scan adjacency
+    // truth.
     "q425_clustered_postings" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       // fresh index — this query rewrites its layout
@@ -260,10 +198,6 @@ object R20Q {
       val idx = graft.lake.LakeTable.createTemp(s, frag(0), "graft-clq")
       (1 to 3).foreach(k => idx.append(frag(k)))
       val phrase = Seq("spark", "join")
-      // the pre-cluster flat read exists only for the identity proof —
-      // the layout rewrite and the pruned serving always run
-      val flat = if (Qx.proofs) Some(graft.operators.TextMining
-        .phraseMatch(idx.snapshot(), phrase).localCheckpoint(true)) else None
       idx.optimizeClusterBy("term", buckets = 16)
       phrase.foreach { t =>
         val (kept, total) = idx.prunedDirsEq("term", t)
@@ -271,19 +205,8 @@ object R20Q {
           s"expected a genuinely pruned read for '$t', " +
             s"kept ${kept.size}/$total dirs")
       }
-      val served = graft.operators.TextMining.phraseMatchVia(
-        t => idx.scanPrunedEq("term", t), phrase).transform(Qx.stageForProof)
-      flat.foreach(f =>
-        require(served.except(f).isEmpty && f.except(served).isEmpty,
-          "the clustered bloom-pruned read must equal the pre-cluster " +
-            "flat read"))
-      Qx.prove { // proof leg: Verify runs it, Bench times the served plan
-        val scan = graft.operators.TextMining.phraseScan(docs, phrase)
-        require(served.except(scan).isEmpty && scan.except(served).isEmpty,
-          "the clustered read must still equal the full-scan adjacency " +
-            "truth")
-      }
-      served.orderBy("doc_id")
+      graft.operators.TextMining.phraseMatchVia(
+        t => idx.scanPrunedEq("term", t), phrase).orderBy("doc_id")
     }),
 
     // OUT-OF-ORDER STREAMING SLIDING-WINDOW RATE (r20 — VERDICT r19

@@ -95,6 +95,21 @@ class R15DifferentialSpec extends AnyFunSuite {
     assert(inc0 === full0)
   }
 
+  test("incremental golden records on q290's inputs (sf0.01) ≡ full " +
+      "recompute") {
+    val sf = TestSpark.sf001
+    val blocks = Seq(
+      split(col("p_name"), " ").getItem(0),
+      element_at(split(col("p_name"), " "), -1))
+    val inc = SparkEntry.queries("q290_incremental_entities")(spark, sf)
+    val full = graft.operators.TextAnalysis.goldenRecords(
+      graft.Tables.part(spark, sf), "p_partkey", "p_name", maxDist = 3,
+      blockExprs = blocks)
+    assert(inc.except(full).isEmpty && full.except(inc).isEmpty,
+      "incremental fold must equal the full recompute bit-for-bit")
+    assert(!full.isEmpty)
+  }
+
   test("weighted handles multi-count fragments and duplicate keys") {
     // two fragments both carrying (g, 5) with different counts: the
     // read-side sum must see 5 occurrences total (rank arithmetic is

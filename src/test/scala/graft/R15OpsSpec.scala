@@ -331,6 +331,17 @@ class R15OpsSpec extends AnyFunSuite {
     assert(TextAnalysis.dupSpans(batch, w = 4, minDocs = 2).isEmpty)
   }
 
+  test("dupSpansIncremental on q310's inputs (sf0.01) ≡ the full union " +
+      "recompute restricted to batch docs") {
+    val sf = TestSpark.sf001
+    val inc = SparkEntry.queries("q310_incremental_dupspans")(spark, sf)
+    val full = TextAnalysis.dupSpans(graft.Tables.documents(spark, sf),
+      w = 8, minDocs = 2).filter(col("doc_id") % 5 === 0)
+    assert(inc.except(full).isEmpty && full.except(inc).isEmpty,
+      "incremental dup spans must equal the full recompute")
+    assert(!full.isEmpty)
+  }
+
   // ---------------- cusum fragments ----------------
 
   test("cusumFromDaily: fragmented day counts ≡ the batch fold") {

@@ -101,6 +101,18 @@ class R15dSpec extends AnyFunSuite {
       "fixture covers batch-internal or batch-corpus pairs")
   }
 
+  test("setSimilarityJoinAgainst on q333's inputs (sf0.01) ≡ the full " +
+      "join filtered to batch-touching pairs") {
+    val sf = TestSpark.sf001
+    val inc = SparkEntry.queries("q333_setsim_incremental")(spark, sf)
+    val full = Dedup.setSimilarityJoin(graft.Tables.documents(spark, sf),
+        n = 3, minJacNum = 4, minJacDen = 5)
+      .filter(col("doc_a") % 7 === 0 || col("doc_b") % 7 === 0)
+    assert(inc.exceptAll(full).isEmpty && full.exceptAll(inc).isEmpty,
+      "incremental set-similarity diverged from the full recompute")
+    assert(!full.isEmpty)
+  }
+
   test("setSimilarityJoinAgainst rejects overlapping doc-id spaces") {
     val d = corpus(5).toDF("doc_id", "text")
     intercept[IllegalArgumentException] {

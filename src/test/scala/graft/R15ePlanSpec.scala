@@ -66,17 +66,11 @@ class R15ePlanSpec extends AnyFunSuite {
     }
 
   test("q330/q333: prefix joins stay equi; windows doc-partitioned") {
-    import org.apache.spark.sql.functions.col
-    val docs = graft.Tables.documents(spark, sf)
-    // q333's registered query returns a checkpointed relation, so pin
-    // the OPERATOR plans directly (the same pipelines the queries run)
+    // q330's operator plan; q333's registered query plan
     val plans = Seq(
-      "q330" -> graft.operators.Dedup.setSimilarityJoin(docs)
-        .queryExecution.sparkPlan,
-      "q333" -> graft.operators.Dedup.setSimilarityJoinAgainst(
-        docs.filter(col("doc_id") % 7 === 0),
-        docs.filter(col("doc_id") % 7 =!= 0))
-        .queryExecution.sparkPlan)
+      "q330" -> graft.operators.Dedup.setSimilarityJoin(
+        graft.Tables.documents(spark, sf)).queryExecution.sparkPlan,
+      "q333" -> plan("q333_setsim_incremental"))
     plans.foreach { case (name, p) =>
       noLoopJoins(p, name)
       val wins = p.collect { case w: WindowExec => w }

@@ -89,13 +89,5 @@ class R16PlanSpec extends AnyFunSuite {
     noLoopJoins(
       SparkEntry.queries("q347_hits_scores")(spark, sf)
         .queryExecution.sparkPlan, "q347")
-    // and the q355 repair plan's diff joins likewise (operator level —
-    // the registered query checkpoints, hiding the whole-query plan)
-    import spark.implicits._
-    val a = (1L to 50L).map(k => (k, s"v$k")).toDF("k", "v")
-    val b = a.filter(col("k") % 7 =!= 0)
-    noLoopJoins(graft.operators.Integrity.repairPlan(
-      a, b, "k", Seq("k", "v"), buckets = 8).queryExecution.sparkPlan,
-      "repairPlan")
   }
 }

@@ -14,6 +14,7 @@ class R16Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+
   // ---------------- giniExact ----------------
 
   test("giniExact ≡ rank-sum replay; all-zero group yields NULL gini") {
@@ -341,6 +342,20 @@ class R16Spec extends AnyFunSuite {
     assert(full.values.toSet == Set("train", "val", "test"))
   }
 
+  test("hashSplit on q358's corpus (sf0.01): the registered split is " +
+      "stable under dropping the doc_id % 5 = 0 batch") {
+    val sf01 = TestSpark.sf001
+    val full = SparkEntry.queries("q358_stable_split")(spark, sf01)
+    val pre = Corpus.hashSplit(
+        graft.Tables.documents(spark, sf01).filter(col("doc_id") % 5 =!= 0))
+      .select(col("doc_id"), col("bucket").as("b0"), col("split").as("split0"))
+    val joined = full.join(pre, "doc_id")
+    assert(joined.filter(col("split") =!= col("split0") ||
+      col("bucket") =!= col("b0")).isEmpty,
+      "hash split must be stable under corpus growth")
+    assert(!joined.isEmpty)
+  }
+
   // ---------------- modeFromCounts ----------------
 
   test("modeFromCounts: arbitrary fragmenting folds to the one-shot mode") {
@@ -387,6 +402,17 @@ class R16Spec extends AnyFunSuite {
     assert(got == full,
       s"missed ${full -- got}, extra ${got -- full}")
     assert(got.nonEmpty, "the planted prefixes should produce containments")
+  }
+
+  test("containmentJoinAgainst on q360's inputs (sf0.01) ≡ the full " +
+      "recompute restricted to incoming contained-sides") {
+    val sf01 = TestSpark.sf001
+    val got = SparkEntry.queries("q360_containment_incremental")(spark, sf01)
+    val full = Dedup.containmentJoin(graft.Tables.documents(spark, sf01))
+      .filter(col("doc_a") % 5 === 0)
+    assert(got.except(full).isEmpty && full.except(got).isEmpty,
+      "incremental containment must equal the full recompute")
+    assert(!full.isEmpty)
   }
 
   // ---------------- giniFromCounts ----------------
@@ -851,5 +877,31 @@ class R16Spec extends AnyFunSuite {
     val repaired = bdf.join(drop, Seq("k"), "left_anti")
       .unionByName(adf.join(take, Seq("k"), "left_semi"))
     assert(repaired.exceptAll(adf).isEmpty && adf.exceptAll(repaired).isEmpty)
+  }
+
+  test("repairPlan on q355's inputs (sf0.01): applying the registered " +
+      "plan reconciles b to a exactly") {
+    val sf01 = TestSpark.sf001
+    // q355's replicas: b drops one event, pads the props of hash
+    // bucket 3 and adds one re-keyed copy
+    val cols = Seq("event_id", "user_id", "event_type", "props")
+    val a = graft.Tables.events(spark, sf01).select(cols.map(col): _*)
+    val bkt = Integrity.bucketExpr("event_id", 64)
+    val b = a.filter(col("event_id") % 49999 =!= 3)
+      .withColumn("props", when(bkt === 3,
+        concat(col("props"), lit(" "))).otherwise(col("props")))
+      .unionByName(a.filter(col("event_id") % 49999 === 5)
+        .withColumn("event_id", col("event_id") + 100000000L))
+    val plan = SparkEntry.queries("q355_merkle_repair")(spark, sf01)
+      .localCheckpoint(true)
+    val drop = plan.filter(col("action").isin("delete", "upsert"))
+      .select(col("event_id"))
+    val take = plan.filter(col("action").isin("upsert", "insert"))
+      .select(col("event_id"))
+    val repaired = b.join(drop, Seq("event_id"), "left_anti")
+      .unionByName(a.join(take, Seq("event_id"), "left_semi"))
+    assert(repaired.exceptAll(a).isEmpty && a.exceptAll(repaired).isEmpty,
+      "merkle repair must reconcile b to a exactly")
+    assert(!plan.isEmpty)
   }
 }

@@ -185,6 +185,28 @@ class R20Spec extends AnyFunSuite {
     assert(viaWithin == viaPhrase)
   }
 
+  test("minSpan on q422's inputs (sf0.01): index-served ≡ minSpanScan") {
+    val sf01 = TestSpark.sf001
+    val served = SparkEntry.queries("q422_min_span")(spark, sf01)
+    val scan = graft.operators.Retrieval.minSpanScan(
+      graft.Tables.documents(spark, sf01), Seq("data", "join", "spark"))
+    assert(served.except(scan).isEmpty && scan.except(served).isEmpty,
+      "index-served min spans must equal the raw-text derivation")
+    assert(!scan.isEmpty)
+  }
+
+  test("orderedWithin on q424's inputs (sf0.01): index-served ≡ " +
+      "orderedWithinScan") {
+    val sf01 = TestSpark.sf001
+    val served = SparkEntry.queries("q424_sloppy_phrase")(spark, sf01)
+    val scan = graft.operators.TextMining.orderedWithinScan(
+      graft.Tables.documents(spark, sf01), Seq("data", "join", "spark"),
+      k = 5L)
+    assert(served.except(scan).isEmpty && scan.except(served).isEmpty,
+      "index-served sloppy-phrase chains must equal the raw-text derivation")
+    assert(!scan.isEmpty)
+  }
+
   test("minSpan rejects repeated terms loud (one occurrence must not " +
       "cover two phrase slots)") {
     intercept[IllegalArgumentException] {
@@ -258,6 +280,22 @@ class R20Spec extends AnyFunSuite {
     val indexed = index.select(col("doc_id")).distinct()
     assert(indexed.except(mapped).isEmpty && mapped.except(indexed).isEmpty,
       "indexed doc set diverged from the mapped subset")
+  }
+
+  test("q423 on its own inputs (sf0.01): the stream-maintained index " +
+      "serves exactly the mapped subset's phrase matches (≡ phraseScan)") {
+    val sf01 = TestSpark.sf001
+    val served = SparkEntry.queries("q423_stream_postings_maintained")(
+      spark, sf01)
+    val mapped = graft.Tables.events(spark, sf01)
+      .select((col("event_id") % 500).as("doc_id")).distinct()
+    val scan = graft.operators.TextMining.phraseScan(
+      graft.Tables.documents(spark, sf01).select(col("doc_id"), col("text"))
+        .join(mapped, "doc_id"), Seq("spark", "join"))
+    assert(served.except(scan).isEmpty && scan.except(served).isEmpty,
+      "stream-maintained postings must serve exactly the mapped " +
+        "subset's adjacency truth")
+    assert(!scan.isEmpty)
   }
 
   test("RateBuffered rejects a non-positive window loud") {

@@ -3,13 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-21 OPTIMIZATION pins — the round changes operator internals
-  * and the proof-leg gating without touching any query's result:
+/** Round-21 OPTIMIZATION pins — operator internals that changed
+  * without touching any query's result:
   *
-  *  - `Qx.proofs` gates the in-query served≡scan twins (Bench clears
-  *    it, Verify sets it): a proof-carrying query must return
-  *    BIT-IDENTICAL rows with proofs on and off — the served side is
-  *    the returned relation either way.
   *  - `Stateful.RateBuffered` keeps its ring as a Vector with an
   *    indexed prefix scan (amortized O(1) per event; the r20 immutable
   *    Seq shape copied the whole ring per event) — a hot key with far
@@ -23,39 +19,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class R21OptSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private val sf = "/root/testdata/sf0.001"
-
-  test("proofs off returns bit-identical rows to proofs on " +
-      "(q405 postings top-k, the served≡scan flagship)") {
-    val q = SparkEntry.queries("q405_postings_topk")
-    val before = graft.queries.Qx.proofs
-    try {
-      graft.queries.Qx.proofs = true
-      val withProof = q(spark, sf).collect().toSeq
-      graft.queries.Qx.proofs = false
-      val without = q(spark, sf).collect().toSeq
-      assert(withProof == without,
-        "gating the proof legs changed the returned relation")
-      assert(withProof.nonEmpty)
-    } finally graft.queries.Qx.proofs = before
-  }
-
-  test("proofs off returns bit-identical rows to proofs on " +
-      "(q419 index compaction — the maintenance op itself must still run)") {
-    val q = SparkEntry.queries("q419_index_compaction")
-    val before = graft.queries.Qx.proofs
-    try {
-      graft.queries.Qx.proofs = true
-      val withProof = q(spark, sf).collect().toSeq
-      graft.queries.Qx.proofs = false
-      // the proofs-off body still exports, optimizes (16→1 asserted
-      // inside) and vacuums — only the identity twins are skipped
-      val without = q(spark, sf).collect().toSeq
-      assert(withProof == without,
-        "gating the proof legs changed the compacted served read")
-    } finally graft.queries.Qx.proofs = before
-  }
 
   test("RateBuffered: hot key with 5000 in-order events counts exactly " +
       "and the ring never exceeds the in-window event count") {
