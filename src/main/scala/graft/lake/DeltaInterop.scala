@@ -9,13 +9,13 @@ import java.util.zip.CRC32
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, regexp_replace}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
 /** Delta-Lake wire-format interop for [[LakeTable]] — the export/import
@@ -38,6 +38,15 @@ import org.apache.spark.sql.types._
   *    (RFC-2396 percent-encoded per the spec), file size,
   *    modificationTime, `dataChange: true`, and — for partitioned
   *    exports — the `partitionValues` string map.
+  *
+  * The three version-0 exporters ([[exportSnapshot]],
+  * [[exportSnapshotMapped]], [[exportSnapshotDV]]) share one
+  * write → walk → `_delta_log/0…0.json` path (`exportVersion0`); each
+  * action kind has one builder (`protocolAction`, `metaDataAction`,
+  * `addAction`, `removeAction`), and hive partition directories decode
+  * through Spark's own inverse of its path escaping
+  * (`InteropIO.walkHive`, shared with [[IcebergInterop]]).
+  * `graft.lake.InteropShapeSpec` pins every log action field by field.
   *
   * Import replays a foreign log the way a real Delta reader does
   * (VERDICT r8 wrong #1 made this path honest):
@@ -92,7 +101,8 @@ import org.apache.spark.sql.types._
   */
 object DeltaInterop {
 
-  private def mapper = new ObjectMapper()
+  import InteropIO.{mapper, normPathCol, parquetFiles, parquetRowCount, rewriteBin,
+    uriRawPath, walkHive}
 
   private val JsonFile = """(\d{20})\.json""".r
   private val CkSingle = """(\d{20})\.checkpoint\.parquet""".r
@@ -287,21 +297,6 @@ object DeltaInterop {
     data
   }
 
-  /** Canonical absolute-path form shared by the DV anti-join's build
-    * (log paths) and probe (`_metadata.file_path` URIs) sides. */
-  private def normPathCol(c: org.apache.spark.sql.Column) =
-    regexp_replace(c, "^file:/+", "/")
-
-  /** The build-side twin of [[normPathCol]]: the percent-encoded
-    * absolute path of a local file, byte-for-byte the form Spark's
-    * `_metadata.file_path` reports (minus the `file:` scheme). A
-    * hive-partition directory may legally contain characters the URI
-    * form escapes (`o_col=NOT SPECIFIED` probes as `NOT%20SPECIFIED`),
-    * so keying either side of the DV match on the LITERAL filesystem
-    * path silently orphans that file's deletion vector — rows
-    * resurrect. Both sides must live in encoded space. */
-  private def uriRawPath(p: Path): String = p.toUri.getRawPath
-
   // ---- export ------------------------------------------------------------
 
   /** Export `table`'s snapshot at `version` (default: latest) as a
@@ -323,38 +318,23 @@ object DeltaInterop {
   def exportSnapshot(table: LakeTable, destRoot: Path, version: Long = -1L,
                      partitionBy: Seq[String] = Nil): Int = {
     val df = table.snapshot(version)
-    require(partitionBy.forall(df.columns.contains),
-      s"partition columns ${partitionBy.mkString(",")} not all in ${df.columns.mkString(",")}")
-    if (partitionBy.isEmpty) df.write.mode("error").parquet(destRoot.toString)
-    else df.write.mode("error").partitionBy(partitionBy: _*).parquet(destRoot.toString)
-    val files = walkDataFiles(destRoot, partitionBy)
-    val m = mapper
-    val actions = Seq.newBuilder[String]
+    requireColumns(df, partitionBy)
     // CHECK constraints export as the real Delta representation:
     // `delta.constraints.<name>` configuration keys, with the writer
     // protocol raised to 3 (the checkConstraints writer feature) so a
     // spec-faithful engine knows to enforce them on write
     val checkCfg = table.checksAt(version).map { case (n, e) =>
       s"delta.constraints.$n" -> e }
-    if (checkCfg.isEmpty) actions += m.writeValueAsString(protocolAction(m))
-    else {
-      val p = m.createObjectNode()
-      p.putObject("protocol").put("minReaderVersion", 1).put("minWriterVersion", 3)
-      actions += m.writeValueAsString(p)
+    exportVersion0(df, destRoot, partitionBy) { files =>
+      Seq(protocolAction(1, if (checkCfg.isEmpty) 2 else 3),
+        metaDataAction(UUID.randomUUID().toString, df.schema.json, partitionBy,
+          createdTime = Some(Files.getLastModifiedTime(destRoot).toMillis),
+          configuration = checkCfg)) ++
+        files.map { case (rel, partVals) =>
+          writtenAdd(destRoot, rel, partVals,
+            stats = Some(fileStats(table.spark, destRoot.resolve(rel))))
+        }
     }
-    actions += m.writeValueAsString(
-      metaDataAction(m, UUID.randomUUID().toString, df.schema.json, partitionBy,
-        createdTime = Some(Files.getLastModifiedTime(destRoot).toMillis),
-        configuration = checkCfg))
-    files.foreach { case (rel, partVals) =>
-      actions += m.writeValueAsString(
-        addAction(m, rel, partVals, Files.size(destRoot.resolve(rel)),
-          Files.getLastModifiedTime(destRoot.resolve(rel)).toMillis,
-          stats = Some(fileStats(table.spark, m, destRoot.resolve(rel)))))
-    }
-    Files.createDirectories(destRoot.resolve("_delta_log"))
-    Files.write(logPath(destRoot, 0L), actions.result().asJava)
-    files.size
   }
 
   /** Export `table`'s snapshot as a COLUMN-MAPPED Delta table (modes
@@ -375,8 +355,7 @@ object DeltaInterop {
                            version: Long = -1L): Int = {
     require(mode == "name" || mode == "id", s"unsupported mapping mode $mode")
     val df = table.snapshot(version)
-    require(partitionBy.forall(df.columns.contains),
-      s"partition columns ${partitionBy.mkString(",")} not all in ${df.columns.mkString(",")}")
+    requireColumns(df, partitionBy)
     val fields = df.schema.fields
     val physOf: Map[String, String] =
       fields.map(f => f.name -> s"col-${UUID.randomUUID()}").toMap
@@ -391,57 +370,44 @@ object DeltaInterop {
       col(f.name).as(physOf(f.name),
         new MetadataBuilder().putLong("parquet.field.id", i + 1L).build())
     }: _*)
-    val physParts = partitionBy.map(physOf)
-    if (physParts.isEmpty) physDf.write.mode("error").parquet(destRoot.toString)
-    else physDf.write.mode("error").partitionBy(physParts: _*).parquet(destRoot.toString)
-    val files = walkDataFiles(destRoot, physParts)
-    val m = mapper
-    val actions = Seq.newBuilder[String]
-    actions += {
-      val n = m.createObjectNode()
-      n.putObject("protocol").put("minReaderVersion", 2).put("minWriterVersion", 5)
-      m.writeValueAsString(n)
+    exportVersion0(physDf, destRoot, partitionBy.map(physOf)) { files =>
+      Seq(protocolAction(2, 5),
+        metaDataAction(UUID.randomUUID().toString, mappedSchema.json,
+          partitionBy, // LOGICAL names per the spec
+          createdTime = Some(Files.getLastModifiedTime(destRoot).toMillis),
+          configuration = Map(
+            "delta.columnMapping.mode" -> mode,
+            "delta.columnMapping.maxColumnId" -> fields.length.toString))) ++
+        files.map { case (rel, partVals) => writtenAdd(destRoot, rel, partVals) }
     }
-    actions += m.writeValueAsString(
-      metaDataAction(m, UUID.randomUUID().toString, mappedSchema.json,
-        partitionBy, // LOGICAL names per the spec
-        createdTime = Some(Files.getLastModifiedTime(destRoot).toMillis),
-        configuration = Map(
-          "delta.columnMapping.mode" -> mode,
-          "delta.columnMapping.maxColumnId" -> fields.length.toString)))
-    files.foreach { case (rel, partVals) =>
-      actions += m.writeValueAsString(
-        addAction(m, rel, partVals, Files.size(destRoot.resolve(rel)),
-          Files.getLastModifiedTime(destRoot.resolve(rel)).toMillis))
-    }
+  }
+
+  private def requireColumns(df: DataFrame, partitionBy: Seq[String]): Unit =
+    require(partitionBy.forall(df.columns.contains),
+      s"partition columns ${partitionBy.mkString(",")} not all in ${df.columns.mkString(",")}")
+
+  /** The one version-0 export path: write `data` (one hive directory
+    * level per `dirCols` column), walk the files it wrote, and commit
+    * `_delta_log/0…0.json` holding the actions `describe` builds for
+    * them — given each file's path relative to `destRoot` and its
+    * decoded partition tuple. Returns the number of data files. */
+  private def exportVersion0(data: DataFrame, destRoot: Path, dirCols: Seq[String])(
+      describe: Seq[(String, Seq[(String, Option[String])])] => Seq[ObjectNode]): Int = {
+    data.write.mode("error").partitionBy(dirCols: _*).parquet(destRoot.toString)
+    val files = walkHive(destRoot, dirCols).map { case (p, values) =>
+      destRoot.relativize(p).toString -> dirCols.zip(values) }
+    val actions = describe(files).map(mapper.writeValueAsString)
     Files.createDirectories(destRoot.resolve("_delta_log"))
-    Files.write(logPath(destRoot, 0L), actions.result().asJava)
+    Files.write(logPath(destRoot, 0L), actions.asJava)
     files.size
   }
 
-  /** Walk a freshly written parquet tree: relative path + the
-    * partition tuple its hive-style directory segments carry. */
-  private def walkDataFiles(destRoot: Path, partitionBy: Seq[String])
-      : Seq[(String, Seq[(String, Option[String])])] =
-    Using.resource(Files.walk(destRoot)) { s =>
-      s.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map { p =>
-          val rel = destRoot.relativize(p).toString
-          val segs = rel.split('/')
-          require(segs.length == partitionBy.length + 1,
-            s"unexpected layout depth for $rel (expected ${partitionBy.length} " +
-              "partition directories)")
-          val partVals = segs.dropRight(1).zip(partitionBy).map { case (seg, c) =>
-            val eq = seg.indexOf('=')
-            require(eq > 0 && seg.substring(0, eq) == c,
-              s"unexpected partition directory $seg for column $c")
-            c -> unescapeHive(seg.substring(eq + 1))
-          }
-          (rel, partVals.toSeq)
-        }
-        .toSeq.sortBy(_._1)
-    }
+  /** An add for a file this export just wrote under `root`. */
+  private def writtenAdd(root: Path, rel: String, partVals: Seq[(String, Option[String])],
+                         stats: Option[String] = None,
+                         dv: Option[DvDescriptor] = None): ObjectNode =
+    addAction(rel, partVals, Files.size(root.resolve(rel)),
+      Files.getLastModifiedTime(root.resolve(rel)).toMillis, stats, dv)
 
   /** Export `table`'s snapshot as a Delta table whose rows matching
     * `deleteWhere` are dead via DELETION VECTORS — the modern writer
@@ -464,12 +430,30 @@ object DeltaInterop {
                        version: Long = -1L,
                        partitionBy: Seq[String] = Nil): (Int, Long) = {
     val df = table.snapshot(version)
-    require(partitionBy.forall(df.columns.contains),
-      s"partition columns ${partitionBy.mkString(",")} not all in ${df.columns.mkString(",")}")
-    if (partitionBy.isEmpty) df.write.mode("error").parquet(destRoot.toString)
-    else df.write.mode("error").partitionBy(partitionBy: _*).parquet(destRoot.toString)
-    val files = walkDataFiles(destRoot, partitionBy)
-    val spark = table.spark
+    requireColumns(df, partitionBy)
+    var deleted = 0L
+    val nFiles = exportVersion0(df, destRoot, partitionBy) { files =>
+      val dvs = deletionVectors(table.spark, destRoot, deleteWhere, files.map(_._1).toSet)
+      deleted = dvs.values.map(_.cardinality).sum
+      // a DV-bearing table declares the feature in BOTH lists, per the
+      // spec's table-features rule
+      Seq(protocolAction(3, 7, Seq("deletionVectors")),
+        metaDataAction(UUID.randomUUID().toString, df.schema.json, partitionBy,
+          createdTime = Some(Files.getLastModifiedTime(destRoot).toMillis))) ++
+        files.map { case (rel, partVals) =>
+          writtenAdd(destRoot, rel, partVals, dv = dvs.get(rel)) }
+    }
+    (nFiles, deleted)
+  }
+
+  /** The deletion vectors of [[exportSnapshotDV]]: positions of the
+    * rows matching `deleteWhere` in the files just written under
+    * `destRoot`, one bitmap per file, all stored in one
+    * `deletion_vector_*.bin` — keyed by the files' relative paths
+    * (`rels`, the export walk's). */
+  private def deletionVectors(spark: SparkSession, destRoot: Path,
+                              deleteWhere: org.apache.spark.sql.Column,
+                              rels: Set[String]): Map[String, DvDescriptor] = {
     // distributed bitmap build: executors see (file, row_index) pairs
     // for matching rows only and emit one compressed bitmap per file
     val dvByAbs: Seq[(String, Array[Byte], Long)] = spark.read
@@ -487,7 +471,7 @@ object DeltaInterop {
     val (dvPath, offsets) =
       if (dvByAbs.isEmpty) ("", Seq.empty[Int])
       else writeDvFile(destRoot, dvByAbs.map(_._2))
-    // dvByAbs keys are URI-encoded (probe-side form); walkDataFiles
+    // dvByAbs keys are URI-encoded (probe-side form); the walk's
     // rels are literal filesystem names. Relativize in encoded space,
     // then decode — relativizing the literal form instead silently
     // drops the descriptor for any partition dir with an escaped char.
@@ -502,64 +486,30 @@ object DeltaInterop {
         decodePath(abs.stripPrefix(rootPfx)) ->
           DvDescriptor("u", dvPath, Some(off), bytes.length, n)
       }.toMap
-    val relSet = files.map(_._1).toSet
-    require(descByRel.keySet.subsetOf(relSet),
+    require(descByRel.keySet.subsetOf(rels),
       "deletion vectors computed for files absent from the export walk: " +
-        descByRel.keySet.diff(relSet).mkString(", "))
-    val m = mapper
-    val actions = Seq.newBuilder[String]
-    actions += m.writeValueAsString(protocolActionDV(m))
-    actions += m.writeValueAsString(
-      metaDataAction(m, UUID.randomUUID().toString, df.schema.json, partitionBy,
-        createdTime = Some(Files.getLastModifiedTime(destRoot).toMillis)))
-    files.foreach { case (rel, partVals) =>
-      actions += m.writeValueAsString(
-        addAction(m, rel, partVals, Files.size(destRoot.resolve(rel)),
-          Files.getLastModifiedTime(destRoot.resolve(rel)).toMillis,
-          dv = descByRel.get(rel)))
-    }
-    Files.createDirectories(destRoot.resolve("_delta_log"))
-    Files.write(logPath(destRoot, 0L), actions.result().asJava)
-    (files.size, dvByAbs.map(_._3).sum)
+        descByRel.keySet.diff(rels).mkString(", "))
+    descByRel
   }
 
-  /** Spark writes hive partition directories with %XX-escaped special
-    * characters and a sentinel for null. */
-  private def unescapeHive(v: String): Option[String] =
-    if (v == "__HIVE_DEFAULT_PARTITION__") None
-    else {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < v.length) {
-        if (v.charAt(i) == '%' && i + 3 <= v.length)
-          { sb.append(Integer.parseInt(v.substring(i + 1, i + 3), 16).toChar); i += 3 }
-        else { sb.append(v.charAt(i)); i += 1 }
-      }
-      Some(sb.toString)
-    }
-
-  private def protocolAction(m: ObjectMapper): ObjectNode = {
-    val n = m.createObjectNode()
-    n.putObject("protocol").put("minReaderVersion", 1).put("minWriterVersion", 2)
-    n
-  }
-
-  /** Protocol for a DV-bearing table: versions (3, 7) with the feature
-    * declared in BOTH lists, per the spec's table-features rule. */
-  private def protocolActionDV(m: ObjectMapper): ObjectNode = {
-    val n = m.createObjectNode()
+  /** A protocol action; table `features` go in both feature lists. */
+  private def protocolAction(minReader: Int, minWriter: Int,
+                             features: Seq[String] = Nil): ObjectNode = {
+    val n = mapper.createObjectNode()
     val p = n.putObject("protocol")
-    p.put("minReaderVersion", 3).put("minWriterVersion", 7)
-    p.putArray("readerFeatures").add("deletionVectors")
-    p.putArray("writerFeatures").add("deletionVectors")
+    p.put("minReaderVersion", minReader).put("minWriterVersion", minWriter)
+    if (features.nonEmpty) Seq("readerFeatures", "writerFeatures").foreach { k =>
+      val arr = p.putArray(k)
+      features.foreach(f => arr.add(f))
+    }
     n
   }
 
-  private def metaDataAction(m: ObjectMapper, id: String, schemaJson: String,
+  private def metaDataAction(id: String, schemaJson: String,
                              partCols: Seq[String],
                              createdTime: Option[Long] = None,
                              configuration: Map[String, String] = Map.empty): ObjectNode = {
-    val n = m.createObjectNode()
+    val n = mapper.createObjectNode()
     val md = n.putObject("metaData")
     md.put("id", id)
     md.putObject("format").put("provider", "parquet").putObject("options")
@@ -572,13 +522,13 @@ object DeltaInterop {
     n
   }
 
-  private def addAction(m: ObjectMapper, rel: String,
+  private def addAction(rel: String,
                         partVals: Seq[(String, Option[String])],
                         size: Long, modTime: Long,
                         stats: Option[String] = None,
                         dv: Option[DvDescriptor] = None,
                         dataChange: Boolean = true): ObjectNode = {
-    val n = m.createObjectNode()
+    val n = mapper.createObjectNode()
     val add = n.putObject("add")
     add.put("path", encodePath(rel))
     val pv = add.putObject("partitionValues")
@@ -600,6 +550,16 @@ object DeltaInterop {
     n
   }
 
+  private def removeAction(rel: String, deletionTimestamp: Long,
+                           dataChange: Boolean): ObjectNode = {
+    val n = mapper.createObjectNode()
+    val rm = n.putObject("remove")
+    rm.put("path", encodePath(rel))
+    rm.put("deletionTimestamp", deletionTimestamp)
+    rm.put("dataChange", dataChange)
+    n
+  }
+
   /** Per-file `add.stats` JSON — the public Delta skipping-stats field
     * (`numRecords` + `minValues`/`maxValues`/`nullCount` maps) real
     * readers use for file pruning. A production writer lifts these
@@ -608,8 +568,7 @@ object DeltaInterop {
     * columns are recorded (per-column stats are OPTIONAL in the spec —
     * partial stats are conformant; timestamps, binary and nested
     * types are skipped rather than guessed at a serialization). */
-  private def fileStats(spark: SparkSession, m: ObjectMapper,
-                        file: Path): String = {
+  private def fileStats(spark: SparkSession, file: Path): String = {
     import org.apache.spark.sql.functions.{count => fcount, lit => flit,
       max => fmax, min => fmin, sum => fsum}
     val df = spark.read.parquet(file.toString)
@@ -622,7 +581,7 @@ object DeltaInterop {
       fmin(col(f.name)), fmax(col(f.name)),
       fsum(col(f.name).isNull.cast("long"))))
     val row = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).head()
-    val n = m.createObjectNode()
+    val n = mapper.createObjectNode()
     n.put("numRecords", row.getLong(0))
     val (mins, maxs, nulls) =
       (n.putObject("minValues"), n.putObject("maxValues"), n.putObject("nullCount"))
@@ -652,7 +611,7 @@ object DeltaInterop {
       nulls.put(f.name,
         if (row.isNullAt(3 + 3 * i)) 0L else row.getLong(3 + 3 * i))
     }
-    m.writeValueAsString(n)
+    mapper.writeValueAsString(n)
   }
 
   /** Export the table's FULL HISTORY as a Delta log: lake version
@@ -676,35 +635,27 @@ object DeltaInterop {
   def exportHistory(table: LakeTable, destRoot: Path): Int = {
     val versions = table.versions
     Files.createDirectories(destRoot.resolve("_delta_log"))
-    val m = mapper
     val tableId = UUID.randomUUID().toString // stable across this export's commits
     var prevDirs = Set.empty[String]
     var prevSchemaJson: Option[String] = None
     versions.zipWithIndex.foreach { case (v, commitIdx) =>
       val (dirs, schema) = table.versionState(v)
-      val actions = Seq.newBuilder[String]
+      val actions = Seq.newBuilder[ObjectNode]
       val schemaJson = schema.map(_.json)
       if (commitIdx == 0) {
         require(schemaJson.nonEmpty,
           s"cannot export history of $table: first surviving version $v has no " +
             "declared schema, and Delta requires metaData before any add — " +
             "commit data (or create with a schema) first")
-        actions += m.writeValueAsString(protocolAction(m))
+        actions += protocolAction(1, 2)
       }
       if (schemaJson != prevSchemaJson) {
         schemaJson.foreach { sj =>
-          actions += m.writeValueAsString(metaDataAction(m, tableId, sj, Nil))
+          actions += metaDataAction(tableId, sj, Nil)
           prevSchemaJson = schemaJson
         }
       }
-      def partFiles(dir: String): Seq[Path] = {
-        val p = table.root.resolve(dir)
-        Using.resource(Files.list(p)) { s =>
-          s.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .toSeq.sortBy(_.getFileName.toString)
-        }
-      }
+      def partFiles(dir: String): Seq[Path] = parquetFiles(table.root.resolve(dir))
       dirs.filterNot(prevDirs).foreach { dir =>
         partFiles(dir).foreach { f =>
           val rel = s"$dir/${f.getFileName}"
@@ -716,21 +667,15 @@ object DeltaInterop {
             catch { case _: java.nio.file.FileSystemException =>
               Files.copy(f, destFile) }
           }
-          actions += m.writeValueAsString(
-            addAction(m, rel, Nil, Files.size(f), Files.getLastModifiedTime(f).toMillis))
+          actions += addAction(rel, Nil, Files.size(f), Files.getLastModifiedTime(f).toMillis)
         }
       }
       prevDirs.diff(dirs.toSet).foreach { dir =>
-        partFiles(dir).foreach { f =>
-          val a = m.createObjectNode()
-          val rm = a.putObject("remove")
-          rm.put("path", encodePath(s"$dir/${f.getFileName}"))
-          rm.put("deletionTimestamp", 0L)
-          rm.put("dataChange", true)
-          actions += m.writeValueAsString(a)
-        }
+        partFiles(dir).foreach(f =>
+          actions += removeAction(s"$dir/${f.getFileName}", 0L, dataChange = true))
       }
-      Files.write(logPath(destRoot, commitIdx.toLong), actions.result().asJava)
+      Files.write(logPath(destRoot, commitIdx.toLong),
+        actions.result().map(mapper.writeValueAsString).asJava)
       prevDirs = dirs.toSet
     }
     versions.size
@@ -797,13 +742,12 @@ object DeltaInterop {
     val partSet = st.partitionColumns.toSet
     val binSchema = StructType(declared.fields
       .filterNot(f => partSet(f.name)).map(_.copy(nullable = true)))
-    val m = mapper
     val byPartition: Seq[(Map[String, Option[String]], Seq[LiveFile])] =
       st.liveFiles.groupBy(_.partitionValues).toSeq
         .sortBy(_._2.head.path)
     var compacted = 0
     var carried = 0
-    val actions = Seq.newBuilder[String]
+    val actions = Seq.newBuilder[ObjectNode]
     // filesystem-derived timestamp (the repo convention — wall-clock
     // reads would make re-runs differ for no reason); the log dir
     // itself, since a checkpointed-then-cleaned log may no longer
@@ -824,45 +768,23 @@ object DeltaInterop {
           carried += bin.size // untouched: no remove, no rewrite
         case bin =>
           val abs = bin.map(f => root.resolve(f.path))
-          val dir = abs.head.getParent
-          val tmp = TempDirs.create("graft-opt")
-          spark.read.schema(binSchema).parquet(abs.map(_.toString): _*)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { s =>
-            s.iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          } match {
-            case Seq(one) => one
-            case other => throw new IllegalStateException(
-              s"expected one coalesced part file, found ${other.size}")
-          }
-          val out = dir.resolve(s"compacted-${UUID.randomUUID()}.parquet")
-          Files.move(part, out)
-          val rows = IcebergInterop.parquetRowCount(out)
-          val expect = bin.map(f =>
-            IcebergInterop.parquetRowCount(root.resolve(f.path))).sum
+          val out = rewriteBin(spark, binSchema, abs, abs.head.getParent)
+          val rows = parquetRowCount(out)
+          val expect = abs.map(parquetRowCount).sum
           require(rows == expect,
             s"optimize lost rows: bin of ${bin.size} files had $expect, " +
               s"rewrite holds $rows")
           val rel = root.relativize(out).toString
-          actions += m.writeValueAsString(
-            addAction(m, rel, partVals.toSeq, Files.size(out), nowMs,
-              stats = Some(fileStats(spark, m, out)), dataChange = false))
-          bin.foreach { f =>
-            val a = m.createObjectNode()
-            val rm = a.putObject("remove")
-            rm.put("path", encodePath(f.path))
-            rm.put("deletionTimestamp", nowMs)
-            rm.put("dataChange", false)
-            actions += m.writeValueAsString(a)
-          }
+          actions += addAction(rel, partVals.toSeq, Files.size(out), nowMs,
+            stats = Some(fileStats(spark, out)), dataChange = false)
+          bin.foreach(f => actions += removeAction(f.path, nowMs, dataChange = false))
           compacted += bin.size
           newFiles ::= rel
       }
     }
     if (newFiles.isEmpty) return OptimizeResult(0, 0, carried, st.version)
     val v = st.version + 1
-    Files.write(logPath(root, v), actions.result().asJava)
+    Files.write(logPath(root, v), actions.result().map(mapper.writeValueAsString).asJava)
     OptimizeResult(compacted, newFiles.size, carried, v)
   }
 
@@ -938,9 +860,8 @@ object DeltaInterop {
       s"cannot restore $root to version $toVersion: data files " +
         s"[${missing.mkString(", ")}] were vacuumed — the target version " +
         "is past the retention horizon")
-    val m = mapper
     val nowMs = Files.getLastModifiedTime(root.resolve("_delta_log")).toMillis
-    val actions = Seq.newBuilder[String]
+    val actions = Seq.newBuilder[ObjectNode]
     val metaChanged =
       tgt.schema.map(_.json) != cur.schema.map(_.json) ||
         tgt.partitionColumns != cur.partitionColumns ||
@@ -950,27 +871,19 @@ object DeltaInterop {
         .getOrElse(UUID.randomUUID().toString)
       val sj = tgt.schema.map(_.json).getOrElse(throw new IllegalStateException(
         s"target version $toVersion of $root has no declared schema"))
-      actions += m.writeValueAsString(metaDataAction(m, id, sj,
-        tgt.partitionColumns, configuration = tgt.configuration))
+      actions += metaDataAction(id, sj, tgt.partitionColumns,
+        configuration = tgt.configuration)
     }
     // removes first: a same-path remove+add in one commit must replay
     // as "added" (dv swap case), and replay applies actions in order
-    toRemove.foreach { f =>
-      val a = m.createObjectNode()
-      val rm = a.putObject("remove")
-      rm.put("path", encodePath(f.path))
-      rm.put("deletionTimestamp", nowMs)
-      rm.put("dataChange", true)
-      actions += m.writeValueAsString(a)
-    }
+    toRemove.foreach(f => actions += removeAction(f.path, nowMs, dataChange = true))
     toAdd.foreach { f =>
-      actions += m.writeValueAsString(
-        addAction(m, f.path, f.partitionValues.toSeq, f.size, nowMs,
-          stats = Some(fileStats(spark, m, root.resolve(f.path))),
-          dv = f.dv, dataChange = true))
+      actions += addAction(f.path, f.partitionValues.toSeq, f.size, nowMs,
+        stats = Some(fileStats(spark, root.resolve(f.path))),
+        dv = f.dv, dataChange = true)
     }
     val v = cur.version + 1
-    Files.write(logPath(root, v), actions.result().asJava)
+    Files.write(logPath(root, v), actions.result().map(mapper.writeValueAsString).asJava)
     RestoreResult(toAdd.size, toRemove.size, v)
   }
 
@@ -1037,11 +950,8 @@ object DeltaInterop {
     val tmp = TempDirs.create("graft-ck")
     spark.createDataFrame(rows.asJava, ckSchema).coalesce(1)
       .write.mode("overwrite").parquet(tmp.toString)
-    val part = Using.resource(Files.list(tmp)) { s =>
-      s.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-    }
     val logDir = root.resolve("_delta_log")
-    Files.move(part, logDir.resolve(f"$v%020d.checkpoint.parquet"),
+    Files.move(parquetFiles(tmp).head, logDir.resolve(f"$v%020d.checkpoint.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val lc = mapper.createObjectNode()
     lc.put("version", v).put("size", rows.size.toLong)
@@ -1175,7 +1085,6 @@ object DeltaInterop {
         })
         DeltaState(Nil, None, Nil, None, -1L)
     }
-    val m = mapper
     val live = scala.collection.mutable.LinkedHashMap.empty[String, LiveFile]
     seed.liveFiles.foreach(f => live += f.path -> f)
     var schema = seed.schema
@@ -1190,7 +1099,7 @@ object DeltaInterop {
         .toMap
     jsonVers.filter(v => v > seed.version && v <= target).foreach { v =>
       Files.readAllLines(logPath(root, v)).asScala.filter(_.trim.nonEmpty).foreach { line =>
-        val node = m.readTree(line)
+        val node = mapper.readTree(line)
         if (node.has("protocol")) {
           val p = node.get("protocol")
           requireProtocolNode(p, root)

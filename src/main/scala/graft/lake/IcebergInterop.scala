@@ -7,8 +7,8 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import org.apache.avro.{Schema => AvroSchema, SchemaBuilder}
 import org.apache.avro.file.{DataFileReader, DataFileWriter, SeekableFileInput}
@@ -31,6 +31,15 @@ import org.apache.spark.sql.types._
   *    resolve columns by field id), one manifest list, one
   *    `vN.metadata.json` + `version-hint.text`. The schema converts
   *    field-by-field to Iceberg's JSON type names.
+  *  - ONE WRITER PER ARTIFACT, shared by every export and maintenance
+  *    action: each Avro file goes through `writeAvro`, fed by one
+  *    manifest-entry builder (`addedEntry` for a new file,
+  *    `existingEntry` for a carried one) and one manifest-list row
+  *    builder (`manifestListRow`); every export's metadata JSON comes
+  *    from `tableMetadata`; and every metadata version — an export's
+  *    `v1` and each maintenance roll-forward — is committed by
+  *    `commitMetadata`. `graft.lake.InteropShapeSpec` pins what they
+  *    write field by field.
   *  - READ replays the metadata the way an Iceberg reader does:
   *    version-hint → metadata JSON → current snapshot → manifest list
   *    → manifests → live data files (manifest-entry status 2 =
@@ -73,7 +82,8 @@ import org.apache.spark.sql.types._
   */
 object IcebergInterop {
 
-  private def mapper = new ObjectMapper()
+  import InteropIO.{mapper, normPathCol, parquetFiles, parquetRowCount, rewriteBin,
+    uriRawPath, walkHive}
 
   // ---- schema conversion -------------------------------------------------
 
@@ -127,17 +137,6 @@ object IcebergInterop {
   // Field ids ride as the "field-id" property — that is how real
   // Iceberg readers bind columns (names are a fallback). The numbers
   // are the spec's fixed ids.
-
-  /** Exact row count from the parquet FOOTER — no Spark job, no data
-    * read. The spec requires an accurate `record_count` per manifest
-    * entry (real readers — Spark-Iceberg, Trino — answer metadata-only
-    * COUNT(*) from it; ADVICE r9 flagged the -1 placeholder this
-    * replaces), and the footer already carries the value. */
-  private[lake] def parquetRowCount(f: Path): Long =
-    Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toUri),
-        new org.apache.hadoop.conf.Configuration())))(_.getRecordCount)
 
   private def fid(f: AvroSchema.Field, id: Int): AvroSchema.Field = {
     f.addProp("field-id", id: Integer); f
@@ -394,51 +393,260 @@ object IcebergInterop {
       case TruncateRe(_) => s"${src}_trunc"
     }
 
+  // ---- writers -----------------------------------------------------------
+
+  /** An Avro record of `schema` from (field → value) pairs. Fields the
+    * schema's format version lacks are skipped — v1 has no `content` or
+    * sequence numbers, v2 dropped `block_size_in_bytes` — and fields
+    * not given stay null. */
+  private def record(schema: AvroSchema, values: (String, Any)*): GenericRecord = {
+    val r = new GenericData.Record(schema)
+    values.foreach { case (k, v) => if (schema.getField(k) != null) r.put(k, v) }
+    r
+  }
+
+  /** The one Avro writer: `records` under `schema` at `path`. */
+  private def writeAvro(path: Path, schema: AvroSchema, records: Seq[GenericRecord]): Path = {
+    Using.resource(new DataFileWriter[GenericRecord](
+      new GenericDatumWriter[GenericRecord](schema))) { w =>
+      w.create(schema, path.toFile)
+      records.foreach(w.append)
+    }
+    path
+  }
+
+  private def writeManifest(metaDir: Path, schema: AvroSchema,
+                            entries: Seq[GenericRecord]): Path =
+    writeAvro(metaDir.resolve(s"manifest-${UUID.randomUUID()}.avro"), schema, entries)
+
+  private def writeManifestList(metaDir: Path, snapshotId: Long, schema: AvroSchema,
+                                rows: Seq[GenericRecord]): Path =
+    writeAvro(metaDir.resolve(s"snap-$snapshotId-${UUID.randomUUID()}.avro"), schema, rows)
+
+  /** The manifest-entry builder, for a data file entering a manifest:
+    * status ADDED under `snapshotId`, an absolute `file:` URI (Iceberg
+    * stores fully-qualified paths), the footer's row count and the
+    * on-disk size. `partition` fills the typed partition record; v2
+    * entries also take `content`, explicit sequence numbers (real
+    * writers may leave them null and inherit — the reader supports
+    * both) and, for equality deletes, `equalityIds`. */
+  private def addedEntry(schema: AvroSchema, file: Path, snapshotId: Long,
+                         partition: Seq[(String, Any)] = Nil, content: Int = 0,
+                         seq: Long = 0L, equalityIds: Seq[Int] = Nil): GenericRecord = {
+    val dataFile = schema.getField("data_file").schema()
+    record(schema, "status" -> 1, "snapshot_id" -> snapshotId,
+      "sequence_number" -> seq, "file_sequence_number" -> seq,
+      "data_file" -> record(dataFile,
+        "content" -> content,
+        "file_path" -> s"file://${file.toAbsolutePath}",
+        "file_format" -> "PARQUET",
+        "partition" -> record(dataFile.getField("partition").schema(), partition: _*),
+        "record_count" -> parquetRowCount(file),
+        "file_size_in_bytes" -> Files.size(file),
+        "block_size_in_bytes" -> 64L * 1024 * 1024,
+        "equality_ids" -> (if (equalityIds.isEmpty) null else equalityIds.map(Int.box).asJava)))
+  }
+
+  /** The manifest-entry builder, for an entry of an earlier manifest
+    * carried into a new one: status EXISTING under its ORIGINAL commit
+    * snapshot id with its file fields verbatim (the spec's lineage
+    * rule). Unpartitioned v1 entries — the maintenance rewrites' scope. */
+  private def existingEntry(schema: AvroSchema, entry: GenericRecord): GenericRecord = {
+    val dataFile = schema.getField("data_file").schema()
+    val src = entry.get("data_file").asInstanceOf[GenericRecord]
+    record(schema, "status" -> 0, "snapshot_id" -> entry.get("snapshot_id"),
+      "data_file" -> record(dataFile, dataFile.getFields.asScala.toSeq.map { f =>
+        f.name -> (if (f.name == "partition") record(f.schema()) else src.get(f.name))
+      }: _*))
+  }
+
+  /** The one manifest-list row builder: the manifest's path and length,
+    * its partition spec, the snapshot that added it and its file
+    * counts; v2 rows add `content` (0 = data, 1 = deletes) and the
+    * sequence-number pair. */
+  private def manifestListRow(schema: AvroSchema, manifest: Path, snapshotId: Long,
+                              added: Int, existing: Int = 0, specId: Int = 0,
+                              content: Int = 0, seq: Long = 0L): GenericRecord =
+    record(schema,
+      "manifest_path" -> s"file://${manifest.toAbsolutePath}",
+      "manifest_length" -> Files.size(manifest),
+      "partition_spec_id" -> specId,
+      "content" -> content,
+      "sequence_number" -> seq,
+      "min_sequence_number" -> seq,
+      "added_snapshot_id" -> snapshotId,
+      "added_data_files_count" -> added,
+      "existing_data_files_count" -> existing,
+      "deleted_data_files_count" -> 0)
+
+  /** One `snapshots` entry; `sequence` marks a v2 snapshot. */
+  private case class SnapshotEntry(id: Long, timestampMs: Long, operation: String,
+                                   manifestList: Path, parent: Option[Long] = None,
+                                   sequence: Option[Long] = None,
+                                   schemaId: Option[Int] = None)
+
+  private def putSnapshot(snapshots: ArrayNode, s: SnapshotEntry): Unit = {
+    val n = snapshots.addObject()
+    n.put("snapshot-id", s.id)
+    s.parent.foreach(p => n.put("parent-snapshot-id", p))
+    s.sequence.foreach(q => n.put("sequence-number", q))
+    n.put("timestamp-ms", s.timestampMs)
+    // a v2 snapshot names its schema ahead of the summary, a v1 one last
+    if (s.sequence.nonEmpty) s.schemaId.foreach(i => n.put("schema-id", i))
+    n.putObject("summary").put("operation", s.operation)
+    n.put("manifest-list", s"file://${s.manifestList.toAbsolutePath}")
+    if (s.sequence.isEmpty) s.schemaId.foreach(i => n.put("schema-id", i))
+  }
+
+  private def logSnapshot(log: ArrayNode, id: Long, timestampMs: Long): Unit = {
+    val e = log.addObject()
+    e.put("timestamp-ms", timestampMs)
+    e.put("snapshot-id", id)
+  }
+
+  private def schemaNode(schema: StructType, id: Int): ObjectNode = {
+    val n = mapper.createObjectNode()
+    n.put("type", "struct")
+    n.put("schema-id", id)
+    val fields = n.putArray("fields")
+    schema.fields.zipWithIndex.foreach { case (f, i) =>
+      val fn = fields.addObject()
+      fn.put("id", i + 1)
+      fn.put("name", f.name)
+      fn.put("required", !f.nullable)
+      fn.put("type", toIcebergType(f.dataType))
+    }
+    n
+  }
+
+  /** The one table-metadata builder (`vN.metadata.json`, v1 or v2).
+    * `schemas` are indexed by schema-id: v1 writes the current one as
+    * the top-level `schema`, plus the `schemas` list when `schemaList`;
+    * v2 always writes the list. `specs` are (source column, transform)
+    * lists indexed by spec-id — partition field ids are table-unique
+    * across the spec history (1000, 1001, …) — and v1 repeats the
+    * default spec as the legacy `partition-spec`. The last snapshot is
+    * current; `logged` fills `snapshot-log` from the snapshots. */
+  private def tableMetadata(location: Path, formatVersion: Int, nowMs: Long,
+                            schemas: Seq[StructType], currentSchemaId: Int,
+                            specs: Seq[Seq[(String, String)]], defaultSpecId: Int,
+                            lastPartitionId: Int, snapshots: Seq[SnapshotEntry],
+                            schemaList: Boolean = false,
+                            logged: Boolean = false): ObjectNode = {
+    val v2 = formatVersion == 2
+    val current = schemas(currentSchemaId)
+    val root = mapper.createObjectNode()
+    root.put("format-version", formatVersion)
+    root.put("table-uuid", UUID.randomUUID().toString)
+    root.put("location", s"file://${location.toAbsolutePath}")
+    if (v2) root.put("last-sequence-number", snapshots.flatMap(_.sequence).max)
+    root.put("last-updated-ms", nowMs)
+    root.put("last-column-id", current.fields.length)
+    if (!v2) root.set[ObjectNode]("schema", schemaNode(current, currentSchemaId))
+    if (v2 || schemaList) {
+      root.put("current-schema-id", currentSchemaId)
+      val arr = root.putArray("schemas")
+      schemas.zipWithIndex.foreach { case (s, i) => arr.add(schemaNode(s, i)) }
+    }
+    val colId = current.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
+    val firstFieldId = specs.scanLeft(1000)(_ + _.size)
+    def putFields(arr: ArrayNode, specId: Int): Unit =
+      specs(specId).zipWithIndex.foreach { case ((c, t), i) =>
+        val fn = arr.addObject()
+        fn.put("name", partitionFieldName(c, t))
+        fn.put("transform", t)
+        fn.put("source-id", colId(c))
+        fn.put("field-id", firstFieldId(specId) + i)
+      }
+    if (!v2) putFields(root.putArray("partition-spec"), defaultSpecId)
+    val specsArr = root.putArray("partition-specs")
+    specs.indices.foreach { si =>
+      val sp = specsArr.addObject()
+      sp.put("spec-id", si)
+      putFields(sp.putArray("fields"), si)
+    }
+    root.put("default-spec-id", defaultSpecId)
+    root.put("last-partition-id", lastPartitionId)
+    root.put("default-sort-order-id", 0)
+    val order0 = root.putArray("sort-orders").addObject()
+    order0.put("order-id", 0)
+    order0.putArray("fields")
+    root.putObject("properties")
+    root.put("current-snapshot-id", snapshots.last.id)
+    val snapsArr = root.putArray("snapshots")
+    snapshots.foreach(putSnapshot(snapsArr, _))
+    val log = root.putArray("snapshot-log")
+    if (logged) snapshots.foreach(s => logSnapshot(log, s.id, s.timestampMs))
+    root.putArray("metadata-log")
+    root
+  }
+
+  /** The one metadata commit: write `v<version>.metadata.json`, then
+    * point `version-hint.text` at it. */
+  private def commitMetadata(metaDir: Path, version: Long, meta: JsonNode): Unit = {
+    Files.writeString(metaDir.resolve(s"v$version.metadata.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(meta))
+    Files.writeString(metaDir.resolve("version-hint.text"), version.toString)
+  }
+
+  /** The table's current metadata, parsed for editing, with the
+    * directory and version a maintenance commit rolls forward from. */
+  private case class TableState(dir: Path, version: Long, meta: ObjectNode) {
+    def commitNext(): Unit = commitMetadata(dir, version + 1, meta)
+  }
+
+  private def load(root: Path): TableState = {
+    val p = currentMetadata(root)
+    TableState(p.getParent,
+      p.getFileName.toString.stripPrefix("v").stripSuffix(".metadata.json").toLong,
+      mapper.readTree(Files.readString(p)).asInstanceOf[ObjectNode])
+  }
+
+  private def newSnapshotId(): Long =
+    math.abs(UUID.randomUUID().getLeastSignificantBits) | 1L
+
+  private def nextSnapshotId(meta: JsonNode): Long =
+    meta.get("snapshots").elements().asScala.map(_.get("snapshot-id").asLong()).max + 1
+
+  private def schemaIdOf(snapshot: JsonNode): Option[Int] =
+    if (snapshot.has("schema-id")) Some(snapshot.get("schema-id").asInt()) else None
+
+  private def putRef(meta: ObjectNode, name: String, snapshotId: Long,
+                     refType: String): Unit = {
+    val refs =
+      if (meta.has("refs") && meta.get("refs").isObject)
+        meta.get("refs").asInstanceOf[ObjectNode]
+      else meta.putObject("refs")
+    val r = refs.putObject(name)
+    r.put("snapshot-id", snapshotId)
+    r.put("type", refType)
+  }
+
+  private def schemaById(meta: JsonNode, root: Path, id: Int): JsonNode =
+    meta.get("schemas").elements().asScala
+      .find(_.get("schema-id").asInt() == id)
+      .getOrElse(throw new IllegalArgumentException(
+        s"schema-id $id not in schemas list at $root"))
+
+  /** The current schema: the top-level `schema`, else the `schemas`
+    * entry named by `current-schema-id`. */
+  private def currentSchema(meta: JsonNode, root: Path): JsonNode =
+    if (meta.has("schema")) meta.get("schema")
+    else schemaById(meta, root, meta.get("current-schema-id").asInt())
+
   // ---- export ------------------------------------------------------------
 
-  /** Spark writes hive partition directories with %XX-escaped special
-    * characters and a sentinel for null. */
-  private def unescapeHive(v: String): Option[String] =
-    if (v == "__HIVE_DEFAULT_PARTITION__") None
-    else Some(java.net.URLDecoder.decode(
-      v.replace("+", "%2B"), java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Walk a freshly written hive-layout tree: each parquet file plus
-    * its partition tuple parsed from the `name=value` directory
-    * segments and converted back to the transform result types. */
-  private def walkPartitionedData(dataDir: Path, tnames: Seq[String],
-                                  resultTypes: Seq[DataType])
-      : Seq[(Path, Seq[Any])] =
-    Using.resource(Files.walk(dataDir)) { s =>
-      s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map { p =>
-          val segs = dataDir.relativize(p).toString.split('/')
-          require(segs.length == tnames.length + 1,
-            s"unexpected layout depth for ${dataDir.relativize(p)} " +
-              s"(expected ${tnames.length} partition directories)")
-          val tuple: Seq[Any] = segs.dropRight(1).zip(tnames).zip(resultTypes)
-            .map { case ((seg, n), rt) =>
-              val eq = seg.indexOf('=')
-              require(eq > 0 && seg.substring(0, eq) == n,
-                s"unexpected partition directory $seg for helper column $n")
-              unescapeHive(seg.substring(eq + 1)).map { v =>
-                rt match {
-                  case IntegerType => Int.box(v.toInt)
-                  case LongType => Long.box(v.toLong)
-                  case DoubleType => Double.box(v.toDouble)
-                  case FloatType => Float.box(v.toFloat)
-                  case BooleanType => Boolean.box(v.toBoolean)
-                  case StringType => v
-                  case other => throw new IllegalArgumentException(
-                    s"cannot parse hive partition value for type $other")
-                }
-              }.orNull
-            }
-          (p, tuple)
-        }
-        .toSeq.sortBy(_._1.toString)
-    }
+  /** Typed value of a decoded hive partition directory segment. */
+  private def hiveValue(v: String, rt: DataType): Any = rt match {
+    case IntegerType => Int.box(v.toInt)
+    case LongType => Long.box(v.toLong)
+    case DoubleType => Double.box(v.toDouble)
+    case FloatType => Float.box(v.toFloat)
+    case BooleanType => Boolean.box(v.toBoolean)
+    case StringType => v
+    case other => throw new IllegalArgumentException(
+      s"cannot parse hive partition value for type $other")
+  }
 
   /** Avro type for an identity-partition field in the manifest's
     * partition record (always nullable per the spec). */
@@ -451,6 +659,46 @@ object IcebergInterop {
     case BooleanType => p(AvroSchema.Type.BOOLEAN)
     case other => throw new IllegalArgumentException(
       s"unsupported identity-partition column type for Iceberg export: $other")
+  }
+
+  private def writeParquet(df: DataFrame, dir: Path): Seq[Path] = {
+    df.write.mode("error").parquet(dir.toString)
+    parquetFiles(dir)
+  }
+
+  /** Write `df` under `dataDir` with one directory per distinct
+    * TRANSFORMED tuple of `spec` (collected driver-side — partition
+    * tuples are bounded by design, the same assumption every
+    * table-format writer makes), then its manifest: one ADDED entry per
+    * data file with a typed partition record, field ids from
+    * `firstFieldId`. The transformed values ride in tagged helper
+    * columns and ONE distributed hive-layout write partitions on them —
+    * partitionBy strips the helpers from the files, so the files keep
+    * exactly the source columns (hidden partitioning) while the
+    * directory names carry the transformed values. (A per-tuple slice
+    * loop would re-scan the table once per distinct tuple: 30 scans for
+    * a 30-day export.) Returns (manifest, data file count). */
+  private def writeSpecData(df: DataFrame, dataDir: Path, metaDir: Path,
+                            spec: Seq[(String, String)], firstFieldId: Int,
+                            snapshotId: Long): (Path, Int) = {
+    import org.apache.spark.sql.functions.col
+    val tnames = spec.indices.map(i => s"__gf_pt_$i")
+    df.select(df.columns.map(col) ++ spec.zip(tnames).map { case ((c, t), n) =>
+        transformColumn(t, col(c), df.schema(c).dataType).as(n) }: _*)
+      .write.mode("error").partitionBy(tnames: _*).parquet(dataDir.toString)
+    val types = spec.map { case (c, t) => transformResultType(t, df.schema(c).dataType) }
+    val names = spec.map { case (c, t) => partitionFieldName(c, t) }
+    val entrySchema = manifestEntrySchemaWith(AvroSchema.createRecord(
+      "r102", null, "org.apache.iceberg", false,
+      names.zip(types).zipWithIndex.map { case ((n, rt), i) =>
+        field(n, optional(partitionAvroType(rt)), firstFieldId + i)
+      }.asJava))
+    val files = walkHive(dataDir, tnames)
+    val manifest = writeManifest(metaDir, entrySchema, files.map { case (f, values) =>
+      addedEntry(entrySchema, f, snapshotId, partition = names.zip(
+        values.zip(types).map { case (v, rt) => v.map(hiveValue(_, rt)).orNull }))
+    })
+    (manifest, files.size)
   }
 
   /** Export `table`'s snapshot at `version` (default: latest) as a
@@ -488,153 +736,18 @@ object IcebergInterop {
         df.columns.mkString(","))
     pfields.foreach { case (c, t) =>
       transformResultType(t, df.schema(c).dataType) } // fail loud up front
-    val dataDir = destRoot.resolve("data")
     val metaDir = destRoot.resolve("metadata")
     Files.createDirectories(metaDir)
-
-    // data files: flat write, or one directory per distinct partition
-    // tuple (collected driver-side — partition tuples are bounded by
-    // design, the same assumption every table-format writer makes)
-    val parts: Seq[(Path, Seq[Any])] =
-      if (pfields.isEmpty) {
-        df.write.mode("error").parquet(dataDir.toString)
-        Using.resource(Files.list(dataDir)) { s =>
-          s.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .toSeq.sortBy(_.getFileName.toString).map(f => f -> Seq.empty[Any])
-        }
-      } else {
-        import org.apache.spark.sql.functions.col
-        // transformed partition values ride in tagged helper columns;
-        // ONE distributed hive-layout write partitions on them —
-        // partitionBy strips the helpers from the files, so the files
-        // keep exactly the source columns (hidden partitioning) while
-        // the directory names carry the transformed values. (The
-        // per-tuple slice loop this replaces re-scanned the table once
-        // per distinct tuple: 30 scans for a 30-day export.)
-        val tcols = pfields.zipWithIndex.map { case ((c, t), i) =>
-          transformColumn(t, col(c), df.schema(c).dataType).as(s"__gf_pt_$i")
-        }
-        val tnames = pfields.indices.map(i => s"__gf_pt_$i")
-        df.select(df.columns.map(col) ++ tcols: _*)
-          .write.mode("error").partitionBy(tnames: _*).parquet(dataDir.toString)
-        val resultTypes = pfields.map { case (c, t) =>
-          transformResultType(t, df.schema(c).dataType) }
-        walkPartitionedData(dataDir, tnames, resultTypes)
-      }
-    val snapshotId = math.abs(UUID.randomUUID().getLeastSignificantBits) | 1L
+    val snapshotId = newSnapshotId()
+    val (manifest, nFiles) =
+      writeSpecData(df, destRoot.resolve("data"), metaDir, pfields, 1000, snapshotId)
+    val listPath = writeManifestList(metaDir, snapshotId, manifestListSchema,
+      Seq(manifestListRow(manifestListSchema, manifest, snapshotId, nFiles)))
     val nowMs = Files.getLastModifiedTime(destRoot).toMillis
-
-    // the manifest-entry schema for THIS table: the spec's fixed ids
-    // plus a typed partition record (field-ids 1000+i per the spec)
-    val pfieldNames = pfields.map { case (c, t) => partitionFieldName(c, t) }
-    val partitionSchema: AvroSchema =
-      if (pfields.isEmpty)
-        AvroSchema.createRecord("r102", null, "org.apache.iceberg", false,
-          Seq.empty[AvroSchema.Field].asJava)
-      else
-        AvroSchema.createRecord("r102", null, "org.apache.iceberg", false,
-          pfields.zip(pfieldNames).zipWithIndex.map { case (((c, t), n), i) =>
-            field(n, optional(partitionAvroType(
-              transformResultType(t, df.schema(c).dataType))), 1000 + i)
-          }.asJava)
-    val entrySchema = manifestEntrySchemaWith(partitionSchema)
-
-    // manifest: one ADDED entry per data file, absolute file: URIs
-    // (Iceberg stores fully-qualified paths)
-    val manifestPath = metaDir.resolve(s"manifest-${UUID.randomUUID()}.avro")
-    Using.resource(new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](entrySchema))) { w =>
-      w.create(entrySchema, manifestPath.toFile)
-      parts.foreach { case (f, tuple) =>
-        val dfr = new GenericData.Record(
-          entrySchema.getField("data_file").schema())
-        dfr.put("file_path", s"file://${f.toAbsolutePath}")
-        dfr.put("file_format", "PARQUET")
-        val pr = new GenericData.Record(partitionSchema)
-        pfieldNames.zip(tuple).foreach { case (n, v) => pr.put(n, v) }
-        dfr.put("partition", pr)
-        dfr.put("record_count", parquetRowCount(f))
-        dfr.put("file_size_in_bytes", Files.size(f))
-        dfr.put("block_size_in_bytes", 64L * 1024 * 1024)
-        val e = new GenericData.Record(entrySchema)
-        e.put("status", 1) // ADDED
-        e.put("snapshot_id", snapshotId)
-        e.put("data_file", dfr)
-        w.append(e)
-      }
-    }
-
-    // manifest list: one row pointing at the manifest
-    val listPath = metaDir.resolve(s"snap-$snapshotId-${UUID.randomUUID()}.avro")
-    Using.resource(new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](manifestListSchema))) { w =>
-      w.create(manifestListSchema, listPath.toFile)
-      val m = new GenericData.Record(manifestListSchema)
-      m.put("manifest_path", s"file://${manifestPath.toAbsolutePath}")
-      m.put("manifest_length", Files.size(manifestPath))
-      m.put("partition_spec_id", 0)
-      m.put("added_snapshot_id", snapshotId)
-      m.put("added_data_files_count", parts.size)
-      m.put("existing_data_files_count", 0)
-      m.put("deleted_data_files_count", 0)
-      w.append(m)
-    }
-
-    // table metadata JSON (v1) + version hint
-    val m = mapper
-    val root = m.createObjectNode()
-    root.put("format-version", 1)
-    root.put("table-uuid", UUID.randomUUID().toString)
-    root.put("location", s"file://${destRoot.toAbsolutePath}")
-    root.put("last-updated-ms", nowMs)
-    root.put("last-column-id", df.schema.fields.length)
-    val schemaNode = root.putObject("schema")
-    schemaNode.put("type", "struct")
-    schemaNode.put("schema-id", 0)
-    val fieldsArr = schemaNode.putArray("fields")
-    df.schema.fields.zipWithIndex.foreach { case (f, i) =>
-      val fn = fieldsArr.addObject()
-      fn.put("id", i + 1)
-      fn.put("name", f.name)
-      fn.put("required", !f.nullable)
-      fn.put("type", toIcebergType(f.dataType))
-    }
-    val colId = df.schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
-    val legacySpec = root.putArray("partition-spec") // legacy v1 field
-    val specs = root.putArray("partition-specs")
-    val spec0 = specs.addObject()
-    spec0.put("spec-id", 0)
-    val specFieldsArr = spec0.putArray("fields")
-    pfields.zip(pfieldNames).zipWithIndex.foreach { case (((c, t), n), i) =>
-      Seq(legacySpec.addObject(), specFieldsArr.addObject()).foreach { fn =>
-        fn.put("name", n)
-        fn.put("transform", t)
-        fn.put("source-id", colId(c))
-        fn.put("field-id", 1000 + i)
-      }
-    }
-    root.put("default-spec-id", 0)
-    root.put("last-partition-id", 999 + math.max(pfields.size, 1))
-    root.put("default-sort-order-id", 0)
-    val orders = root.putArray("sort-orders")
-    val order0 = orders.addObject()
-    order0.put("order-id", 0)
-    order0.putArray("fields")
-    root.putObject("properties")
-    root.put("current-snapshot-id", snapshotId)
-    val snaps = root.putArray("snapshots")
-    val snap = snaps.addObject()
-    snap.put("snapshot-id", snapshotId)
-    snap.put("timestamp-ms", nowMs)
-    snap.putObject("summary").put("operation", "append")
-    snap.put("manifest-list", s"file://${listPath.toAbsolutePath}")
-    root.putArray("snapshot-log")
-    root.putArray("metadata-log")
-    Files.writeString(metaDir.resolve("v1.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    Files.writeString(metaDir.resolve("version-hint.text"), "1")
-    parts.size
+    commitMetadata(metaDir, 1L, tableMetadata(destRoot, 1, nowMs, Seq(df.schema), 0,
+      Seq(pfields), 0, 999 + math.max(pfields.size, 1),
+      Seq(SnapshotEntry(snapshotId, nowMs, "append", listPath))))
+    nFiles
   }
 
   /** PARTITION-SPEC EVOLUTION export (v1): snapshot 1 holds the rows
@@ -654,7 +767,7 @@ object IcebergInterop {
                             newSpec: Seq[(String, String)],
                             oldWhere: org.apache.spark.sql.Column,
                             version: Long = -1L): (Int, Int) = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     val df = table.snapshot(version)
     df.schema.fields.foreach(f => toIcebergType(f.dataType)) // fail loud up front
     // a NULL-valued predicate must not lose the row: filter(p) and
@@ -669,150 +782,25 @@ object IcebergInterop {
     }
     val metaDir = destRoot.resolve("metadata")
     Files.createDirectories(metaDir)
-    val snapIds = Seq.fill(2)(math.abs(UUID.randomUUID().getLeastSignificantBits) | 1L)
+    val snapIds = Seq.fill(2)(newSnapshotId())
     // field-ids are table-unique ACROSS the spec history (1000, 1001, …)
-    val fieldIdBase = Seq(0, oldSpec.size)
-
-    val perSpec = specs.zipWithIndex.map { case (pfields, si) =>
+    val firstFieldIds = Seq(1000, 1000 + oldSpec.size)
+    val rows = specs.zipWithIndex.map { case (spec, si) =>
       val slice = if (si == 0) df.filter(oldPred) else df.filter(not(oldPred))
-      val dataDir = destRoot.resolve("data").resolve(s"s$si")
-      val tcols = pfields.zipWithIndex.map { case ((c, t), i) =>
-        transformColumn(t, col(c), df.schema(c).dataType).as(s"__gf_pt_$i")
-      }
-      val tnames = pfields.indices.map(i => s"__gf_pt_$i")
-      slice.select(df.columns.map(col) ++ tcols: _*)
-        .write.mode("error").partitionBy(tnames: _*).parquet(dataDir.toString)
-      val resultTypes = pfields.map { case (c, t) =>
-        transformResultType(t, df.schema(c).dataType) }
-      val parts = walkPartitionedData(dataDir, tnames, resultTypes)
-      val pfieldNames = pfields.map { case (c, t) => partitionFieldName(c, t) }
-      val partitionSchema = AvroSchema.createRecord(
-        "r102", null, "org.apache.iceberg", false,
-        pfields.zip(pfieldNames).zipWithIndex.map { case (((c, t), n), i) =>
-          field(n, optional(partitionAvroType(
-            transformResultType(t, df.schema(c).dataType))),
-            1000 + fieldIdBase(si) + i)
-        }.asJava)
-      val entrySchema = manifestEntrySchemaWith(partitionSchema)
-      val manifestPath = metaDir.resolve(s"manifest-${UUID.randomUUID()}.avro")
-      Using.resource(new DataFileWriter[GenericRecord](
-        new GenericDatumWriter[GenericRecord](entrySchema))) { w =>
-        w.create(entrySchema, manifestPath.toFile)
-        parts.foreach { case (f, tuple) =>
-          val dfr = new GenericData.Record(entrySchema.getField("data_file").schema())
-          dfr.put("file_path", s"file://${f.toAbsolutePath}")
-          dfr.put("file_format", "PARQUET")
-          val pr = new GenericData.Record(partitionSchema)
-          pfieldNames.zip(tuple).foreach { case (n, v) => pr.put(n, v) }
-          dfr.put("partition", pr)
-          dfr.put("record_count", parquetRowCount(f))
-          dfr.put("file_size_in_bytes", Files.size(f))
-          dfr.put("block_size_in_bytes", 64L * 1024 * 1024)
-          val e = new GenericData.Record(entrySchema)
-          e.put("status", 1) // ADDED
-          e.put("snapshot_id", snapIds(si))
-          e.put("data_file", dfr)
-          w.append(e)
-        }
-      }
-      (manifestPath, parts.size)
+      val (manifest, n) = writeSpecData(slice, destRoot.resolve("data").resolve(s"s$si"),
+        metaDir, spec, firstFieldIds(si), snapIds(si))
+      (manifestListRow(manifestListSchema, manifest, snapIds(si), n, specId = si), n)
     }
-
     // snapshot 1 sees only the old-spec manifest; snapshot 2 (current)
     // sees both, each row tagged with the spec it was written under
-    def writeList(rows: Seq[(Path, Int, Int, Long)]): Path = {
-      val lp = metaDir.resolve(s"snap-${rows.last._4}-${UUID.randomUUID()}.avro")
-      Using.resource(new DataFileWriter[GenericRecord](
-        new GenericDatumWriter[GenericRecord](manifestListSchema))) { w =>
-        w.create(manifestListSchema, lp.toFile)
-        rows.foreach { case (mp, n, specId, snapId) =>
-          val m = new GenericData.Record(manifestListSchema)
-          m.put("manifest_path", s"file://${mp.toAbsolutePath}")
-          m.put("manifest_length", Files.size(mp))
-          m.put("partition_spec_id", specId)
-          m.put("added_snapshot_id", snapId)
-          m.put("added_data_files_count", n)
-          m.put("existing_data_files_count", 0)
-          m.put("deleted_data_files_count", 0)
-          w.append(m)
-        }
-      }
-      lp
-    }
-    val list1 = writeList(Seq((perSpec(0)._1, perSpec(0)._2, 0, snapIds(0))))
-    val list2 = writeList(Seq(
-      (perSpec(0)._1, perSpec(0)._2, 0, snapIds(0)),
-      (perSpec(1)._1, perSpec(1)._2, 1, snapIds(1))))
-
+    val lists = Seq(rows.take(1), rows).zip(snapIds).map { case (rs, id) =>
+      writeManifestList(metaDir, id, manifestListSchema, rs.map(_._1)) }
     val nowMs = Files.getLastModifiedTime(destRoot).toMillis
-    val m = mapper
-    val root = m.createObjectNode()
-    root.put("format-version", 1)
-    root.put("table-uuid", UUID.randomUUID().toString)
-    root.put("location", s"file://${destRoot.toAbsolutePath}")
-    root.put("last-updated-ms", nowMs)
-    root.put("last-column-id", df.schema.fields.length)
-    val schemaNode = root.putObject("schema")
-    schemaNode.put("type", "struct")
-    schemaNode.put("schema-id", 0)
-    val fieldsArr = schemaNode.putArray("fields")
-    df.schema.fields.zipWithIndex.foreach { case (f, i) =>
-      val fn = fieldsArr.addObject()
-      fn.put("id", i + 1)
-      fn.put("name", f.name)
-      fn.put("required", !f.nullable)
-      fn.put("type", toIcebergType(f.dataType))
-    }
-    val colId = df.schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
-    val legacySpec = root.putArray("partition-spec") // legacy v1 field: the DEFAULT spec
-    val specsArr = root.putArray("partition-specs")
-    specs.zipWithIndex.foreach { case (pfields, si) =>
-      val sp = specsArr.addObject()
-      sp.put("spec-id", si)
-      val fa = sp.putArray("fields")
-      pfields.zipWithIndex.foreach { case ((c, t), i) =>
-        val targets =
-          if (si == 1) Seq(fa.addObject(), legacySpec.addObject())
-          else Seq(fa.addObject())
-        targets.foreach { fn =>
-          fn.put("name", partitionFieldName(c, t))
-          fn.put("transform", t)
-          fn.put("source-id", colId(c))
-          fn.put("field-id", 1000 + fieldIdBase(si) + i)
-        }
-      }
-    }
-    root.put("default-spec-id", 1)
-    root.put("last-partition-id", 999 + math.max(specs.map(_.size).sum, 1))
-    root.put("default-sort-order-id", 0)
-    val orders = root.putArray("sort-orders")
-    val order0 = orders.addObject()
-    order0.put("order-id", 0)
-    order0.putArray("fields")
-    root.putObject("properties")
-    root.put("current-snapshot-id", snapIds(1))
-    val snaps = root.putArray("snapshots")
-    Seq((snapIds(0), list1), (snapIds(1), list2)).foreach { case (id, lp) =>
-      val sn = snaps.addObject()
-      sn.put("snapshot-id", id)
-      sn.put("timestamp-ms", nowMs)
-      sn.putObject("summary").put("operation", "append")
-      sn.put("manifest-list", s"file://${lp.toAbsolutePath}")
-    }
-    root.putArray("snapshot-log")
-    root.putArray("metadata-log")
-    Files.writeString(metaDir.resolve("v1.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    Files.writeString(metaDir.resolve("version-hint.text"), "1")
-    (perSpec(0)._2, perSpec(1)._2)
+    commitMetadata(metaDir, 1L, tableMetadata(destRoot, 1, nowMs, Seq(df.schema), 0,
+      specs, 1, 999 + math.max(specs.map(_.size).sum, 1),
+      snapIds.zip(lists).map { case (id, lp) => SnapshotEntry(id, nowMs, "append", lp) }))
+    (rows(0)._2, rows(1)._2)
   }
-
-  /** Canonical form for data-file path equality: any `file:` URI or
-    * plain path → one absolute `/…` path. Position deletes reference
-    * data files by EXACT path string, so both the delete-file writer
-    * and the reader's anti-join normalize through this. */
-  private[lake] def normPathCol(c: org.apache.spark.sql.Column) =
-    org.apache.spark.sql.functions.regexp_replace(c, "^file:/+", "/")
 
   /** Spec column ids for position-delete files (Iceberg spec §Position
     * Delete Files): 2147483546 = file_path, 2147483545 = pos. Spark
@@ -821,6 +809,24 @@ object IcebergInterop {
     * can bind the columns by id. */
   private val DeleteFileIdFilePath = 2147483546L
   private val DeleteFileIdPos = 2147483545L
+
+  /** One sorted position-delete file under `dir` for the rows of `scan`,
+    * a filtered scan of data files: positions come from
+    * `_metadata.file_path`/`_metadata.row_index` on the distributed
+    * scan (no driver-side row handling) — row_index IS the Iceberg
+    * position, the 0-based ordinal within the data file. */
+  private def writePositionDeletes(scan: DataFrame, dir: Path): Seq[Path] = {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val fpMeta = new MetadataBuilder().putLong("parquet.field.id", DeleteFileIdFilePath).build()
+    val posMeta = new MetadataBuilder().putLong("parquet.field.id", DeleteFileIdPos).build()
+    writeParquet(scan
+      .select(
+        concat(lit("file://"), normPathCol(col("_metadata.file_path")))
+          .as("file_path", fpMeta),
+        col("_metadata.row_index").as("pos", posMeta))
+      .repartition(1) // deletes are a small fraction of a snapshot; one sorted file
+      .sortWithinPartitions("file_path", "pos"), dir)
+  }
 
   /** Export `table`'s snapshot as an Iceberg **v2** table with
     * row-level POSITION DELETES: all snapshot rows are written as data
@@ -845,178 +851,34 @@ object IcebergInterop {
   def exportSnapshotV2(table: LakeTable, destRoot: Path,
                        deleteWhere: org.apache.spark.sql.Column,
                        version: Long = -1L): (Int, Long) = {
-    import org.apache.spark.sql.functions.{col, concat, lit}
     val df = table.snapshot(version)
     df.schema.fields.foreach(f => toIcebergType(f.dataType)) // fail loud up front
     val spark = df.sparkSession
     val dataDir = destRoot.resolve("data")
     val metaDir = destRoot.resolve("metadata")
     Files.createDirectories(metaDir)
-    df.write.mode("error").parquet(dataDir.toString)
-    val parts = Using.resource(Files.list(dataDir)) { s =>
-      s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-    }
-
-    // positions of to-delete rows, computed distributed from the
-    // written files themselves (row_index IS the Iceberg position:
-    // 0-based ordinal within the data file)
+    val parts = writeParquet(df, dataDir)
     val deletesDir = destRoot.resolve("deletes")
-    val fpMeta = new MetadataBuilder().putLong("parquet.field.id", DeleteFileIdFilePath).build()
-    val posMeta = new MetadataBuilder().putLong("parquet.field.id", DeleteFileIdPos).build()
-    spark.read.parquet(dataDir.toString)
-      .filter(deleteWhere)
-      .select(
-        concat(lit("file://"), normPathCol(col("_metadata.file_path")))
-          .as("file_path", fpMeta),
-        col("_metadata.row_index").as("pos", posMeta))
-      .repartition(1) // deletes are a small fraction of a snapshot; one sorted file
-      .sortWithinPartitions("file_path", "pos")
-      .write.mode("error").parquet(deletesDir.toString)
-    val deleteParts = Using.resource(Files.list(deletesDir)) { s =>
-      s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-    }
+    val deleteParts =
+      writePositionDeletes(spark.read.parquet(dataDir.toString).filter(deleteWhere), deletesDir)
     val nDeleted = spark.read.parquet(deletesDir.toString).count()
 
-    val snapshotId = math.abs(UUID.randomUUID().getLeastSignificantBits) | 1L
-    val dataManifest = writeManifestV2File(metaDir, parts, content = 0,
-      snapshotId, seq = 1L)
-    val deleteManifest = writeManifestV2File(metaDir, deleteParts, content = 1,
-      snapshotId, seq = 1L)
-
+    val snapshotId = newSnapshotId()
+    val es = manifestEntrySchemaV2
+    val dataManifest = writeManifest(metaDir, es,
+      parts.map(addedEntry(es, _, snapshotId, seq = 1L)))
+    val deleteManifest = writeManifest(metaDir, es,
+      deleteParts.map(addedEntry(es, _, snapshotId, content = 1, seq = 1L)))
     // v2 manifest list: the delete manifest rides with content = 1
-    val listPath = metaDir.resolve(s"snap-$snapshotId-${UUID.randomUUID()}.avro")
-    writeManifestListV2(listPath, Seq(
-      ManifestRow(dataManifest, 0, 1L, parts.size, snapshotId),
-      ManifestRow(deleteManifest, 1, 1L, deleteParts.size, snapshotId)))
-
-    writeV2Metadata(destRoot, metaDir, df.schema, lastSeq = 1L,
-      snapshots = Seq((snapshotId, 1L, "overwrite", listPath)),
-      Files.getLastModifiedTime(destRoot).toMillis)
+    val ls = manifestListSchemaV2
+    val listPath = writeManifestList(metaDir, snapshotId, ls, Seq(
+      manifestListRow(ls, dataManifest, snapshotId, parts.size, seq = 1L),
+      manifestListRow(ls, deleteManifest, snapshotId, deleteParts.size, content = 1, seq = 1L)))
+    val nowMs = Files.getLastModifiedTime(destRoot).toMillis
+    commitMetadata(metaDir, 1L, tableMetadata(destRoot, 2, nowMs, Seq(df.schema), 0,
+      Seq(Nil), 0, 999, Seq(SnapshotEntry(snapshotId, nowMs, "overwrite", listPath,
+        sequence = Some(1L), schemaId = Some(0)))))
     (parts.size, nDeleted)
-  }
-
-  /** One v2 manifest: one ADDED entry per file, explicit sequence
-    * numbers (real writers may leave them null and inherit — the
-    * reader supports both), `content` on every data_file record, and
-    * `equality_ids` when the files are equality deletes. */
-  private def writeManifestV2File(metaDir: Path, files: Seq[Path], content: Int,
-                                  snapshotId: Long, seq: Long,
-                                  equalityIds: Seq[Int] = Nil): Path = {
-    val partitionRecord = new GenericData.Record(manifestEntrySchemaV2
-      .getField("data_file").schema().getField("partition").schema())
-    val mp = metaDir.resolve(s"manifest-${UUID.randomUUID()}.avro")
-    Using.resource(new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](manifestEntrySchemaV2))) { w =>
-      w.create(manifestEntrySchemaV2, mp.toFile)
-      files.foreach { f =>
-        val dfr = new GenericData.Record(
-          manifestEntrySchemaV2.getField("data_file").schema())
-        dfr.put("content", content)
-        dfr.put("file_path", s"file://${f.toAbsolutePath}")
-        dfr.put("file_format", "PARQUET")
-        dfr.put("partition", partitionRecord)
-        dfr.put("record_count", parquetRowCount(f))
-        dfr.put("file_size_in_bytes", Files.size(f))
-        if (equalityIds.nonEmpty)
-          dfr.put("equality_ids", equalityIds.map(Int.box).asJava)
-        val e = new GenericData.Record(manifestEntrySchemaV2)
-        e.put("status", 1) // ADDED
-        e.put("snapshot_id", snapshotId)
-        e.put("sequence_number", seq)
-        e.put("file_sequence_number", seq)
-        e.put("data_file", dfr)
-        w.append(e)
-      }
-    }
-    mp
-  }
-
-  private case class ManifestRow(path: Path, content: Int, seq: Long,
-                                 nAdded: Int, snapshotId: Long)
-
-  private def writeManifestListV2(listPath: Path, rows: Seq[ManifestRow]): Unit =
-    Using.resource(new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](manifestListSchemaV2))) { w =>
-      w.create(manifestListSchemaV2, listPath.toFile)
-      rows.foreach { r =>
-        val m = new GenericData.Record(manifestListSchemaV2)
-        m.put("manifest_path", s"file://${r.path.toAbsolutePath}")
-        m.put("manifest_length", Files.size(r.path))
-        m.put("partition_spec_id", 0)
-        m.put("content", r.content)
-        m.put("sequence_number", r.seq)
-        m.put("min_sequence_number", r.seq)
-        m.put("added_snapshot_id", r.snapshotId)
-        m.put("added_data_files_count", r.nAdded)
-        m.put("existing_data_files_count", 0)
-        m.put("deleted_data_files_count", 0)
-        w.append(m)
-      }
-    }
-
-  /** v2 table metadata JSON: format-version 2 requires
-    * last-sequence-number, schemas + current-schema-id, and a
-    * per-snapshot sequence-number. `snapshots` are
-    * (snapshotId, sequenceNumber, operation, manifestListPath) in
-    * commit order; the last one becomes current. */
-  private def writeV2Metadata(destRoot: Path, metaDir: Path, schema: StructType,
-                              lastSeq: Long,
-                              snapshots: Seq[(Long, Long, String, Path)],
-                              nowMs: Long): Unit = {
-    val m = mapper
-    val root = m.createObjectNode()
-    root.put("format-version", 2)
-    root.put("table-uuid", UUID.randomUUID().toString)
-    root.put("location", s"file://${destRoot.toAbsolutePath}")
-    root.put("last-sequence-number", lastSeq)
-    root.put("last-updated-ms", nowMs)
-    root.put("last-column-id", schema.fields.length)
-    val schemaNode = m.createObjectNode()
-    schemaNode.put("type", "struct")
-    schemaNode.put("schema-id", 0)
-    val fieldsArr = schemaNode.putArray("fields")
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
-      val fn = fieldsArr.addObject()
-      fn.put("id", i + 1)
-      fn.put("name", f.name)
-      fn.put("required", !f.nullable)
-      fn.put("type", toIcebergType(f.dataType))
-    }
-    root.put("current-schema-id", 0)
-    root.putArray("schemas").add(schemaNode)
-    val specs = root.putArray("partition-specs")
-    val spec0 = specs.addObject()
-    spec0.put("spec-id", 0)
-    spec0.putArray("fields")
-    root.put("default-spec-id", 0)
-    root.put("last-partition-id", 999)
-    root.put("default-sort-order-id", 0)
-    val orders = root.putArray("sort-orders")
-    val order0 = orders.addObject()
-    order0.put("order-id", 0)
-    order0.putArray("fields")
-    root.putObject("properties")
-    root.put("current-snapshot-id", snapshots.last._1)
-    val snaps = root.putArray("snapshots")
-    snapshots.zipWithIndex.foreach { case ((id, seq, op, lp), i) =>
-      val snap = snaps.addObject()
-      snap.put("snapshot-id", id)
-      if (i > 0) snap.put("parent-snapshot-id", snapshots(i - 1)._1)
-      snap.put("sequence-number", seq)
-      snap.put("timestamp-ms", nowMs)
-      snap.put("schema-id", 0)
-      snap.putObject("summary").put("operation", op)
-      snap.put("manifest-list", s"file://${lp.toAbsolutePath}")
-    }
-    root.putArray("snapshot-log")
-    root.putArray("metadata-log")
-    Files.writeString(metaDir.resolve("v1.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    Files.writeString(metaDir.resolve("version-hint.text"), "1")
   }
 
   /** Export a CDC/upsert-shaped Iceberg v2 table with EQUALITY DELETES
@@ -1064,16 +926,9 @@ object IcebergInterop {
     val spark = df.sparkSession
     val metaDir = destRoot.resolve("metadata")
     Files.createDirectories(metaDir)
-    def writeAndList(d: DataFrame, dir: Path): Seq[Path] = {
-      d.write.mode("error").parquet(dir.toString)
-      Using.resource(Files.list(dir)) { s =>
-        s.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-      }
-    }
-    val baseParts = writeAndList(df, destRoot.resolve("data").resolve("s1"))
-    val upsertParts = writeAndList(upserts.select(df.columns.map(col): _*),
+    val baseDir = destRoot.resolve("data").resolve("s1")
+    val baseParts = writeParquet(df, baseDir)
+    val upsertParts = writeParquet(upserts.select(df.columns.map(col): _*),
       destRoot.resolve("data").resolve("s2"))
     // the equality-delete file: key tuples to kill at sequence 2, with
     // the schema field ids in the parquet footer (spec binding)
@@ -1086,53 +941,35 @@ object IcebergInterop {
     val delDf = keyed.select(keyCols.zip(idMeta).map { case (c, md) =>
       col(c).as(c, md)
     }: _*).repartition(1).sortWithinPartitions(keyCols.map(col): _*)
-    val eqParts = writeAndList(delDf, destRoot.resolve("deletes"))
+    val eqParts = writeParquet(delDf, destRoot.resolve("deletes"))
     val nDeleteKeys = spark.read.parquet(destRoot.resolve("deletes").toString).count()
     // optional position-delete file against the seq-1 data files, same
-    // commit — the mixed-flavor shape (spec column ids in the footer)
-    val posParts: Seq[Path] = posDeleteWhere.toSeq.flatMap { w =>
-      import org.apache.spark.sql.functions.concat
-      import org.apache.spark.sql.functions.lit
-      val fpMeta = new MetadataBuilder()
-        .putLong("parquet.field.id", DeleteFileIdFilePath).build()
-      val posMeta = new MetadataBuilder()
-        .putLong("parquet.field.id", DeleteFileIdPos).build()
-      val dir = destRoot.resolve("posdeletes")
-      spark.read.parquet(destRoot.resolve("data").resolve("s1").toString)
-        .filter(w)
-        .select(
-          concat(lit("file://"), normPathCol(col("_metadata.file_path")))
-            .as("file_path", fpMeta),
-          col("_metadata.row_index").as("pos", posMeta))
-        .repartition(1).sortWithinPartitions("file_path", "pos")
-        .write.mode("error").parquet(dir.toString)
-      Using.resource(Files.list(dir)) { s =>
-        s.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-      }
-    }
+    // commit — the mixed-flavor shape
+    val posParts: Seq[Path] = posDeleteWhere.toSeq.flatMap(w => writePositionDeletes(
+      spark.read.parquet(baseDir.toString).filter(w), destRoot.resolve("posdeletes")))
 
-    val snap1 = math.abs(UUID.randomUUID().getLeastSignificantBits) | 1L
+    val snap1 = newSnapshotId()
     val snap2 = snap1 + 1
-    val m1 = writeManifestV2File(metaDir, baseParts, content = 0, snap1, seq = 1L)
-    val m2 = writeManifestV2File(metaDir, upsertParts, content = 0, snap2, seq = 2L)
-    val m3 = writeManifestV2File(metaDir, eqParts, content = 2, snap2, seq = 2L,
-      equalityIds = keyCols.map(colId))
-    val mPos = posDeleteWhere.map(_ =>
-      writeManifestV2File(metaDir, posParts, content = 1, snap2, seq = 2L))
-    val list1 = metaDir.resolve(s"snap-$snap1-${UUID.randomUUID()}.avro")
-    writeManifestListV2(list1, Seq(
-      ManifestRow(m1, 0, 1L, baseParts.size, snap1)))
-    val list2 = metaDir.resolve(s"snap-$snap2-${UUID.randomUUID()}.avro")
-    writeManifestListV2(list2, Seq(
-      ManifestRow(m1, 0, 1L, baseParts.size, snap1),
-      ManifestRow(m2, 0, 2L, upsertParts.size, snap2),
-      ManifestRow(m3, 1, 2L, eqParts.size, snap2)) ++
-      mPos.map(mp => ManifestRow(mp, 1, 2L, posParts.size, snap2)))
-    writeV2Metadata(destRoot, metaDir, df.schema, lastSeq = 2L,
-      snapshots = Seq((snap1, 1L, "append", list1), (snap2, 2L, "overwrite", list2)),
-      Files.getLastModifiedTime(destRoot).toMillis)
+    val es = manifestEntrySchemaV2
+    val m1 = writeManifest(metaDir, es, baseParts.map(addedEntry(es, _, snap1, seq = 1L)))
+    val m2 = writeManifest(metaDir, es, upsertParts.map(addedEntry(es, _, snap2, seq = 2L)))
+    val m3 = writeManifest(metaDir, es, eqParts.map(addedEntry(es, _, snap2,
+      content = 2, seq = 2L, equalityIds = keyCols.map(colId))))
+    val mPos = posDeleteWhere.map(_ => writeManifest(metaDir, es,
+      posParts.map(addedEntry(es, _, snap2, content = 1, seq = 2L))))
+    val ls = manifestListSchemaV2
+    val base = manifestListRow(ls, m1, snap1, baseParts.size, seq = 1L)
+    val list1 = writeManifestList(metaDir, snap1, ls, Seq(base))
+    val list2 = writeManifestList(metaDir, snap2, ls, Seq(base,
+      manifestListRow(ls, m2, snap2, upsertParts.size, seq = 2L),
+      manifestListRow(ls, m3, snap2, eqParts.size, content = 1, seq = 2L)) ++
+      mPos.map(manifestListRow(ls, _, snap2, posParts.size, content = 1, seq = 2L)))
+    val nowMs = Files.getLastModifiedTime(destRoot).toMillis
+    commitMetadata(metaDir, 1L, tableMetadata(destRoot, 2, nowMs, Seq(df.schema), 0,
+      Seq(Nil), 0, 999, Seq(
+        SnapshotEntry(snap1, nowMs, "append", list1, sequence = Some(1L), schemaId = Some(0)),
+        SnapshotEntry(snap2, nowMs, "overwrite", list2, parent = Some(snap1),
+          sequence = Some(2L), schemaId = Some(0)))))
     (baseParts.size + upsertParts.size, nDeleteKeys)
   }
 
@@ -1159,7 +996,6 @@ object IcebergInterop {
     val versions = table.versions
     val metaDir = destRoot.resolve("metadata")
     Files.createDirectories(metaDir)
-    val m = mapper
     // distinct declared schemas in version order → schema-ids
     val schemaJsonByVersion: Map[Long, Option[String]] =
       versions.map(v => v -> table.versionState(v)._2.map(_.json)).toMap
@@ -1169,20 +1005,14 @@ object IcebergInterop {
     val distinctSchemas: Seq[String] =
       versions.flatMap(v => schemaJsonByVersion(v)).distinct
     val schemaId: Map[String, Int] = distinctSchemas.zipWithIndex.toMap
-    // one manifest per data dir, created on first appearance
-    case class ManifestRef(path: Path, nFiles: Int, addedSnapshot: Long)
-    val manifestByDir = scala.collection.mutable.LinkedHashMap.empty[String, ManifestRef]
-    def writeManifestFor(dir: String, snapshotId: Long): ManifestRef = {
-      val src = table.root.resolve(dir)
-      val parts = Using.resource(Files.list(src)) { s =>
-        s.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-      }
+    // one manifest per data dir, created on first appearance: (manifest,
+    // file count, adding snapshot)
+    val manifestByDir = scala.collection.mutable.LinkedHashMap.empty[String, (Path, Int, Long)]
+    def writeManifestFor(dir: String, snapshotId: Long): (Path, Int, Long) = {
       // hard-link (copy across filesystems) the immutable data files
       val destDir = destRoot.resolve("data").resolve(dir.stripPrefix("data/"))
       Files.createDirectories(destDir)
-      val linked = parts.map { f =>
+      val linked = parquetFiles(table.root.resolve(dir)).map { f =>
         val d = destDir.resolve(f.getFileName)
         if (!Files.exists(d)) {
           try Files.createLink(d, f)
@@ -1190,28 +1020,8 @@ object IcebergInterop {
         }
         d
       }
-      val mp = metaDir.resolve(s"manifest-${UUID.randomUUID()}.avro")
-      Using.resource(new DataFileWriter[GenericRecord](
-        new GenericDatumWriter[GenericRecord](manifestEntrySchema))) { w =>
-        w.create(manifestEntrySchema, mp.toFile)
-        linked.foreach { f =>
-          val dfr = new GenericData.Record(
-            manifestEntrySchema.getField("data_file").schema())
-          dfr.put("file_path", s"file://${f.toAbsolutePath}")
-          dfr.put("file_format", "PARQUET")
-          dfr.put("partition", new GenericData.Record(manifestEntrySchema
-            .getField("data_file").schema().getField("partition").schema()))
-          dfr.put("record_count", parquetRowCount(f))
-          dfr.put("file_size_in_bytes", Files.size(f))
-          dfr.put("block_size_in_bytes", 64L * 1024 * 1024)
-          val e = new GenericData.Record(manifestEntrySchema)
-          e.put("status", 1)
-          e.put("snapshot_id", snapshotId)
-          e.put("data_file", dfr)
-          w.append(e)
-        }
-      }
-      ManifestRef(mp, linked.size, snapshotId)
+      (writeManifest(metaDir, manifestEntrySchema,
+        linked.map(addedEntry(manifestEntrySchema, _, snapshotId))), linked.size, snapshotId)
     }
     // per version: ensure manifests exist for its dirs, write its
     // manifest list over exactly the live set
@@ -1220,99 +1030,33 @@ object IcebergInterop {
       dirs.foreach { d =>
         if (!manifestByDir.contains(d)) manifestByDir(d) = writeManifestFor(d, v)
       }
-      val lp = metaDir.resolve(s"snap-$v-${UUID.randomUUID()}.avro")
-      Using.resource(new DataFileWriter[GenericRecord](
-        new GenericDatumWriter[GenericRecord](manifestListSchema))) { w =>
-        w.create(manifestListSchema, lp.toFile)
-        dirs.foreach { d =>
-          val ref = manifestByDir(d)
-          val r = new GenericData.Record(manifestListSchema)
-          r.put("manifest_path", s"file://${ref.path.toAbsolutePath}")
-          r.put("manifest_length", Files.size(ref.path))
-          r.put("partition_spec_id", 0)
-          r.put("added_snapshot_id", ref.addedSnapshot)
-          r.put("added_data_files_count", ref.nFiles)
-          r.put("existing_data_files_count", 0)
-          r.put("deleted_data_files_count", 0)
-          w.append(r)
-        }
-      }
-      v -> lp
+      writeManifestList(metaDir, v, manifestListSchema, dirs.map { d =>
+        val (mp, nFiles, added) = manifestByDir(d)
+        manifestListRow(manifestListSchema, mp, added, nFiles)
+      })
     }
-    // metadata JSON: schemas list + per-snapshot schema-id
-    val nowMs = Files.getLastModifiedTime(destRoot).toMillis
-    val root = m.createObjectNode()
-    root.put("format-version", 1)
-    root.put("table-uuid", UUID.randomUUID().toString)
-    root.put("location", s"file://${destRoot.toAbsolutePath}")
-    root.put("last-updated-ms", nowMs)
-    def schemaNodeOf(json: String, id: Int) = {
-      val fields = DataType.fromJson(json).asInstanceOf[StructType].fields
-      val n = m.createObjectNode()
-      n.put("type", "struct")
-      n.put("schema-id", id)
-      val arr = n.putArray("fields")
-      fields.zipWithIndex.foreach { case (f, i) =>
-        val fn = arr.addObject()
-        fn.put("id", i + 1)
-        fn.put("name", f.name)
-        fn.put("required", false)
-        fn.put("type", toIcebergType(f.dataType))
-      }
-      n
-    }
-    val latestJson = versions.reverse.flatMap(v => schemaJsonByVersion(v)).head
-    root.put("last-column-id",
-      DataType.fromJson(latestJson).asInstanceOf[StructType].fields.length)
-    root.set[ObjectNode]("schema", schemaNodeOf(latestJson, schemaId(latestJson)))
-    root.put("current-schema-id", schemaId(latestJson))
-    val schemasArr = root.putArray("schemas")
-    distinctSchemas.foreach(j => schemasArr.add(schemaNodeOf(j, schemaId(j))))
-    root.putArray("partition-spec")
-    val specs = root.putArray("partition-specs")
-    val spec0 = specs.addObject()
-    spec0.put("spec-id", 0)
-    spec0.putArray("fields")
-    root.put("default-spec-id", 0)
-    root.put("last-partition-id", 999)
-    root.put("default-sort-order-id", 0)
-    val orders = root.putArray("sort-orders")
-    val order0 = orders.addObject()
-    order0.put("order-id", 0)
-    order0.putArray("fields")
-    root.putObject("properties")
-    root.put("current-snapshot-id", versions.last)
     // snapshots get DISTINCT, strictly increasing timestamps (one
     // minute apart, ending at nowMs) — timestamp-resolved time travel
     // ([[readIcebergAsOf]]) needs an order, and a history whose
     // commits all share one timestamp cannot express one
-    def tsOf(v: Long): Long =
-      nowMs - (versions.last - v) * 60000L
-    val snapsArr = root.putArray("snapshots")
-    var lastSchema: Option[String] = None
-    versions.zip(listByVersion).foreach { case (v, (_, lp)) =>
-      val sn = snapsArr.addObject()
-      sn.put("snapshot-id", v)
-      if (v != versions.head) sn.put("parent-snapshot-id", v - 1)
-      sn.put("timestamp-ms", tsOf(v))
-      sn.putObject("summary").put("operation", "append")
-      sn.put("manifest-list", s"file://${lp.toAbsolutePath}")
-      // schema at this snapshot: last declared at or before v
-      val sj = schemaJsonByVersion(v).orElse(lastSchema)
-      sj.foreach { j => sn.put("schema-id", schemaId(j)); lastSchema = Some(j) }
+    val nowMs = Files.getLastModifiedTime(destRoot).toMillis
+    // schema at each snapshot: the last one declared at or before it
+    val schemaAt = versions.map(schemaJsonByVersion).scanLeft(Option.empty[String])(
+      (last, sj) => sj.orElse(last)).tail
+    val snapshots = versions.zip(listByVersion).zip(schemaAt).map { case ((v, lp), sj) =>
+      SnapshotEntry(v, nowMs - (versions.last - v) * 60000L, "append", lp,
+        parent = if (v != versions.head) Some(v - 1) else None,
+        schemaId = sj.map(schemaId))
     }
-    val logArr = root.putArray("snapshot-log")
-    versions.foreach { v =>
-      val le = logArr.addObject()
-      le.put("timestamp-ms", tsOf(v))
-      le.put("snapshot-id", v)
-    }
-    root.putArray("metadata-log")
-    Files.writeString(metaDir.resolve("v1.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    Files.writeString(metaDir.resolve("version-hint.text"), "1")
+    val latestJson = versions.reverse.flatMap(v => schemaJsonByVersion(v)).head
+    commitMetadata(metaDir, 1L, tableMetadata(destRoot, 1, nowMs,
+      distinctSchemas.map(j => StructType(DataType.fromJson(j).asInstanceOf[StructType]
+        .fields.map(_.copy(nullable = true)))),
+      schemaId(latestJson), Seq(Nil), 0, 999, snapshots, schemaList = true, logged = true))
     versions.size
   }
+
+  // ---- maintenance ---------------------------------------------------------
 
   case class ExpireResult(expired: Seq[Long], deletedManifestLists: Int,
                           deletedManifests: Int, deletedDataFiles: Int)
@@ -1344,9 +1088,8 @@ object IcebergInterop {
     * the WAP failure leg's cleanup. */
   def expireSnapshots(root: Path, retainLast: Int): ExpireResult = {
     require(retainLast >= 1, "must retain at least the current snapshot")
-    val metaPath = currentMetadata(root)
-    val m = mapper
-    val meta = m.readTree(Files.readString(metaPath))
+    val st = load(root)
+    val meta = st.meta
     val snaps = meta.get("snapshots").elements().asScala.toSeq
     // ref-referenced snapshots survive regardless of age — the spec's
     // branch/tag retention rule: expiring a tagged snapshot would turn
@@ -1393,22 +1136,16 @@ object IcebergInterop {
     }
     droppedLists.foreach(Files.delete(_))
     val keptIds = kept.map(_.get("snapshot-id").asLong()).toSet
-    val newMeta = meta.deepCopy[ObjectNode]()
-    val sArr = m.createArrayNode()
+    val sArr = mapper.createArrayNode()
     kept.foreach(sArr.add)
-    newMeta.set[ObjectNode]("snapshots", sArr)
-    if (newMeta.has("snapshot-log")) {
-      val lArr = m.createArrayNode()
-      newMeta.get("snapshot-log").elements().asScala
+    meta.set[JsonNode]("snapshots", sArr)
+    if (meta.has("snapshot-log")) {
+      val lArr = mapper.createArrayNode()
+      meta.get("snapshot-log").elements().asScala
         .filter(e => keptIds(e.get("snapshot-id").asLong())).foreach(lArr.add)
-      newMeta.set[ObjectNode]("snapshot-log", lArr)
+      meta.set[JsonNode]("snapshot-log", lArr)
     }
-    val curV = metaPath.getFileName.toString
-      .stripPrefix("v").stripSuffix(".metadata.json").toLong
-    Files.writeString(metaPath.getParent.resolve(s"v${curV + 1}.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(newMeta))
-    Files.writeString(metaPath.getParent.resolve("version-hint.text"),
-      (curV + 1).toString)
+    st.commitNext()
     ExpireResult(dropped.map(_.get("snapshot-id").asLong()),
       droppedLists.size, orphanManifests.size, nFiles)
   }
@@ -1429,50 +1166,30 @@ object IcebergInterop {
     require(name.nonEmpty && name != "main",
       "ref name must be non-empty and not 'main' (main is implicit: " +
         "the current snapshot)")
-    val metaPath = currentMetadata(root)
-    val m = mapper
-    val meta = m.readTree(Files.readString(metaPath)).deepCopy[ObjectNode]()
-    val ids = meta.get("snapshots").elements().asScala
+    val st = load(root)
+    val ids = st.meta.get("snapshots").elements().asScala
       .map(_.get("snapshot-id").asLong()).toSet
     require(ids(snapshotId),
       s"cannot ref unknown snapshot $snapshotId at $root (live: " +
         s"${ids.toSeq.sorted.mkString(", ")})")
-    val refs =
-      if (meta.has("refs") && meta.get("refs").isObject)
-        meta.get("refs").asInstanceOf[ObjectNode]
-      else meta.putObject("refs")
-    val r = refs.putObject(name)
-    r.put("snapshot-id", snapshotId)
-    r.put("type", refType)
-    val curV = metaPath.getFileName.toString
-      .stripPrefix("v").stripSuffix(".metadata.json").toLong
-    Files.writeString(metaPath.getParent.resolve(s"v${curV + 1}.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(meta))
-    Files.writeString(metaPath.getParent.resolve("version-hint.text"),
-      (curV + 1).toString)
+    putRef(st.meta, name, snapshotId, refType)
+    st.commitNext()
   }
 
   /** Remove a named ref (metadata-only, like [[setRef]]); the
     * snapshot itself stays until expiry decides its fate. */
   def dropRef(root: Path, name: String): Unit = {
-    val metaPath = currentMetadata(root)
-    val m = mapper
-    val meta = m.readTree(Files.readString(metaPath)).deepCopy[ObjectNode]()
-    require(meta.has("refs") && meta.get("refs").has(name),
+    val st = load(root)
+    require(st.meta.has("refs") && st.meta.get("refs").has(name),
       s"no ref '$name' at $root")
-    meta.get("refs").asInstanceOf[ObjectNode].remove(name)
-    val curV = metaPath.getFileName.toString
-      .stripPrefix("v").stripSuffix(".metadata.json").toLong
-    Files.writeString(metaPath.getParent.resolve(s"v${curV + 1}.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(meta))
-    Files.writeString(metaPath.getParent.resolve("version-hint.text"),
-      (curV + 1).toString)
+    st.meta.get("refs").asInstanceOf[ObjectNode].remove(name)
+    st.commitNext()
   }
 
   /** Resolve a ref name to its snapshot id ("main" → the current
     * snapshot, as in the real catalog). */
   def refSnapshotId(root: Path, name: String): Long = {
-    val meta = mapper.readTree(Files.readString(currentMetadata(root)))
+    val meta = load(root).meta
     if (name == "main") meta.get("current-snapshot-id").asLong()
     else {
       require(meta.has("refs") && meta.get("refs").has(name),
@@ -1500,15 +1217,11 @@ object IcebergInterop {
                   branch: String): Long = {
     require(branch.nonEmpty && branch != "main",
       "stage on a named branch, not main — main moving IS publishing")
-    val metaPath = currentMetadata(root)
-    val m = mapper
-    val meta = m.readTree(Files.readString(metaPath)).deepCopy[ObjectNode]()
+    val st = load(root)
+    val meta = st.meta
     require(meta.get("format-version").asInt() == 1,
       "stageAppend supports v1 exports")
-    val metaDir = metaPath.getParent
-    val snaps = meta.get("snapshots")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-    val ids = snaps.elements().asScala.map(_.get("snapshot-id").asLong()).toSeq
+    val snaps = meta.get("snapshots").asInstanceOf[ArrayNode]
     val parentId =
       if (meta.has("refs") && meta.get("refs").has(branch))
         meta.get("refs").get(branch).get("snapshot-id").asLong()
@@ -1524,13 +1237,7 @@ object IcebergInterop {
     // the staged batch must match the table's declared schema —
     // a drifted batch would stage fine and then read as NULLs (or die
     // at scan on a type change) AFTER publish, the worst time to learn
-    val declared = parseSchema(
-      if (meta.has("schema")) meta.get("schema")
-      else meta.get("schemas").elements().asScala
-        .find(_.get("schema-id").asInt() ==
-          meta.get("current-schema-id").asInt())
-        .getOrElse(throw new IllegalArgumentException(
-          s"current-schema-id not in schemas list at $root")))
+    val declared = parseSchema(currentSchema(meta, root))
     val declaredShape = declared.fields.map(f => (f.name, f.dataType)).toSeq
     val batchShape = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
     require(batchShape == declaredShape,
@@ -1539,79 +1246,23 @@ object IcebergInterop {
         "— evolve the table first, don't stage drift")
 
     // new data files + their ADDED manifest
-    val newId = ids.max + 1
-    val dataDir = root.resolve("data")
-      .resolve(s"wap-$newId-${UUID.randomUUID().toString.take(8)}")
-    df.write.mode("error").parquet(dataDir.toString)
-    val files = Using.resource(Files.list(dataDir)) { s =>
-      s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-    }
-    val dataFileSchema = manifestEntrySchema.getField("data_file").schema()
-    val mp = metaDir.resolve(s"manifest-${UUID.randomUUID()}.avro")
-    Using.resource(new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](manifestEntrySchema))) { w =>
-      w.create(manifestEntrySchema, mp.toFile)
-      files.foreach { f =>
-        val dfr = new GenericData.Record(dataFileSchema)
-        dfr.put("file_path", s"file://${f.toAbsolutePath}")
-        dfr.put("file_format", "PARQUET")
-        dfr.put("partition", new GenericData.Record(
-          dataFileSchema.getField("partition").schema()))
-        dfr.put("record_count", parquetRowCount(f))
-        dfr.put("file_size_in_bytes", Files.size(f))
-        dfr.put("block_size_in_bytes", 64L * 1024 * 1024)
-        val e = new GenericData.Record(manifestEntrySchema)
-        e.put("status", 1) // ADDED in this snapshot
-        e.put("snapshot_id", newId)
-        e.put("data_file", dfr)
-        w.append(e)
-      }
-    }
+    val newId = nextSnapshotId(meta)
+    val files = writeParquet(df, root.resolve("data")
+      .resolve(s"wap-$newId-${UUID.randomUUID().toString.take(8)}"))
+    val mp = writeManifest(st.dir, manifestEntrySchema,
+      files.map(addedEntry(manifestEntrySchema, _, newId)))
     // manifest list: the parent's entries carried verbatim + the new one
-    val lp = metaDir.resolve(s"snap-$newId-${UUID.randomUUID()}.avro")
-    Using.resource(new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](manifestListSchema))) { w =>
-      w.create(manifestListSchema, lp.toFile)
-      parentList.foreach { pr =>
-        val r = new GenericData.Record(manifestListSchema)
-        manifestListSchema.getFields.asScala.foreach(f =>
-          r.put(f.name(), pr.get(f.name())))
-        w.append(r)
-      }
-      val r = new GenericData.Record(manifestListSchema)
-      r.put("manifest_path", s"file://${mp.toAbsolutePath}")
-      r.put("manifest_length", Files.size(mp))
-      r.put("partition_spec_id", 0)
-      r.put("added_snapshot_id", newId)
-      r.put("added_data_files_count", files.size)
-      r.put("existing_data_files_count", 0)
-      r.put("deleted_data_files_count", 0)
-      w.append(r)
-    }
-    // snapshot node (fs-derived timestamp, strictly after the parent's)
-    val sn = snaps.addObject()
-    sn.put("snapshot-id", newId)
-    sn.put("parent-snapshot-id", parentId)
-    sn.put("timestamp-ms", math.max(
-      Files.getLastModifiedTime(metaDir).toMillis,
-      parent.get("timestamp-ms").asLong() + 1L))
-    sn.putObject("summary").put("operation", "append")
-    sn.put("manifest-list", s"file://${lp.toAbsolutePath}")
-    if (parent.has("schema-id")) sn.put("schema-id", parent.get("schema-id").asInt())
-    val refs =
-      if (meta.has("refs") && meta.get("refs").isObject)
-        meta.get("refs").asInstanceOf[ObjectNode]
-      else meta.putObject("refs")
-    val rn = refs.putObject(branch)
-    rn.put("snapshot-id", newId)
-    rn.put("type", "branch")
-    val curV = metaPath.getFileName.toString
-      .stripPrefix("v").stripSuffix(".metadata.json").toLong
-    Files.writeString(metaDir.resolve(s"v${curV + 1}.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(meta))
-    Files.writeString(metaDir.resolve("version-hint.text"), (curV + 1).toString)
+    val lp = writeManifestList(st.dir, newId, manifestListSchema,
+      parentList.map(pr => record(manifestListSchema,
+        manifestListSchema.getFields.asScala.toSeq.map(f => f.name -> pr.get(f.name)): _*)) :+
+        manifestListRow(manifestListSchema, mp, newId, files.size))
+    // fs-derived timestamp, strictly after the parent's
+    putSnapshot(snaps, SnapshotEntry(newId, math.max(
+      Files.getLastModifiedTime(st.dir).toMillis,
+      parent.get("timestamp-ms").asLong() + 1L), "append", lp,
+      parent = Some(parentId), schemaId = schemaIdOf(parent)))
+    putRef(meta, branch, newId, "branch")
+    st.commitNext()
     newId
   }
 
@@ -1622,17 +1273,57 @@ object IcebergInterop {
   def publishBranch(root: Path, branch: String): Long = {
     val id = refSnapshotId(root, branch)
     require(branch != "main", "main cannot publish onto itself")
-    val metaPath = currentMetadata(root)
-    val m = mapper
-    val meta = m.readTree(Files.readString(metaPath)).deepCopy[ObjectNode]()
-    meta.put("current-snapshot-id", id)
-    val curV = metaPath.getFileName.toString
-      .stripPrefix("v").stripSuffix(".metadata.json").toLong
-    Files.writeString(metaPath.getParent.resolve(s"v${curV + 1}.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(meta))
-    Files.writeString(metaPath.getParent.resolve("version-hint.text"),
-      (curV + 1).toString)
+    val st = load(root)
+    st.meta.put("current-snapshot-id", id)
+    st.commitNext()
     id
+  }
+
+  /** The current snapshot of a v1 table and its manifest-list rows —
+    * the input of both maintenance rewrites. */
+  private def currentV1(root: Path, action: String)
+      : (TableState, JsonNode, Seq[GenericRecord]) = {
+    val st = load(root)
+    val fv = st.meta.get("format-version").asInt()
+    require(fv == 1, s"$action supports v1 exports, got format-version $fv")
+    val currentId = st.meta.get("current-snapshot-id").asLong()
+    val cur = st.meta.get("snapshots").elements().asScala
+      .find(_.get("snapshot-id").asLong() == currentId)
+      .getOrElse(throw new IllegalArgumentException(
+        s"current snapshot $currentId not in snapshots list at $root"))
+    (st, cur, readAvro(resolveLoc(root, cur.get("manifest-list").asText())))
+  }
+
+  /** The live (non-DELETED) entries behind manifest-list `rows`,
+    * refusing anything but spec-0 unpartitioned manifests (rather than
+    * guessing partition-record schemas). */
+  private def liveUnpartitioned(root: Path, rows: Seq[GenericRecord],
+                                action: String): Seq[GenericRecord] = {
+    require(rows.forall(_.get("partition_spec_id").asInstanceOf[Integer] == 0),
+      s"$action handles only spec-0 manifest sets")
+    val entries = rows
+      .flatMap(r => readAvro(resolveLoc(root, r.get("manifest_path").toString)))
+      .filter(_.get("status").asInstanceOf[Integer] != 2) // drop DELETED
+    require(entries.forall(e => e.get("data_file").asInstanceOf[GenericRecord]
+        .getSchema.getField("partition").schema().getFields.isEmpty),
+      s"$action handles only unpartitioned manifest entries")
+    entries
+  }
+
+  /** Commit a `replace` snapshot over the single `manifest`, child of
+    * the current snapshot `cur` — both maintenance rewrites' tail. */
+  private def commitReplace(st: TableState, cur: JsonNode, snapId: Long,
+                            manifest: Path, added: Int, existing: Int): Unit = {
+    val lp = writeManifestList(st.dir, snapId, manifestListSchema,
+      Seq(manifestListRow(manifestListSchema, manifest, snapId, added, existing)))
+    val nowMs = Files.getLastModifiedTime(lp).toMillis
+    putSnapshot(st.meta.get("snapshots").asInstanceOf[ArrayNode],
+      SnapshotEntry(snapId, nowMs, "replace", lp,
+        parent = Some(cur.get("snapshot-id").asLong()), schemaId = schemaIdOf(cur)))
+    st.meta.put("current-snapshot-id", snapId)
+    if (st.meta.has("snapshot-log"))
+      logSnapshot(st.meta.get("snapshot-log").asInstanceOf[ArrayNode], snapId, nowMs)
+    st.commitNext()
   }
 
   /** MANIFEST COMPACTION (Iceberg's `rewrite_manifests` maintenance
@@ -1650,85 +1341,12 @@ object IcebergInterop {
     * schemas). Returns the number of manifests merged (≤1 = no-op,
     * nothing written). */
   def rewriteManifests(root: Path): Int = {
-    val metaPath = currentMetadata(root)
-    val m = mapper
-    val meta = m.readTree(Files.readString(metaPath))
-    require(meta.get("format-version").asInt() == 1,
-      s"manifest rewrite supports v1 exports, got format-version " +
-        s"${meta.get("format-version").asInt()}")
-    val metaDir = metaPath.getParent
-    val currentId = meta.get("current-snapshot-id").asLong()
-    val snaps = meta.get("snapshots").elements().asScala.toSeq
-    val cur = snaps.find(_.get("snapshot-id").asLong() == currentId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"current snapshot $currentId not in snapshots list at $root"))
-    val rows = readAvro(resolveLoc(root, cur.get("manifest-list").asText()))
+    val (st, cur, rows) = currentV1(root, "manifest rewrite")
     if (rows.size <= 1) return rows.size
-    require(rows.forall(_.get("partition_spec_id").asInstanceOf[Integer] == 0),
-      "manifest rewrite handles only spec-0 manifest sets")
-    val entries = rows
-      .flatMap(r => readAvro(resolveLoc(root, r.get("manifest_path").toString)))
-      .filter(_.get("status").asInstanceOf[Integer] != 2) // drop DELETED
-    val dataFileSchema = manifestEntrySchema.getField("data_file").schema()
-    require(entries.forall(e => e.get("data_file").asInstanceOf[GenericRecord]
-        .getSchema.getField("partition").schema().getFields.isEmpty),
-      "manifest rewrite handles only unpartitioned manifest entries")
-    val mp = metaDir.resolve(s"manifest-${UUID.randomUUID()}.avro")
-    Using.resource(new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](manifestEntrySchema))) { w =>
-      w.create(manifestEntrySchema, mp.toFile)
-      entries.foreach { e =>
-        val src = e.get("data_file").asInstanceOf[GenericRecord]
-        val dfr = new GenericData.Record(dataFileSchema)
-        Seq("file_path", "file_format", "record_count",
-          "file_size_in_bytes", "block_size_in_bytes")
-          .foreach(f => dfr.put(f, src.get(f)))
-        dfr.put("partition", new GenericData.Record(
-          dataFileSchema.getField("partition").schema()))
-        val n = new GenericData.Record(manifestEntrySchema)
-        n.put("status", 0) // EXISTING — lineage stays with the original commit
-        n.put("snapshot_id", e.get("snapshot_id"))
-        n.put("data_file", dfr)
-        w.append(n)
-      }
-    }
-    val newSnapId = snaps.map(_.get("snapshot-id").asLong()).max + 1
-    val lp = metaDir.resolve(s"snap-$newSnapId-${UUID.randomUUID()}.avro")
-    Using.resource(new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](manifestListSchema))) { w =>
-      w.create(manifestListSchema, lp.toFile)
-      val r = new GenericData.Record(manifestListSchema)
-      r.put("manifest_path", s"file://${mp.toAbsolutePath}")
-      r.put("manifest_length", Files.size(mp))
-      r.put("partition_spec_id", 0)
-      r.put("added_snapshot_id", newSnapId)
-      r.put("added_data_files_count", 0)
-      r.put("existing_data_files_count", entries.size)
-      r.put("deleted_data_files_count", 0)
-      w.append(r)
-    }
-    val nowMs = Files.getLastModifiedTime(lp).toMillis
-    val newMeta = meta.deepCopy[ObjectNode]()
-    val sn = newMeta.get("snapshots")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode].addObject()
-    sn.put("snapshot-id", newSnapId)
-    sn.put("parent-snapshot-id", currentId)
-    sn.put("timestamp-ms", nowMs)
-    sn.putObject("summary").put("operation", "replace")
-    sn.put("manifest-list", s"file://${lp.toAbsolutePath}")
-    if (cur.has("schema-id")) sn.put("schema-id", cur.get("schema-id").asInt())
-    newMeta.put("current-snapshot-id", newSnapId)
-    if (newMeta.has("snapshot-log")) {
-      val le = newMeta.get("snapshot-log")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode].addObject()
-      le.put("timestamp-ms", nowMs)
-      le.put("snapshot-id", newSnapId)
-    }
-    val curV = metaPath.getFileName.toString
-      .stripPrefix("v").stripSuffix(".metadata.json").toLong
-    Files.writeString(metaDir.resolve(s"v${curV + 1}.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(newMeta))
-    Files.writeString(metaDir.resolve("version-hint.text"), (curV + 1).toString)
+    val entries = liveUnpartitioned(root, rows, "manifest rewrite")
+    val mp = writeManifest(st.dir, manifestEntrySchema,
+      entries.map(existingEntry(manifestEntrySchema, _)))
+    commitReplace(st, cur, nextSnapshotId(st.meta), mp, added = 0, existing = entries.size)
     rows.size
   }
 
@@ -1764,27 +1382,8 @@ object IcebergInterop {
   def rewriteDataFiles(spark: SparkSession, root: Path,
                        targetFileBytes: Long = 128L * 1024 * 1024): RewriteDataResult = {
     require(targetFileBytes > 0, "target file size must be positive")
-    val metaPath = currentMetadata(root)
-    val m = mapper
-    val meta = m.readTree(Files.readString(metaPath))
-    require(meta.get("format-version").asInt() == 1,
-      s"data-file rewrite supports v1 exports, got format-version " +
-        s"${meta.get("format-version").asInt()}")
-    val metaDir = metaPath.getParent
-    val currentId = meta.get("current-snapshot-id").asLong()
-    val snaps = meta.get("snapshots").elements().asScala.toSeq
-    val cur = snaps.find(_.get("snapshot-id").asLong() == currentId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"current snapshot $currentId not in snapshots list at $root"))
-    val listRows = readAvro(resolveLoc(root, cur.get("manifest-list").asText()))
-    require(listRows.forall(_.get("partition_spec_id").asInstanceOf[Integer] == 0),
-      "data-file rewrite handles only spec-0 manifest sets")
-    val entries = listRows
-      .flatMap(r => readAvro(resolveLoc(root, r.get("manifest_path").toString)))
-      .filter(_.get("status").asInstanceOf[Integer] != 2) // drop DELETED
-    require(entries.forall(e => e.get("data_file").asInstanceOf[GenericRecord]
-        .getSchema.getField("partition").schema().getFields.isEmpty),
-      "data-file rewrite handles only unpartitioned manifest entries")
+    val (st, cur, listRows) = currentV1(root, "data-file rewrite")
+    val entries = liveUnpartitioned(root, listRows, "data-file rewrite")
     case class Live(entry: GenericRecord, path: Path, bytes: Long, rows: Long)
     val live = entries.map { e =>
       val df = e.get("data_file").asInstanceOf[GenericRecord]
@@ -1812,111 +1411,25 @@ object IcebergInterop {
     // rows that carry it while the row-count assertion still passes.
     // Schema-enforced reads give old files NULLs for new columns, the
     // same rule readIcebergImpl applies. (Delta optimize is the twin.)
-    val curSchemaNode =
-      if (meta.has("schema")) meta.get("schema")
-      else meta.get("schemas").elements().asScala
-        .find(_.get("schema-id").asInt() ==
-          meta.get("current-schema-id").asInt())
-        .getOrElse(throw new IllegalArgumentException(
-          s"current-schema-id not in schemas list at $root"))
     val binSchema = StructType(
-      parseSchema(curSchemaNode).fields.map(_.copy(nullable = true)))
-    val merged: Seq[(Path, Long)] = toMerge.map { bin =>
-      val tmp = TempDirs.create("graft-rdf")
-      spark.read.schema(binSchema).parquet(bin.map(_.path.toString): _*)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Using.resource(Files.list(tmp)) { s =>
-        s.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      } match {
-        case Seq(one) => one
-        case other => throw new IllegalStateException(
-          s"expected one coalesced part file, found ${other.size}")
-      }
-      val out = dataDir.resolve(s"compacted-${UUID.randomUUID()}.parquet")
-      Files.move(part, out)
+      parseSchema(currentSchema(st.meta, root)).fields.map(_.copy(nullable = true)))
+    val merged: Seq[Path] = toMerge.map { bin =>
+      val out = rewriteBin(spark, binSchema, bin.map(_.path), dataDir)
       val rows = parquetRowCount(out)
       val expect = bin.map(_.rows).sum
       require(rows == expect,
         s"compaction lost rows: bin of ${bin.size} files had $expect, " +
           s"rewrite holds $rows")
-      out -> rows
+      out
     }
     // one manifest: ADDED compacted outputs + EXISTING carried files
-    val dataFileSchema = manifestEntrySchema.getField("data_file").schema()
-    val mp = metaDir.resolve(s"manifest-${UUID.randomUUID()}.avro")
-    val newSnapId = snaps.map(_.get("snapshot-id").asLong()).max + 1
-    Using.resource(new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](manifestEntrySchema))) { w =>
-      w.create(manifestEntrySchema, mp.toFile)
-      merged.foreach { case (f, rows) =>
-        val dfr = new GenericData.Record(dataFileSchema)
-        dfr.put("file_path", s"file://${f.toAbsolutePath}")
-        dfr.put("file_format", "PARQUET")
-        dfr.put("partition", new GenericData.Record(
-          dataFileSchema.getField("partition").schema()))
-        dfr.put("record_count", rows)
-        dfr.put("file_size_in_bytes", Files.size(f))
-        dfr.put("block_size_in_bytes", 64L * 1024 * 1024)
-        val e = new GenericData.Record(manifestEntrySchema)
-        e.put("status", 1) // ADDED by this compaction commit
-        e.put("snapshot_id", newSnapId)
-        e.put("data_file", dfr)
-        w.append(e)
-      }
-      toCarry.flatten.foreach { f =>
-        val src = f.entry.get("data_file").asInstanceOf[GenericRecord]
-        val dfr = new GenericData.Record(dataFileSchema)
-        Seq("file_path", "file_format", "record_count",
-          "file_size_in_bytes", "block_size_in_bytes")
-          .foreach(fld => dfr.put(fld, src.get(fld)))
-        dfr.put("partition", new GenericData.Record(
-          dataFileSchema.getField("partition").schema()))
-        val e = new GenericData.Record(manifestEntrySchema)
-        e.put("status", 0) // EXISTING — lineage stays with the original commit
-        e.put("snapshot_id", f.entry.get("snapshot_id"))
-        e.put("data_file", dfr)
-        w.append(e)
-      }
-    }
-    val lp = metaDir.resolve(s"snap-$newSnapId-${UUID.randomUUID()}.avro")
-    Using.resource(new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](manifestListSchema))) { w =>
-      w.create(manifestListSchema, lp.toFile)
-      val r = new GenericData.Record(manifestListSchema)
-      r.put("manifest_path", s"file://${mp.toAbsolutePath}")
-      r.put("manifest_length", Files.size(mp))
-      r.put("partition_spec_id", 0)
-      r.put("added_snapshot_id", newSnapId)
-      r.put("added_data_files_count", merged.size)
-      r.put("existing_data_files_count", toCarry.map(_.size).sum)
-      r.put("deleted_data_files_count", 0)
-      w.append(r)
-    }
-    val nowMs = Files.getLastModifiedTime(lp).toMillis
-    val newMeta = meta.deepCopy[ObjectNode]()
-    val sn = newMeta.get("snapshots")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode].addObject()
-    sn.put("snapshot-id", newSnapId)
-    sn.put("parent-snapshot-id", currentId)
-    sn.put("timestamp-ms", nowMs)
-    sn.putObject("summary").put("operation", "replace")
-    sn.put("manifest-list", s"file://${lp.toAbsolutePath}")
-    if (cur.has("schema-id")) sn.put("schema-id", cur.get("schema-id").asInt())
-    newMeta.put("current-snapshot-id", newSnapId)
-    if (newMeta.has("snapshot-log")) {
-      val le = newMeta.get("snapshot-log")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode].addObject()
-      le.put("timestamp-ms", nowMs)
-      le.put("snapshot-id", newSnapId)
-    }
-    val curV = metaPath.getFileName.toString
-      .stripPrefix("v").stripSuffix(".metadata.json").toLong
-    Files.writeString(metaDir.resolve(s"v${curV + 1}.metadata.json"),
-      m.writerWithDefaultPrettyPrinter().writeValueAsString(newMeta))
-    Files.writeString(metaDir.resolve("version-hint.text"), (curV + 1).toString)
-    RewriteDataResult(toMerge.map(_.size).sum, merged.size,
-      toCarry.map(_.size).sum)
+    val newSnapId = nextSnapshotId(st.meta)
+    val carried = toCarry.flatten
+    val mp = writeManifest(st.dir, manifestEntrySchema,
+      merged.map(addedEntry(manifestEntrySchema, _, newSnapId)) ++
+        carried.map(f => existingEntry(manifestEntrySchema, f.entry)))
+    commitReplace(st, cur, newSnapId, mp, added = merged.size, existing = carried.size)
+    RewriteDataResult(toMerge.map(_.size).sum, merged.size, carried.size)
   }
 
   // ---- read --------------------------------------------------------------
@@ -1979,7 +1492,7 @@ object IcebergInterop {
     * in commit order — the public surface a caller needs to pick
     * time-travel points without parsing metadata JSON themselves. */
   def snapshotLog(root: Path): Seq[(Long, Long)] =
-    mapper.readTree(Files.readString(currentMetadata(root)))
+    load(root).meta
       .get("snapshots").elements().asScala
       .map(s => (s.get("snapshot-id").asLong(), s.get("timestamp-ms").asLong()))
       .toSeq.sortBy(_._2)
@@ -2029,7 +1542,7 @@ object IcebergInterop {
   private def readIcebergImpl(spark: SparkSession, root: Path,
                               snapshotId: Long,
                               prune: Option[(String, Any, Any)]): DataFrame = {
-    val meta = mapper.readTree(Files.readString(currentMetadata(root)))
+    val meta = load(root).meta
     val fv = meta.get("format-version").asInt()
     require(fv == 1 || fv == 2, s"unsupported Iceberg format-version $fv at $root")
     val requestedSnap: Option[JsonNode] =
@@ -2039,19 +1552,11 @@ object IcebergInterop {
         .getOrElse(throw new IllegalArgumentException(
           s"no snapshot $snapshotId at $root")))
     // schema precedence: the requested snapshot's schema-id → the
-    // schemas list; else top-level "schema"; else current-schema-id
-    def schemaById(id: Int): JsonNode =
-      meta.get("schemas").elements().asScala
-        .find(_.get("schema-id").asInt() == id)
-        .getOrElse(throw new IllegalArgumentException(
-          s"schema-id $id not in schemas list at $root"))
+    // schemas list; else the current schema
     val schemaNode =
       requestedSnap.filter(s => s.has("schema-id") && meta.has("schemas"))
-        .map(s => schemaById(s.get("schema-id").asInt()))
-        .getOrElse {
-          if (meta.has("schema")) meta.get("schema")
-          else schemaById(meta.get("current-schema-id").asInt())
-        }
+        .map(s => schemaById(meta, root, s.get("schema-id").asInt()))
+        .getOrElse(currentSchema(meta, root))
     val sparkSchema = parseSchema(schemaNode)
     val nullable = StructType(sparkSchema.fields.map(_.copy(nullable = true)))
     // Partition specs: unlike Delta/hive, Iceberg data files carry the
@@ -2275,7 +1780,7 @@ object IcebergInterop {
         // to match `_metadata.file_path` (the Delta DV lesson: a
         // partition dir with a space probes as %20).
         val dim = spark.createDataFrame(
-            filesWithSeq.map { case (p, s) => (p.toUri.getRawPath, s) })
+            filesWithSeq.map { case (p, s) => (uriRawPath(p), s) })
           .toDF(pathCol, seqCol)
         // LEFT join + fail-loud on a missed lookup (ADVICE r10): an
         // inner join would silently drop every row of a data file

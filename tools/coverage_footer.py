@@ -6,7 +6,8 @@ wrong #3), so the footer is now derived from the last correctness dump
 (`python3 tools/check.py` runs graft.Verify into DUMP): every query
 writes one parquet dir named after it, beside oracle_sql.json, which
 holds the oracle-checked subset. The test count (optional) comes from
-`sbt test`'s summary line.
+`sbt test`'s summary line. The `src/main/scala` line count (the net-lines
+figure ROADMAP aim 2 tracks) is counted from the tree, like `wc -l`.
 
 Usage: python3 tools/coverage_footer.py [--tests N]
 """
@@ -17,6 +18,7 @@ import sys
 
 DUMP = "/tmp/graft_verify"
 COV = "COVERAGE.md"
+MAIN = "src/main/scala"
 BEGIN = "<!-- BEGIN GENERATED counts (tools/coverage_footer.py) -->"
 END = "<!-- END GENERATED counts -->"
 
@@ -46,6 +48,12 @@ lines.append(
     + f". Local gate: `python3 tools/check.py` → {len(oracled)}/{len(oracled)}.")
 if tests is not None:
     lines.append(f"- `sbt test`: {tests} tests, 0 failures.")
+sources = [os.path.join(d, f) for d, _, fs in os.walk(MAIN) for f in fs
+           if f.endswith(".scala")]
+if not sources:
+    sys.exit(f"no .scala files under {MAIN}; run from the repository root")
+main_lines = sum(open(f, "rb").read().count(b"\n") for f in sources)
+lines.append(f"- `{MAIN}`: {main_lines} lines in {len(sources)} files.")
 lines.append(END)
 
 text = open(COV).read()
@@ -54,4 +62,5 @@ if i < 0 or j < 0:
     sys.exit(f"markers not found in {COV}; add {BEGIN} / {END} first")
 open(COV, "w").write(text[:i] + "\n".join(lines) + text[j + len(END):])
 print(f"updated {COV}: {len(all_queries)} queries, {len(oracled)} oracled"
-      + (f", {tests} tests" if tests is not None else ""))
+      + (f", {tests} tests" if tests is not None else "")
+      + f", {main_lines} {MAIN} lines")
