@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * dimension close on the curve, so sorting by the z-value and cutting
   * the table into contiguous files gives every file a narrow min/max
   * range on ALL k columns at once — which is exactly what the lake
-  * stats-skipping index ([[graft.lake.LakeTable.scanPruned]]) needs to
+  * stats-skipping file index ([[graft.lake.LakeFileIndex]]) needs to
   * prune range predicates on any dimension. A single-column sort
   * only ever achieves that for its leading column.
   *

@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, Literal}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -54,10 +56,13 @@ class CheckViolationException(msg: String) extends RuntimeException(msg)
   *    into a no-op — exactly-once via the txn log, literally the
   *    mechanism `DeltaSink` uses.
   *
-  * Reads scale: a snapshot read is `spark.read.parquet(dirs: _*)` —
-  * partition pruning, pushdown and vectorized scan all apply; the log
-  * itself is O(versions) tiny text files read driver-side, never a
-  * Spark job.
+  * Reads scale: a snapshot read is Spark's own parquet relation over
+  * the version's dirs — pushdown and vectorized scan all apply — whose
+  * file index ([[LakeFileIndex]]) also drops every directory the
+  * manifest's min/max and bloom stats prove cannot match the query's
+  * filter, so a plain `snapshot().filter(p)` skips data and the scan's
+  * "number of files read" shows it. The log itself is O(versions) tiny
+  * text files read driver-side, never a Spark job.
   *
   * WIRE-FORMAT INTEROP (documented limitation): this is a faithful
   * protocol REDUCTION of Delta/Iceberg, not their wire format — no
@@ -174,73 +179,42 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
   }
 
   /** Per-directory min/max column ranges for the data-skipping index,
-    * computed by aggregating the FRESHLY WRITTEN parquet (one bounded
-    * scan of the new files only — on a real lake store the same
-    * numbers come for free from the parquet footers; the `.head()` is
-    * a single driver-side row, not a collect loop). Null min/max
-    * (all-null column) is recorded as the empty field — a range
-    * predicate can never match it, so such a dir prunes. The empty
-    * field is RESERVED for that all-null sentinel: a column whose true
-    * min/max IS the empty string is simply not recorded (the dir stays
-    * unprunable on that column — safe over-approximation), otherwise
-    * prunedDirs would silently drop its rows. Values containing the
-    * `|` field delimiter or a line break (which would split the
-    * line-based manifest and inject phantom dir=/version= entries) are
-    * likewise not recorded. */
-  private def computeStats(rel: String, statsCols: Seq[String]): Seq[String] = {
-    if (statsCols.isEmpty) return Nil
-    val df = spark.read.parquet(root.resolve(rel).toString)
-    val types = df.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
-    val aggs = statsCols.flatMap(c => Seq(
-      min(col(c)).cast("string"), max(col(c)).cast("string")))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    def unsafe(s: String): Boolean =
-      s.isEmpty || s.contains("|") || s.contains("\n") || s.contains("\r")
-    statsCols.zipWithIndex.flatMap { case (c, i) =>
-      val mnOpt = Option(row.getString(2 * i))
-      val mxOpt = Option(row.getString(2 * i + 1))
-      (mnOpt, mxOpt) match {
-        case _ if c.contains("|") || c.contains("\n") || c.contains("\r") => None
-        case (None, None) => Some(s"$rel|$c|${types(c)}||") // all-null sentinel
-        case (Some(mn), Some(mx)) if unsafe(mn) || unsafe(mx) => None
-        case (Some(mn), Some(mx)) => Some(s"$rel|$c|${types(c)}|$mn|$mx")
-        case _ => None // min null iff max null; never reached
-      }
-    }
-  }
-
-  /** Per-directory min/max stats for a hive-partitioned layout in ONE
-    * job — [[computeStats]]' semantics, grouped by the partition
-    * column. The per-dir loop costs O(dirs) driver round-trips of
+    * computed by aggregating the FRESHLY WRITTEN parquet `rel` in ONE
+    * job (one bounded scan of the new files only — on a real lake
+    * store the same numbers come for free from the parquet footers).
+    * With `part`, `rel` is a hive-partitioned layout and the job groups
+    * by the partition column, one stat line per `rel/<part>=<value>`
+    * directory: a per-dir loop costs O(dirs) driver round-trips of
     * tiny jobs (the r15 bench measured q284's 64-dir optimize at
-    * 7.7 s vs 16-dir q178's 2.7 s — pure job-launch overhead, and the
-    * wrong shape at production bucket counts); one groupBy computes
-    * every directory's stats in a single pass. Values match the
-    * per-dir reads exactly: same string casts, same all-null
-    * sentinel, same unsafe-value skip. */
-  private def computeStatsPartitioned(rel: String, partCol: String,
-                                      statsCols: Seq[String]): Seq[String] = {
-    if (statsCols.isEmpty) return Nil
+    * 7.7 s vs 16-dir q178's 2.7 s — pure job-launch overhead). Null
+    * min/max (all-null column) is recorded as the empty field — a
+    * range predicate can never match it, so such a dir prunes. The
+    * empty field is RESERVED for that all-null sentinel: a column
+    * whose true min/max IS the empty string is simply not recorded
+    * (the dir stays unprunable on that column — safe
+    * over-approximation), otherwise pruning would silently drop its
+    * rows. Columns or values containing the `|` field delimiter or a
+    * line break (which would split the line-based manifest and inject
+    * phantom dir=/version= entries) are likewise not recorded. */
+  private def computeStats(rel: String, statsCols: Seq[String],
+                           part: Option[String] = None): Seq[String] = {
+    def unsafe(s: String): Boolean = s.contains("|") || s.contains("\n") || s.contains("\r")
+    val safe = statsCols.filterNot(unsafe)
+    if (safe.isEmpty) return Nil
     val df = spark.read.parquet(root.resolve(rel).toString)
     val types = df.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
-    val safe = statsCols.filterNot(c =>
-      c.contains("|") || c.contains("\n") || c.contains("\r"))
-    if (safe.isEmpty) return Nil
     val aggs = safe.flatMap(c => Seq(
       min(col(c)).cast("string"), max(col(c)).cast("string")))
-    val rows = df.groupBy(col(partCol)).agg(aggs.head, aggs.tail: _*).collect()
-    def unsafe(s: String): Boolean =
-      s.isEmpty || s.contains("|") || s.contains("\n") || s.contains("\r")
+    val rows = df.groupBy(part.map(col).toSeq: _*).agg(aggs.head, aggs.tail: _*).collect()
+    val k = part.size
     rows.toSeq.flatMap { r =>
-      val dd = s"$rel/$partCol=${r.get(0)}"
+      val dd = part.fold(rel)(p => s"$rel/$p=${r.get(0)}")
       safe.zipWithIndex.flatMap { case (c, i) =>
-        val mnOpt = Option(r.getString(1 + 2 * i))
-        val mxOpt = Option(r.getString(2 + 2 * i))
-        (mnOpt, mxOpt) match {
-          case (None, None) => Some(s"$dd|$c|${types(c)}||")
-          case (Some(mn), Some(mx)) if unsafe(mn) || unsafe(mx) => None
+        (Option(r.getString(k + 2 * i)), Option(r.getString(k + 2 * i + 1))) match {
+          case (None, None) => Some(s"$dd|$c|${types(c)}||") // all-null sentinel
+          case (Some(mn), Some(mx)) if mn.isEmpty || mx.isEmpty || unsafe(mn) || unsafe(mx) => None
           case (Some(mn), Some(mx)) => Some(s"$dd|$c|${types(c)}|$mn|$mx")
-          case _ => None
+          case _ => None // min null iff max null; never reached
         }
       }
     }
@@ -353,7 +327,7 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
 
   /** Append commit: snapshot = previous dirs + the new one. Pass
     * `statsCols` to record the new directory's min/max ranges for
-    * those columns in the manifest (see [[scanPruned]]); earlier
+    * those columns in the manifest (see [[LakeFileIndex]]); earlier
     * directories keep whatever stats their own commits recorded.
     * The declared schema auto-evolves by column addition
     * ([[mergeSchemas]]). */
@@ -392,7 +366,7 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
     * decomposition (buckets^(1/k) strips per dimension), no range
     * sampling. Each directory then covers one small hyper-rectangle
     * of the key space, so the committed per-directory min/max stats
-    * let [[prunedDirs]]/[[scanPruned]] skip most directories for a
+    * let a filtered [[snapshot]] skip most directories for a
     * range predicate on ANY of the k columns — the property a
     * single-column sort only gives its leading column. Layout-only:
     * the committed row multiset and declared schema are exactly the
@@ -422,7 +396,7 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
       val f = df.schema.fields.find(_.name == c)
         .getOrElse(throw new IllegalArgumentException(
           s"z-order column $c not in table schema"))
-      require(isNumericTypeName(f.dataType.typeName),
+      require(DirSkipping.isNumericTypeName(f.dataType.typeName),
         s"z-order column $c has non-numeric type ${f.dataType.typeName}; " +
           s"only numeric columns normalize to the $width-bit Morton lanes")
     }
@@ -443,43 +417,8 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
       }
     val z = graft.functions.ZOrder.interleaveN(
       zorderBy.zipWithIndex.map { case (c, d) => norm(c, 2 * d) })
-    val v = latestVersion + 1
-    val rel = s"data/z$v-${UUID.randomUUID().toString.take(8)}"
     val shift = k * width - java.lang.Integer.numberOfTrailingZeros(buckets)
-    df.withColumn("__zb", shiftright(z, shift))
-      .write.partitionBy("__zb").mode("overwrite")
-      .parquet(root.resolve(rel).toString)
-    val dirs = Using.resource(Files.list(root.resolve(rel))) { s =>
-      s.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("__zb="))
-        .map(p => s"$rel/${p.getFileName}").toSeq.sorted
-    }
-    // CARRY the table's pruning capability across the rewrite: every
-    // column with a min/max or bloom stat in the pre-optimize manifest
-    // keeps one in the optimized layout (recomputed per new directory
-    // — the old per-dir values don't transfer). Committing stats for
-    // only the two z-order keys would silently degrade point/range
-    // pruning on every other column to full reads (ADVICE r9).
-    val prior = readManifest(latestVersion).stats.map(_.split("\\|", -1))
-    val priorStatsCols = prior.collect {
-      case Array(_, c, _, _, _) if !c.startsWith("bloom:") => c
-    }.distinct
-    val priorBloomCols = prior.collect {
-      case Array(_, c, dt, _, _) if c.startsWith("bloom:") && dt.startsWith("bloom") =>
-        c.stripPrefix("bloom:")
-    }.distinct
-    val statsCols = (zorderBy ++ priorStatsCols).distinct
-    // layout rewrite of already-validated rows: carry checks, no re-scan.
-    // Min/max stats for all `buckets` directories come from ONE grouped
-    // job (computeStatsPartitioned); per-dir blooms likewise come from
-    // one grouped pass (computeBloomPartitioned — r21, ADVICE r20: the
-    // per-dir loop was O(dirs) driver round-trips; only tables that
-    // already carried blooms pay them at all).
-    commitManifest(v, "optimize", dirs, None, Some(df.schema.json),
-      stats = (if (dirs.isEmpty) Nil // empty table: no dirs, nothing to read
-               else computeStatsPartitioned(rel, "__zb", statsCols) ++
-                 computeBloomPartitioned(rel, "__zb", priorBloomCols)),
-      checks = readManifest(v - 1).checks)
+    commitLayout(df, "z", shiftright(z, shift), statsLead = zorderBy, bloomLead = Nil)
   }
 
   /** HASH-CLUSTER compaction (r20) — [[optimizeZOrder]]'s
@@ -488,11 +427,11 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
     * like an inverted index's `term` wants equality pruning instead):
     * rewrite the current snapshot into `buckets` directories by
     * `pmod(hash(col), buckets)` under one layout commit, each
-    * directory carrying a bloom on the cluster column, so
-    * [[scanPrunedEq]] reads ~1/buckets of the table for any point
-    * probe. Prior min/max stats columns are carried (recomputed per
-    * new directory — the optimizeZOrder rule); prior bloom columns
-    * too. Data files are untouched semantically: reads identical
+    * directory carrying a bloom on the cluster column, so a
+    * `snapshot().filter(col === v)` reads ~1/buckets of the table for
+    * any point probe. Prior min/max stats columns are carried
+    * (recomputed per new directory — the optimizeZOrder rule); prior
+    * bloom columns too. Data files are untouched semantically: reads identical
     * before/after, earlier versions still time-travel, the old layout
     * ages out via vacuum. Null cluster keys land in the hash-of-null
     * bucket (Spark's hash(null) is the seed 42, so pmod(42, buckets))
@@ -504,35 +443,47 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
     val df = snapshot()
     require(df.schema.fieldNames.contains(clusterCol),
       s"cluster column $clusterCol not in table schema")
+    commitLayout(df, "c", pmod(hash(col(clusterCol)), lit(buckets)),
+      statsLead = Nil, bloomLead = Seq(clusterCol))
+  }
+
+  /** The shared tail of the two layout rewrites: write `df` split by
+    * `bucket` into `data/<tag><v>-<uuid>/__<tag>b=<b>` directories and
+    * publish them as one `optimize` commit. The commit CARRIES the
+    * table's pruning capability: every column with a min/max or bloom
+    * stat in the pre-rewrite manifest keeps one, after the `statsLead`
+    * / `bloomLead` columns — recomputed per new directory, since the
+    * old per-dir values don't transfer; dropping them would silently
+    * degrade point/range pruning on every other column to full reads
+    * (ADVICE r9). Each stat family is ONE grouped pass over the new
+    * layout ([[computeStats]] / [[computeBloom]] by the partition
+    * column). A layout rewrite of already-validated rows carries the
+    * checks with no re-scan. */
+  private def commitLayout(df: DataFrame, tag: String, bucket: Column,
+                           statsLead: Seq[String], bloomLead: Seq[String]): Long = {
     val v = latestVersion + 1
-    val rel = s"data/c$v-${UUID.randomUUID().toString.take(8)}"
-    df.withColumn("__cb", pmod(hash(col(clusterCol)), lit(buckets)))
-      .write.partitionBy("__cb").mode("overwrite")
+    val prev = readManifest(v - 1)
+    val rel = s"data/$tag$v-${UUID.randomUUID().toString.take(8)}"
+    val part = s"__${tag}b"
+    df.withColumn(part, bucket).write.partitionBy(part).mode("overwrite")
       .parquet(root.resolve(rel).toString)
     val dirs = Using.resource(Files.list(root.resolve(rel))) { s =>
-      s.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("__cb="))
-        .map(p => s"$rel/${p.getFileName}").toSeq.sorted
+      s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(s"$part=")).map(p => s"$rel/$p").toSeq.sorted
     }
-    val prior = readManifest(latestVersion).stats.map(_.split("\\|", -1))
-    val priorStatsCols = prior.collect {
+    val prior = prev.stats.map(_.split("\\|", -1))
+    val statsCols = (statsLead ++ prior.collect {
       case Array(_, c, _, _, _) if !c.startsWith("bloom:") => c
-    }.distinct
-    val priorBloomCols = prior.collect {
+    }).distinct
+    val bloomCols = (bloomLead ++ prior.collect {
       case Array(_, c, dt, _, _) if c.startsWith("bloom:") && dt.startsWith("bloom") =>
         c.stripPrefix("bloom:")
-    }.distinct
-    val bloomCols = (clusterCol +: priorBloomCols).distinct
-    // ONE grouped pass per stat family (min/max, blooms) instead of a
-    // per-dir job loop — r21, ADVICE r20: the O(dirs) driver
-    // round-trips dominated the rewrite even at 16 buckets (the
-    // committed r20 probe measured clusterBy(term, 64) at ~25 s, most
-    // of it bloom-loop job launches).
+    }).distinct
     commitManifest(v, "optimize", dirs, None, Some(df.schema.json),
-      stats = (if (dirs.isEmpty) Nil
-               else computeStatsPartitioned(rel, "__cb", priorStatsCols) ++
-                 computeBloomPartitioned(rel, "__cb", bloomCols)),
-      checks = readManifest(v - 1).checks)
+      stats = (if (dirs.isEmpty) Nil // empty table: no dirs, nothing to read
+               else computeStats(rel, statsCols, Some(part)) ++
+                 computeBloom(rel, bloomCols, Some(part))),
+      checks = prev.checks)
   }
 
   /** MERGE upsert (the Delta `MERGE INTO` shape, SURVEY §2.9 / q96):
@@ -817,30 +768,14 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
     // Both sides resolve against the MERGED declared schema so a diff
     // across a schema evolution is well-formed: pre-evolution rows
     // surface the evolved columns as null, exactly as snapshot() reads
-    // them (a raw footer read would make exceptAll fail on arity).
-    val merged = (declaredSchema(v1), declaredSchema(v2)) match {
-      case (Some(a), Some(b)) => Some(StructType(
-        mergeSchemas(Some(a), b).fields.map(_.copy(nullable = true))))
-      case (a, b) => a.orElse(b)
-    }
-    def read(dirs: Seq[String]): DataFrame =
-      if (dirs.isEmpty) {
-        // Build the empty side from the MERGED schema too — an empty
-        // placeholder at v2's declared schema would arity-mismatch the
-        // non-empty side when diffing backward across a schema
-        // evolution (v1 wider than v2).
-        val s = merged.map(m => StructType(m.fields.map(_.copy(nullable = true))))
-          .getOrElse(snapshot(v2).schema)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
-      } else {
-        val paths = dirs.map(d => root.resolve(d).toString)
-        merged match {
-          case Some(s) => spark.read.schema(s).parquet(paths: _*)
-          case None => spark.read.parquet(paths: _*)
-        }
-      }
-    val only1 = read(m1.dirs.filterNot(shared))
-    val only2 = read(m2.dirs.filterNot(shared))
+    // them (a raw footer read would make exceptAll fail on arity). The
+    // empty side takes it too — v2's declared schema alone would
+    // arity-mismatch the other side when diffing backward across an
+    // evolution (v1 wider than v2).
+    val merged = declaredSchema(v2).map(b => mergeSchemas(declaredSchema(v1), b))
+      .orElse(declaredSchema(v1))
+    val only1 = read(m1, m1.dirs.filterNot(shared), merged)
+    val only2 = read(m2, m2.dirs.filterNot(shared), merged)
     only2.exceptAll(only1).withColumn("change", lit("added"))
       .unionByName(only1.exceptAll(only2).withColumn("change", lit("removed")))
   }
@@ -864,87 +799,19 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Snapshot read — current table, or time travel to `version`.
-    * Reading an old version after later commits returns exactly the
-    * old rows: data directories are immutable and never rewritten.
-    *
-    * A snapshot with no data (a drained stream that never saw input,
-    * or a table created empty) is still TYPED: every data commit
-    * persists its schema in the manifest, and `createEmpty` accepts
-    * one up front — so downstream column references resolve against an
-    * empty result instead of failing on a zero-column DataFrame. Only
-    * a schema-less empty table (created empty with no declared schema,
-    * never written) degrades to `spark.emptyDataFrame`. */
-  /** The data-skipping decision: which of `version`'s directories can
-    * contain a row with `colName` in [lo, hi]? A directory survives
-    * unless its recorded min/max range PROVABLY excludes the interval;
-    * directories with no recorded stat for the column always survive
-    * (skipping is strictly an over-approximation — never wrong, only
-    * sometimes not helpful). An empty recorded range (all-null column)
-    * prunes: a range predicate cannot match null. Numeric columns
-    * compare as doubles (exact for the integral range lakes index);
-    * string columns compare lexicographically against the string form
-    * of the bounds. Returns (surviving dirs, total dirs). */
-  /** Type names the skipping index compares NUMERICALLY — shared by
-    * [[prunedDirs]]' compare branch and [[optimizeZOrder]]'s key
-    * guard. "date" is deliberately NOT numeric: computeStats stores
-    * dates as Spark's string cast ("yyyy-MM-dd"), whose fixed-width
-    * ISO form compares correctly lexicographically in the string
-    * branch — treating it as numeric would throw
-    * NumberFormatException at read. */
-  private val numericTypeNames = Set("byte", "short", "integer", "long", "float", "double")
-  private def isNumericTypeName(t: String): Boolean =
-    numericTypeNames.contains(t) || t.startsWith("decimal")
+  private def skipping(m: Manifest): DirSkipping =
+    DirSkipping(m.dirs, m.stats, spark.sessionState.conf.sessionLocalTimeZone)
 
-  def prunedDirs(colName: String, lo: Any, hi: Any,
-                 version: Long = -1L): (Seq[String], Int) = {
-    val v = if (version < 0) latestVersion else version
-    val m = readManifest(v)
-    val byDir: Map[String, (String, String, String)] = m.stats.flatMap { s =>
-      s.split("\\|", -1) match {
-        case Array(dir, c, dtype, mn, mx) if c == colName => Some(dir -> ((dtype, mn, mx)))
-        case _ => None
-      }
-    }.toMap
-    val surviving = m.dirs.filter { dir =>
-      byDir.get(dir) match {
-        case None => true // no stat recorded — must read
-        case Some((_, "", _)) | Some((_, _, "")) => false // all-null column
-        case Some((dtype, mn, mx)) if isNumericTypeName(dtype) =>
-          !(mx.toDouble < lo.toString.toDouble || mn.toDouble > hi.toString.toDouble)
-        case Some((_, mn, mx)) => // string order
-          !(mx < lo.toString || mn > hi.toString)
-      }
-    }
-    (surviving, m.dirs.size)
+  /** The range half of the data-skipping decision, as a dir-selection
+    * helper: which of `version`'s directories can hold a row with
+    * `colName` in [lo, hi] ([[DirSkipping.range]] — the selection a
+    * filtered [[snapshot]] applies to the same conjuncts). Returns
+    * (surviving dirs, total dirs). */
+  private[graft] def prunedDirs(colName: String, lo: Any, hi: Any,
+                                version: Long = -1L): (Seq[String], Int) = {
+    val s = skipping(readManifest(if (version < 0) latestVersion else version))
+    (s.range(colName, Some(lo.toString), Some(hi.toString)), s.dirs.size)
   }
-
-  /** Stats-pruned snapshot read: only the directories [[prunedDirs]]
-    * keeps are opened — the manifest-level analog of parquet row-group
-    * skipping, and the reason a 100 TB table with range-correlated
-    * commits (streaming appends by time, z-ordered rewrites) answers a
-    * narrow range query by touching a handful of files. The caller
-    * still applies the actual predicate; pruning only removes
-    * directories that provably hold no matching row, so the filtered
-    * result is identical to filtering the full snapshot. */
-  def scanPruned(colName: String, lo: Any, hi: Any,
-                 version: Long = -1L): DataFrame = {
-    val v = if (version < 0) latestVersion else version
-    readDirs(prunedDirs(colName, lo, hi, v)._1, v)
-  }
-
-  /** Read a directory subset of `v` with the same declared-schema
-    * resolution as snapshot(), so a pruned read of an evolved table
-    * surfaces evolved columns correctly. */
-  private def readDirs(dirs: Seq[String], v: Long): DataFrame =
-    if (dirs.isEmpty) snapshot(v).limit(0)
-    else {
-      val paths = dirs.map(d => root.resolve(d).toString)
-      declaredSchema(v).map(s => StructType(s.fields.map(_.copy(nullable = true)))) match {
-        case Some(s) => spark.read.schema(s).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      }
-    }
 
   // ---- Bloom-filter directory stats (equality-predicate skipping) ----
   //
@@ -958,61 +825,28 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
   // keeps bloom lines invisible to the range-pruning lookup, m is the
   // bit width, and the hex bitset repeats in both value fields so no
   // line ever carries the all-null empty-field sentinel. Equality is
-  // on the value's STRING form (both build and probe hash
-  // xxhash64(cast(v AS STRING), seed) through the same Spark codepath,
-  // so build/probe can never disagree on type widening). Directories
-  // whose per-directory distinct count exceeds 512 record NO bloom —
-  // an over-saturated filter prunes nothing but costs bytes, so the
-  // honest move is staying unprunable (safe over-approximation),
-  // exactly like an unrecorded min/max.
+  // on the value's STRING form (build and probe hash
+  // xxhash64(cast(v AS STRING), seed) through the same expressions,
+  // [[DirSkipping.bloomPositions]], so they can never disagree on type
+  // widening). Directories whose per-directory distinct count exceeds
+  // 512 record NO bloom — an over-saturated filter prunes nothing but
+  // costs bytes, so the honest move is staying unprunable (safe
+  // over-approximation), exactly like an unrecorded min/max.
 
-  private val bloomSeeds = 0 until 4
-
+  /** The build side of [[DirSkipping.bloomPositions]]: the same four
+    * expressions, resolved by the analyzer over the data. */
   private def bloomPositionCols(value: Column, m: Column): Seq[Column] =
-    bloomSeeds.map(i => pmod(xxhash64(value.cast("string"), lit(i)), m))
+    (0 until 4).map(i => pmod(xxhash64(value.cast("string"), lit(i)), m))
 
-  private def bloomPositionCols(value: Column, m: Int): Seq[Column] =
-    bloomPositionCols(value, lit(m.toLong))
-
-  private def computeBloom(rel: String, bloomCols: Seq[String]): Seq[String] = {
-    if (bloomCols.isEmpty) return Nil
-    val df = spark.read.parquet(root.resolve(rel).toString)
-    val present = df.schema.fieldNames.toSet
-    bloomCols.flatMap { c =>
-      if (!present.contains(c) || c.contains("|") || c.contains("\n") || c.contains("\r")) None
-      else {
-        val vals = df.select(col(c).cast("string").as("v")).na.drop().distinct()
-        val ndv = vals.count()
-        if (ndv == 0 || ndv > 512) None
-        else {
-          val m = math.max(64, Integer.highestOneBit((8 * ndv.toInt) - 1) << 1)
-          val bits = new java.math.BigInteger("0")
-          val positions = vals
-            .select(explode(array(bloomPositionCols(col("v"), m): _*)).as("p"))
-            .distinct().collect().map(_.getLong(0).toInt)
-          val set = positions.foldLeft(bits)((b, p) => b.setBit(p))
-          val hex = set.toString(16)
-          Some(s"$rel|bloom:$c|bloom$m|$hex|$hex")
-        }
-      }
-    }
-  }
-
-  /** Per-directory blooms for a hive-partitioned layout in TWO jobs
-    * per column — [[computeBloom]]'s semantics grouped by the
-    * partition column (the [[computeStatsPartitioned]] treatment;
-    * ADVICE r20: the per-dir `dirs.flatMap(computeBloom)` loop
-    * launched ~3 tiny driver-round-trip jobs per bucket and dominated
-    * `optimizeClusterBy` even at 16 buckets — the O(dirs) shape
-    * computeStatsPartitioned was introduced to eliminate). Job 1
-    * counts per-dir distinct values; job 2 hashes the distinct values
-    * of every still-eligible dir (0 < ndv ≤ 512) with that dir's own
-    * width. Stat lines match the per-dir reads exactly: same
-    * cast-to-string, same xxhash64 seeds, same width rule, same ndv
-    * cap, same unsafe-column skip (LakeStatsSpec pins the
-    * equivalence). */
-  private def computeBloomPartitioned(rel: String, partCol: String,
-                                      bloomCols: Seq[String]): Seq[String] = {
+  /** Per-directory blooms for the freshly written `rel` — one dir, or
+    * with `part` one per `rel/<part>=<value>` directory — in TWO jobs
+    * per column whatever the directory count (ADVICE r20: a per-dir
+    * loop launched ~3 tiny driver-round-trip jobs per bucket and
+    * dominated `optimizeClusterBy` even at 16 buckets). Job 1 counts
+    * per-dir distinct values; job 2 hashes the distinct values of
+    * every still-eligible dir (0 < ndv ≤ 512) at that dir's own width. */
+  private def computeBloom(rel: String, bloomCols: Seq[String],
+                           part: Option[String] = None): Seq[String] = {
     if (bloomCols.isEmpty) return Nil
     val df = spark.read.parquet(root.resolve(rel).toString)
     val present = df.schema.fieldNames.toSet
@@ -1020,7 +854,7 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
       if (!present.contains(c) || c.contains("|") || c.contains("\n") ||
         c.contains("\r")) Nil
       else {
-        val vals = df.select(col(partCol).as("__pc"),
+        val vals = df.select(part.fold(lit(0))(col).as("__pc"),
           col(c).cast("string").as("v")).na.drop(Seq("v")).distinct()
         val ndv = vals.groupBy(col("__pc")).agg(count(lit(1)).as("n"))
           .collect().map(r => r.get(0) -> r.getLong(1)).toMap
@@ -1047,99 +881,39 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
               .foldLeft(new java.math.BigInteger("0"))(
                 (b, r) => b.setBit(r.getLong(1).toInt))
             val hex = bits.toString(16)
-            s"$rel/$partCol=$p|bloom:$c|bloom$m|$hex|$hex"
+            s"${part.fold(rel)(q => s"$rel/$q=$p")}|bloom:$c|bloom$m|$hex|$hex"
           }.sorted
         }
       }
     }
   }
 
-  /** Which of `version`'s directories can contain a row whose
-    * `colName` equals `value` (string-form equality)? Directories
-    * without a bloom stat for the column always survive. Never a
-    * false negative: the bloom records every distinct value the
-    * directory holds. */
-  def prunedDirsEq(colName: String, value: Any,
-                   version: Long = -1L): (Seq[String], Int) = {
+  /** The bloom half of the data-skipping decision, as a dir-selection
+    * helper: which of `version`'s directories can contain a row whose
+    * `colName` equals `value` (string-form equality,
+    * [[DirSkipping.equal]])? Directories without a bloom stat for the
+    * column always survive. Never a false negative: the bloom records
+    * every distinct value the directory holds. */
+  private[graft] def prunedDirsEq(colName: String, value: Any,
+                                  version: Long = -1L): (Seq[String], Int) = {
     // SQL equality with NULL is never true, and blooms only ever
     // record non-null values — a null probe is a caller bug, not a
-    // lookup; fail loud instead of NPE-ing in toString
+    // lookup; fail loud instead of NPE-ing
     require(value != null, "bloom point lookup requires a non-null value")
     val v = if (version < 0) latestVersion else version
-    val m = readManifest(v)
-    val byDir: Map[String, (Int, java.math.BigInteger)] = m.stats.flatMap { s =>
-      s.split("\\|", -1) match {
-        case Array(dir, c, dtype, hx, _) if c == s"bloom:$colName" &&
-          dtype.startsWith("bloom") =>
-          Some(dir -> ((dtype.stripPrefix("bloom").toInt, new java.math.BigInteger(hx, 16))))
-        case _ => None
-      }
-    }.toMap
-    // probe positions through the SAME Spark codepath as the build —
-    // including the CAST: the build hashed cast(col AS STRING) with
-    // col at its DECLARED type, so the probe literal first casts to
-    // that type, then to string. Without the intermediate cast a
-    // probe whose JVM type renders differently (Int 5 against a
-    // DoubleType column: "5" vs "5.0"; Timestamp.toString's '.0'
-    // suffix) hashes to different positions — a silent false negative
-    // that drops matching rows (ADVICE r9)
-    val probe = declaredSchema(v).flatMap(_.fields.find(_.name == colName)) match {
-      case Some(f) => lit(value).cast(f.dataType)
-      case None => lit(value)
-    }
-    val widths = byDir.values.map(_._1).toSet
-    // a probe that cannot CAST to the column's declared type (string
-    // 'abc' against an int column) provably matches zero rows — the
-    // correct answer for a legitimate point lookup is "prune every
-    // directory", not an exception (ADVICE r10); only a null probe
-    // input is the caller bug rejected above
-    val posByWidth: Map[Int, Option[Seq[Int]]] = widths.map { w =>
-      val r = spark.range(1).select(bloomPositionCols(probe, w): _*).head()
-      w -> (if (r.anyNull) None
-            else Some(r.toSeq.map(_.asInstanceOf[Long].toInt)))
-    }.toMap
-    if (widths.nonEmpty && posByWidth.values.forall(_.isEmpty))
-      return (Nil, m.dirs.size)
-    val surviving = m.dirs.filter { dir =>
-      byDir.get(dir) match {
-        case None => true // no bloom recorded — must read
-        case Some((w, bits)) =>
-          posByWidth(w).forall(_.forall(bits.testBit))
-      }
-    }
-    (surviving, m.dirs.size)
-  }
-
-  /** Bloom-pruned snapshot read: the equality analog of
-    * [[scanPruned]]. The caller still applies the predicate; pruning
-    * only removes directories that provably lack the value. */
-  def scanPrunedEq(colName: String, value: Any,
-                   version: Long = -1L): DataFrame = {
-    val v = if (version < 0) latestVersion else version
-    readDirs(prunedDirsEq(colName, value, v)._1, v)
-  }
-
-  /** Conjunctive pruning: intersect the surviving-directory sets of
-    * several range predicates and point predicates before one read —
-    * how a multi-dimensional predicate should drive a z-ordered
-    * layout (each dimension prunes its strips; the intersection is
-    * the predicate's rectangle, typically 1/buckets of the table
-    * where either dimension alone keeps √buckets/buckets). Still a
-    * strict over-approximation: every directory that could hold a
-    * row satisfying ALL predicates survives. */
-  def scanPrunedWhere(ranges: Seq[(String, Any, Any)],
-                      eqs: Seq[(String, Any)] = Nil,
-                      version: Long = -1L): DataFrame = {
-    val v = if (version < 0) latestVersion else version
-    val sets =
-      ranges.map { case (c, lo, hi) => prunedDirs(c, lo, hi, v)._1.toSet } ++
-        eqs.map { case (c, value) => prunedDirsEq(c, value, v)._1.toSet }
-    val dirs = sets match {
-      case Nil => readManifest(v).dirs.toSet
-      case ss  => ss.reduce(_ intersect _)
-    }
-    // keep manifest order for deterministic file listing
-    readDirs(readManifest(v).dirs.filter(dirs), v)
+    val s = skipping(readManifest(v))
+    // the build hashed cast(col AS STRING) with col at its DECLARED
+    // type, so the probe first casts to that type, then to string.
+    // Without the intermediate cast a probe whose JVM type renders
+    // differently (Int 5 against a DoubleType column: "5" vs "5.0";
+    // Timestamp.toString's '.0' suffix) hashes to different positions —
+    // a silent false negative that drops matching rows (ADVICE r9). A
+    // probe that cannot cast fails loud under ANSI and matches nothing
+    // otherwise.
+    val probe = declaredSchema(v).flatMap(_.fields.find(_.name == colName))
+      .fold[Expression](Literal(value))(f => Cast(Literal(value), f.dataType, Some(s.timeZone),
+        EvalMode.fromSQLConf(spark.sessionState.conf)))
+    (s.equal(colName, probe), s.dirs.size)
   }
 
   /** The complete data-directory listing of `version` (relative paths)
@@ -1180,26 +954,46 @@ final class LakeTable private (val spark: SparkSession, val root: Path) {
     t
   }
 
+  /** Snapshot read — current table, or time travel to `version`.
+    * Reading an old version after later commits returns exactly the
+    * old rows: data directories are immutable and never rewritten, and
+    * a filter over the result skips against `version`'s own stats.
+    *
+    * A snapshot with no data (a drained stream that never saw input,
+    * or a table created empty) is still TYPED: every data commit
+    * persists its schema in the manifest, and `createEmpty` accepts
+    * one up front — so downstream column references resolve against an
+    * empty result instead of failing on a zero-column DataFrame. Only
+    * a schema-less empty table (created empty with no declared schema,
+    * never written) degrades to `spark.emptyDataFrame`. */
   def snapshot(version: Long = -1L): DataFrame = {
     val v = if (version < 0) latestVersion else version
     require(Files.exists(manifestPath(v)), s"no version $v at $root")
     val m = readManifest(v)
-    // Reads resolve against the DECLARED schema (nullable — files
-    // written before a column evolved in simply lack it and surface
-    // null), the Delta/Iceberg schema-from-log rule. This also skips
-    // footer-based schema inference entirely: at 100 TB, opening one
-    // footer per file just to agree on a schema is its own job.
-    val declared = declaredSchema(v)
-      .map(s => StructType(s.fields.map(_.copy(nullable = true))))
-    if (m.dirs.nonEmpty) {
-      val paths = m.dirs.map(d => root.resolve(d).toString)
-      declared match {
-        case Some(s) => spark.read.schema(s).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      }
-    } else declared match {
-      case Some(s) => spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
-      case None => spark.emptyDataFrame
+    read(m, m.dirs, declaredSchema(v))
+  }
+
+  /** The one dirs → DataFrame reader ([[snapshot]], [[diff]]): `dirs`
+    * of manifest `m` at the declared `schema`, made nullable — files
+    * written before a column evolved in simply lack it and surface
+    * null, the Delta/Iceberg schema-from-log rule; it also skips
+    * footer-based schema inference, which at 100 TB is its own job.
+    * The relation is Spark's own parquet relation with its file index
+    * wrapped in a [[LakeFileIndex]] bound to `m`'s stats, so a filter
+    * over the result opens only the directories that can match. */
+  private def read(m: Manifest, dirs: Seq[String], schema: Option[StructType]): DataFrame = {
+    val declared = schema.map(s => StructType(s.fields.map(_.copy(nullable = true))))
+    if (dirs.isEmpty)
+      declared.fold(spark.emptyDataFrame)(
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), _))
+    else {
+      val paths = dirs.map(d => root.resolve(d).toString)
+      val rel = declared.fold(spark.read)(s => spark.read.schema(s)).parquet(paths: _*)
+        .queryExecution.analyzed.asInstanceOf[LogicalRelation].relation
+        .asInstanceOf[HadoopFsRelation]
+      val dirAt = dirs.map(d => root.resolve(d).toAbsolutePath.normalize.toString -> d).toMap
+      spark.baseRelationToDataFrame(
+        rel.copy(location = LakeFileIndex(rel.location, skipping(m), dirAt))(rel.sparkSession))
     }
   }
 }

@@ -167,35 +167,26 @@ object TextMining {
     * each term's postings is a partition-pruned point read and the
     * joins shuffle only the matched anchors, never the corpus; the
     * intermediate relation SHRINKS monotonically (each join can only
-    * drop anchors), so the longest phrase is the cheapest tail.
+    * drop anchors), so the longest phrase is the cheapest tail. Over a
+    * lake snapshot each term's filter prunes its own scan: on a
+    * hash-clustered index ([[graft.lake.LakeTable.optimizeClusterBy]])
+    * a term reads ~1/buckets of the table.
     * Repeated phrase terms are fine: postings carry one row per
     * occurrence position, so each filtered side stays a set.
     *
     * This is the exact-adjacency strengthening of the reference's
     * keyword containment retrieval
     * (/root/reference/dags/get_data/kpis_search.py:48-50). */
-  def phraseMatch(postings: DataFrame, terms: Seq[String]): DataFrame =
-    phraseMatchVia(_ => postings, terms)
-
-  /** [[phraseMatch]] with a PER-TERM postings LOOKUP — the serving
-    * form for clustered/pruned index layouts: each term's candidate
-    * relation comes from `lookup(term)` (e.g. a bloom-pruned
-    * [[graft.lake.LakeTable.scanPrunedEq]] over a hash-clustered
-    * index, which reads ~1/buckets of the table) instead of a filter
-    * over one flat frame. The operator still applies the EXACT term
-    * equality itself — pruning is an over-approximation, never a
-    * filter. */
-  def phraseMatchVia(lookup: String => DataFrame,
-                     terms: Seq[String]): DataFrame = {
+  def phraseMatch(postings: DataFrame, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "phraseMatch: phrase must have >= 1 term")
     require(terms.forall(_.nonEmpty),
       s"phraseMatch: empty term in $terms — postings never carry the " +
         "empty token, so the phrase would silently match nothing")
-    val base = lookup(terms.head).filter(col("term") === terms.head)
+    val base = postings.filter(col("term") === terms.head)
       .select(col("doc_id"), col("pos"))
     val anchors = terms.zipWithIndex.drop(1).foldLeft(base) {
       case (acc, (t, i)) =>
-        val ti = lookup(t).filter(col("term") === t)
+        val ti = postings.filter(col("term") === t)
           .select(col("doc_id").as(s"__d$i"), col("pos").as(s"__p$i"))
         acc.join(ti, col("doc_id") === col(s"__d$i") &&
             col(s"__p$i") === col("pos") + lit(i.toLong))

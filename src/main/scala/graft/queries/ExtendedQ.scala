@@ -305,9 +305,9 @@ object ExtendedQ {
 
     // lake — data skipping via per-commit min/max column stats: five
     // appends each covering a disjoint eid_mod range record their
-    // ranges in the manifest; a narrow range read must open exactly
-    // ONE of the five directories (the require gates it at every SF),
-    // and the pruned scan + predicate equals the plain filtered scan
+    // ranges in the manifest; a narrow range filter on the snapshot
+    // opens exactly ONE of the five directories (LakeScanSpec pins it
+    // by files read), and its result equals the plain filtered scan
     // the oracle runs. This is the manifest-level half of the skipping
     // story (parquet row-group min/max is the other half, PushdownSpec)
     "q131_stats_skip" -> ((s, d) => {
@@ -320,9 +320,7 @@ object ExtendedQ {
         t.append(base.filter(col("eid_mod") >= i * 200 && col("eid_mod") < (i + 1) * 200),
           statsCols = Seq("eid_mod"))
       }
-      val (kept, total) = t.prunedDirs("eid_mod", 450, 549)
-      require(kept.size == 1 && total == 5, s"skipping failed: ${kept.size}/$total")
-      t.scanPruned("eid_mod", 450, 549)
+      t.snapshot()
         .filter(col("eid_mod") >= 450 && col("eid_mod") <= 549)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
@@ -585,9 +583,9 @@ object ExtendedQ {
     // gates the Morton arithmetic, ZOrderSpec pins the grid; this
     // gates the END-TO-END rewrite): build a single-directory
     // unclustered table over two decorrelated dimensions, z-optimize
-    // it into 16 stat-carrying directories, REQUIRE pruning now works
-    // on BOTH columns, and answer a 2-D range query through the pruned
-    // scan. The oracle replays the same predicate over the raw rows —
+    // it into 16 stat-carrying directories, and answer a 2-D range
+    // query with a plain filter, which skips on BOTH columns
+    // (LakeScanSpec pins it by files read). The oracle replays the same predicate over the raw rows —
     // hash identity proves the rewrite was layout-only
     "q178_zorder_optimize" -> ((s, d) => {
       val base = Tables.events(s, d).select(
@@ -596,11 +594,7 @@ object ExtendedQ {
         col("event_type"), col("value"))
       val t = graft.lake.LakeTable.createTemp(s, base, "graft-zoq")
       t.optimizeZOrder(Seq("a", "b"), buckets = 16)
-      val (keptA, total) = t.prunedDirs("a", 100, 199)
-      val (keptB, _) = t.prunedDirs("b", 100, 199)
-      require(keptA.size < total && keptB.size < total,
-        s"z-order pruning ineffective: a ${keptA.size}/$total, b ${keptB.size}/$total")
-      t.scanPrunedWhere(Seq(("a", 100, 199), ("b", 100, 199)))
+      t.snapshot()
         .filter(col("a").between(100, 199) && col("b").between(100, 199))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
@@ -610,8 +604,9 @@ object ExtendedQ {
     // lake — bloom-filter point-lookup skipping (the equality analog
     // of q131's range skipping, the public Delta bloom-index idea):
     // five appended directories hold DISJOINT key ranges, each commit
-    // records a per-directory bloom over the key, and the point probe
-    // must prune to (nearly) one directory before reading. The oracle
+    // records a per-directory bloom over the key, and the point filter
+    // prunes to (nearly) one directory before reading (LakeScanSpec
+    // pins it by files read). The oracle
     // replays the equality predicate over the raw rows — hash identity
     // proves skipping never loses a matching row
     "q179_bloom_point_lookup" -> ((s, d) => {
@@ -623,10 +618,7 @@ object ExtendedQ {
         t.append(base.filter(col("k") >= i * 100 && col("k") < (i + 1) * 100),
           bloomCols = Seq("k"))
       }
-      val (kept, total) = t.prunedDirsEq("k", 237L)
-      require(kept.size < total,
-        s"bloom pruning ineffective: ${kept.size}/$total")
-      t.scanPrunedEq("k", 237L)
+      t.snapshot()
         .filter(col("k") === 237)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))

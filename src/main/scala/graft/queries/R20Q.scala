@@ -185,11 +185,10 @@ object R20Q {
     // only). `LakeTable.optimizeClusterBy("term", 16)` rewrites the
     // maintained positional index into hash(term) buckets, each
     // directory carrying a bloom on term, and the served phrase read
-    // goes through `phraseMatchVia` with a `scanPrunedEq` lookup per
-    // term: the pruning assertion REQUIRES each probe to keep ≤ 1/4
-    // of the directories. Layout moves bytes, never rows:
-    // ServedTwinSpec pins the pruned read ≡ the full-scan adjacency
-    // truth.
+    // is `phraseMatch` over the snapshot: each term's filter prunes its
+    // own scan to ≤ 1/4 of the directories (LakeScanSpec pins it by
+    // files read). Layout moves bytes, never rows: ServedTwinSpec pins
+    // the pruned read ≡ the full-scan adjacency truth.
     "q425_clustered_postings" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       // fresh index — this query rewrites its layout
@@ -197,16 +196,9 @@ object R20Q {
         docs.filter(col("doc_id") % 4 === k))
       val idx = graft.lake.LakeTable.createTemp(s, frag(0), "graft-clq")
       (1 to 3).foreach(k => idx.append(frag(k)))
-      val phrase = Seq("spark", "join")
       idx.optimizeClusterBy("term", buckets = 16)
-      phrase.foreach { t =>
-        val (kept, total) = idx.prunedDirsEq("term", t)
-        require(kept.nonEmpty && kept.size * 4 <= total,
-          s"expected a genuinely pruned read for '$t', " +
-            s"kept ${kept.size}/$total dirs")
-      }
-      graft.operators.TextMining.phraseMatchVia(
-        t => idx.scanPrunedEq("term", t), phrase).orderBy("doc_id")
+      graft.operators.TextMining.phraseMatch(idx.snapshot(), Seq("spark", "join"))
+        .orderBy("doc_id")
     }),
 
     // OUT-OF-ORDER STREAMING SLIDING-WINDOW RATE (r20 — VERDICT r19

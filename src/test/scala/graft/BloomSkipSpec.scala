@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lake.LakeTable
 
 /** Bloom-filter directory stats: equality-predicate skipping
-  * ([[LakeTable.prunedDirsEq]]/[[LakeTable.scanPrunedEq]]) — the point
-  * lookup complement to the min/max range index. */
+  * ([[LakeTable.prunedDirsEq]], and the filtered `snapshot()` that
+  * skips by it) — the point lookup complement to the min/max range
+  * index. */
 class BloomSkipSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -27,14 +28,14 @@ class BloomSkipSpec extends AnyFunSuite {
     assert(total === 5 && kept.nonEmpty && kept.size <= 2,
       s"pruning: ${kept.size}/$total")
     // exact result through the pruned read
-    assert(t.scanPrunedEq("key", 250L).filter(col("key") === 250).count() === 1)
+    assert(t.snapshot().filter(col("key") === 250).count() === 1)
     // no false negative anywhere (sample across all directories)
     Seq(0L, 99L, 100L, 250L, 404L, 499L).foreach { k =>
-      assert(t.scanPrunedEq("key", k).filter(col("key") === k).count() === 1,
+      assert(t.snapshot().filter(col("key") === k).count() === 1,
         s"key $k lost")
     }
     // an absent key reads as empty whatever the filter keeps
-    assert(t.scanPrunedEq("key", 99999L).filter(col("key") === 99999).count() === 0)
+    assert(t.snapshot().filter(col("key") === 99999).count() === 0)
   }
 
   test("typed probes hash through the Spark cast: timestamp lookup has no false negative") {
@@ -49,7 +50,7 @@ class BloomSkipSpec extends AnyFunSuite {
       java.time.Instant.ofEpochSecond(1700000000L + 10 * 60))
     val (kept, total) = t.prunedDirsEq("ts", probe)
     assert(total === 1 && kept.size === 1, "timestamp probe lost the directory")
-    assert(t.scanPrunedEq("ts", probe).filter(col("key") === 10).count() === 1)
+    assert(t.snapshot().filter(col("ts") === lit(probe) && col("key") === 10).count() === 1)
   }
 
   test("probe casts to the DECLARED column type: Int probe on a double column") {
@@ -62,7 +63,7 @@ class BloomSkipSpec extends AnyFunSuite {
       bloomCols = Seq("d"))
     val (kept, total) = t.prunedDirsEq("d", 5)
     assert(total === 1 && kept.size === 1, "int-vs-double probe lost the directory")
-    assert(t.scanPrunedEq("d", 5).filter(col("key") === 5).count() === 1)
+    assert(t.snapshot().filter(col("d") === 5 && col("key") === 5).count() === 1)
   }
 
   test("a probe that cannot cast to the column type fails loud") {
@@ -89,7 +90,7 @@ class BloomSkipSpec extends AnyFunSuite {
       bloomCols = Seq("key"))
     val (kept, total) = t.prunedDirsEq("key", 5L)
     assert(total === 1 && kept.size === 1)
-    assert(t.scanPrunedEq("key", 5L).filter(col("key") === 5).count() === 1)
+    assert(t.snapshot().filter(col("key") === 5).count() === 1)
   }
 
   test("bloom stats carry forward across later commits and vacuum") {
@@ -99,11 +100,11 @@ class BloomSkipSpec extends AnyFunSuite {
     t.append(mk(200, 300)) // no bloom on this one — must stay unprunable
     val (kept, total) = t.prunedDirsEq("key", 50L)
     assert(total === 3 && kept.size === 2) // dir 1 (true) + no-bloom dir 3
-    assert(t.scanPrunedEq("key", 250L).filter(col("key") === 250).count() === 1)
+    assert(t.snapshot().filter(col("key") === 250).count() === 1)
     // dropping history must not drop the surviving dirs' bloom lines
     t.vacuum(retainVersions = 1)
     val (keptV, totalV) = t.prunedDirsEq("key", 50L)
     assert(totalV === 3 && keptV.size === 2, s"bloom lost in vacuum: ${keptV.size}/$totalV")
-    assert(t.scanPrunedEq("key", 150L).filter(col("key") === 150).count() === 1)
+    assert(t.snapshot().filter(col("key") === 150).count() === 1)
   }
 }

@@ -239,18 +239,21 @@ class LakeTableSpec extends AnyFunSuite {
     }
     val (kept, total) = t.prunedDirs("event_id", 250, 260)
     assert(total === 5 && kept.size === 1)
-    val pruned = t.scanPruned("event_id", 250, 260)
+    // the filtered snapshot (which skips) equals the unskipped truth:
+    // the same filter over the rows the table was built from
+    val pruned = t.snapshot()
       .filter(col("event_id").between(250, 260))
       .select("event_id").collect().map(_.getLong(0)).sorted
-    val full = t.snapshot()
+    val full = events.filter(col("event_id") < 500)
       .filter(col("event_id").between(250, 260))
       .select("event_id").collect().map(_.getLong(0)).sorted
     assert(pruned === full && pruned.nonEmpty)
     // a range outside every dir prunes everything and returns a TYPED empty
     val (none, _) = t.prunedDirs("event_id", 10000, 20000)
     assert(none.isEmpty)
-    assert(t.scanPruned("event_id", 10000, 20000).count() === 0)
-    assert(t.scanPruned("event_id", 10000, 20000).columns.contains("event_id"))
+    assert(t.snapshot().filter(col("event_id").between(10000, 20000)).count() === 0)
+    assert(t.snapshot().filter(col("event_id").between(10000, 20000))
+      .columns.contains("event_id"))
   }
 
   test("stats survive append carry, overwrite expiry, vacuum carry, and no-stat dirs read") {
@@ -318,7 +321,7 @@ class LakeTableSpec extends AnyFunSuite {
     // streaming-append-by-time skipping pattern
     val (kept, total) = t.prunedDirs("event_id", 150, 160)
     assert(total === 3 && kept.size === 1)
-    val n = t.scanPruned("event_id", 150, 160)
+    val n = t.snapshot()
       .filter(col("event_id").between(150, 160)).count()
     assert(n === 11)
   }
@@ -349,9 +352,9 @@ class LakeTableSpec extends AnyFunSuite {
     t.append(events.filter(col("event_type") >= "m"), statsCols = Seq("event_type"))
     val (kept, total) = t.prunedDirs("event_type", "c", "f")
     assert(total === 2 && kept.size === 1)
-    val pruned = t.scanPruned("event_type", "c", "f")
+    val pruned = t.snapshot()
       .filter(col("event_type").between("c", "f")).count()
-    val full = t.snapshot().filter(col("event_type").between("c", "f")).count()
+    val full = events.filter(col("event_type").between("c", "f")).count()
     assert(pruned === full && pruned > 0)
   }
 
@@ -367,9 +370,9 @@ class LakeTableSpec extends AnyFunSuite {
     // lexicographically, not parse them as doubles
     val (kept, total) = t.prunedDirs("d", "2024-06-01", "2024-07-31")
     assert(total === 2 && kept.size === 1)
-    val pruned = t.scanPruned("d", "2024-06-01", "2024-07-31")
+    val pruned = t.snapshot()
       .filter(col("d").between("2024-06-01", "2024-07-31")).count()
-    val full = t.snapshot().filter(col("d").between("2024-06-01", "2024-07-31")).count()
+    val full = dated.filter(col("d").between("2024-06-01", "2024-07-31")).count()
     assert(pruned === full && pruned > 0)
   }
 
@@ -383,9 +386,9 @@ class LakeTableSpec extends AnyFunSuite {
     t.append(allNull, statsCols = Seq("s"))
     val (kept, total) = t.prunedDirs("s", "", "a")
     assert(total === 2 && kept.size === 1) // all-null dir pruned, empty-string dir kept
-    // the contract: pruned scan identical to filtering the full snapshot
-    val pruned = t.scanPruned("s", "", "a").filter(col("s").between("", "a")).count()
-    val full = t.snapshot().filter(col("s").between("", "a")).count()
+    // the contract: the skipping read is identical to filtering the rows
+    val pruned = t.snapshot().filter(col("s").between("", "a")).count()
+    val full = withEmpty.unionByName(allNull).filter(col("s").between("", "a")).count()
     assert(pruned === full && pruned === 1) // the "" row survives
   }
 

@@ -1,6 +1,9 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,7 +56,7 @@ class StateBudgetSpec extends AnyFunSuite {
   test("timer sessions on RocksDB (q189 shape): state is open sessions + timers") {
     def run(copies: Int): Long = {
       import spark.implicits._
-      MicroBatch.updateRun(spark, sf,
+      val sink = MicroBatch.updateRunTable(spark, sf,
         copies = copies) { stream =>
         val grouped = graft.Tables.toEventTime(stream)
           .withWatermark("ts", "0 seconds")
@@ -63,18 +66,28 @@ class StateBudgetSpec extends AnyFunSuite {
           .groupByKey(_._1)
         Stateful.timerSessions(grouped, gapUs = 30L * 60L * 1000000L)
           .toDF("user_id", "n")
-      }.count()
+      }
+      sink.snapshot().count()
       val stats = MicroBatch.lastRunStateStats
       assert(stats.nonEmpty, "no state operators reported for transformWithState")
       // the drain core picks RocksDB with changelog checkpointing from
       // the transformWithState plan: every operator entry reports the
-      // store's metrics, and the per-batch changelog commits took time
+      // store's metrics, and the checkpoint's state tree holds the
+      // per-batch changelog files (a file count, not a commit latency
+      // that a fast run rounds to 0 ms)
       val metrics = MicroBatch.lastRunProgress.flatMap(_.stateOperators)
         .map(_.customMetrics.asScala.map { case (k, v) => k -> v.longValue })
       assert(metrics.nonEmpty && metrics.forall(_.keys.exists(_.startsWith("rocksdb"))),
         s"transformWithState drain without RocksDB metrics: $metrics")
-      assert(metrics.map(_.getOrElse("rocksdbChangeLogWriterCommitLatencyMs", 0L)).sum > 0,
-        "no changelog commit time: the RocksDB store is not changelog-checkpointed")
+      // the sink's recorded appId is the drain's checkpoint path
+      val ckpt = sink.versions.flatMap(v => Files.readAllLines(
+          sink.root.resolve("_log").resolve(f"$v%020d.manifest")).asScala)
+        .collectFirst { case l if l.startsWith("txnAppId=") => l.stripPrefix("txnAppId=") }
+        .getOrElse(fail("no micro-batch commit in the sink"))
+      val changelogs = Using.resource(Files.walk(Paths.get(ckpt, "state")))(
+        _.iterator().asScala.count(_.getFileName.toString.endsWith(".changelog")))
+      assert(changelogs > 0,
+        s"no *.changelog under $ckpt/state: the RocksDB store is not changelog-checkpointed")
       totalRows(stats)
     }
     val at1 = run(1)
