@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The data-skipping state of ONE manifest version: its directories
   * and the stat lines it records for them — min/max
@@ -23,9 +24,10 @@ private[lake] final case class DirSkipping(dirs: Seq[String], stats: Seq[String]
     * missing bound is open). An empty recorded range (all-null column)
     * prunes: a range predicate cannot match null. Numeric columns
     * compare as doubles (exact for the integral range lakes index);
-    * every other type compares lexicographically against the bound's
-    * string form — the form the stats were built from, and a correct
-    * order for fixed-width ISO dates. */
+    * every other type compares against the bound's string form — the
+    * form the stats were built from, and a correct order for
+    * fixed-width ISO dates — by UTF-8 bytes, the order Spark's min/max
+    * and comparisons use (UTF-16 order differs beyond the BMP). */
   def range(colName: String, lo: Option[String], hi: Option[String]): Seq[String] = {
     val byDir = fields.collect { case Array(d, `colName`, t, mn, mx) => d -> ((t, mn, mx)) }.toMap
     dirs.filter { d =>
@@ -34,7 +36,10 @@ private[lake] final case class DirSkipping(dirs: Seq[String], stats: Seq[String]
         case Some((_, "", _)) | Some((_, _, "")) => false
         case Some((t, mn, mx)) if DirSkipping.isNumericTypeName(t) =>
           !lo.exists(mx.toDouble < _.toDouble) && !hi.exists(mn.toDouble > _.toDouble)
-        case Some((_, mn, mx)) => !lo.exists(mx < _) && !hi.exists(mn > _)
+        case Some((_, mn, mx)) =>
+          def cmp(a: String, b: String) =
+            UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+          !lo.exists(cmp(mx, _) < 0) && !hi.exists(cmp(mn, _) > 0)
       }
     }
   }
@@ -43,20 +48,29 @@ private[lake] final case class DirSkipping(dirs: Seq[String], stats: Seq[String]
     * `probe` (a foldable expression at the column's type). The probe's
     * bit positions are evaluated here on the driver, through the same
     * expressions the build ran over the data. A null value matches no
-    * row. */
+    * row; a zero probes both signs, which Spark's `=` equates but
+    * whose string forms hash apart. */
   def equal(colName: String, probe: Expression): Seq[String] = {
-    val value = probe.eval()
-    if (value == null) return Nil
+    val values = probe.eval() match {
+      case null => return Nil
+      case d: Double if d == 0.0d => Seq(0.0d, -0.0d)
+      case f: Float if f == 0.0f => Seq(0.0f, -0.0f)
+      case v => Seq(v)
+    }
     val blooms = fields.collect {
       case Array(d, c, t, hx, _) if c == s"bloom:$colName" && t.startsWith("bloom") =>
         d -> ((t.stripPrefix("bloom").toInt, new BigInteger(hx, 16)))
     }.toMap
-    val typed = Literal(value, probe.dataType)
-    val positions = blooms.values.map(_._1).toSet.map { (w: Int) =>
-      w -> DirSkipping.bloomPositions(typed, Literal(w.toLong), timeZone)
-        .map(_.eval().asInstanceOf[Long].toInt)
-    }.toMap
-    dirs.filter(d => blooms.get(d).forall { case (w, bits) => positions(w).forall(bits.testBit) })
+    val widths = blooms.values.map(_._1).toSet
+    val positions = values.map { v =>
+      widths.map { w =>
+        w -> DirSkipping.bloomPositions(Literal(v, probe.dataType), Literal(w.toLong), timeZone)
+          .map(_.eval().asInstanceOf[Long].toInt)
+      }.toMap
+    }
+    dirs.filter(d => blooms.get(d).forall { case (w, bits) =>
+      positions.exists(_(w).forall(bits.testBit))
+    })
   }
 
   /** Directories that can hold a row satisfying every conjunct of
@@ -107,7 +121,8 @@ private[lake] object DirSkipping {
     * driver so a probe starts no Spark job. Equality is on the value's
     * STRING form, so build and probe never disagree on type widening. */
   def bloomPositions(value: Expression, m: Expression, timeZone: String): Seq[Expression] =
-    (0 until 4).map(i => Pmod(new XxHash64(Seq(Cast(value, StringType, Some(timeZone)), Literal(i))), m))
+    (0 until 4).map(i =>
+      Pmod(new XxHash64(Seq(Cast(value, StringType, Some(timeZone)), Literal(i))), m))
 }
 
 /** The file index behind every [[LakeTable]] read: Spark's own

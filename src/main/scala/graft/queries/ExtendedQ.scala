@@ -585,8 +585,9 @@ object ExtendedQ {
     // unclustered table over two decorrelated dimensions, z-optimize
     // it into 16 stat-carrying directories, and answer a 2-D range
     // query with a plain filter, which skips on BOTH columns
-    // (LakeScanSpec pins it by files read). The oracle replays the same predicate over the raw rows —
-    // hash identity proves the rewrite was layout-only
+    // (LakeScanSpec pins it by files read). The oracle replays the
+    // same predicate over the raw rows — hash identity proves the
+    // rewrite was layout-only
     "q178_zorder_optimize" -> ((s, d) => {
       val base = Tables.events(s, d).select(
         col("event_id"), (col("event_id") % 1000).as("a"),
@@ -606,9 +607,9 @@ object ExtendedQ {
     // five appended directories hold DISJOINT key ranges, each commit
     // records a per-directory bloom over the key, and the point filter
     // prunes to (nearly) one directory before reading (LakeScanSpec
-    // pins it by files read). The oracle
-    // replays the equality predicate over the raw rows — hash identity
-    // proves skipping never loses a matching row
+    // pins it by files read). The oracle replays the equality
+    // predicate over the raw rows — hash identity proves skipping
+    // never loses a matching row
     "q179_bloom_point_lookup" -> ((s, d) => {
       val base = Tables.events(s, d).select(col("event_id"),
         (col("event_id") % 500).as("k"), col("event_type"), col("value"))

@@ -21,9 +21,10 @@ object R15Q {
     // strips per dimension); pruning then works on ALL THREE columns
     // — the property no single- or two-column sort gives the third
     // dimension (LakeScanSpec pins it by files read). The query
-    // answers a 3-D range predicate with a plain filter; the oracle replays the predicate over
-    // the raw rows — hash identity proves the rewrite was
-    // layout-only AND that pruning lost no matching row.
+    // answers a 3-D range predicate with a plain filter; the oracle
+    // replays the predicate over the raw rows — hash identity proves
+    // the rewrite was layout-only AND that pruning lost no matching
+    // row.
     "q284_zorder3d" -> ((s, d) => {
       val base = Tables.events(s, d).select(
         col("event_id"), (col("event_id") % 1000).as("a"),

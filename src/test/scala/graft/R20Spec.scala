@@ -323,7 +323,7 @@ class R20Spec extends AnyFunSuite {
     assert(kept.nonEmpty && kept.size < total,
       s"no pruning: kept ${kept.size}/$total")
     val pruned = after.filter(col("term") === "t5").count()
-    val full = df.filter(col("term") === "t5").count() * 2
+    val full = before.filter(col("term") === "t5").count()
     assert(pruned == full && pruned > 0,
       s"pruned read dropped rows: $pruned vs $full")
     // a value the table never held prunes to zero dirs (bloom has no

@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -113,6 +111,34 @@ class LakeScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assertOpens(t, col("event_type").between("c", "f"), kept, byType.unionByName(rest))
   }
 
+  test("string bounds order as Spark does, by UTF-8 bytes, beyond the BMP too") {
+    val s = spark
+    import s.implicits._
+    // UTF-16 puts U+1F600 (a surrogate pair) below U+FFFF; Spark's byte
+    // order puts it above U+FF21 and U+FFFF, so it is this dir's max and
+    // inside the range
+    val high = Seq("\uFF21", "\uD83D\uDE00").toDF("s")
+    val low = Seq("a", "b").toDF("s")
+    val t = LakeTable.createTemp(spark, high, "graft-scan-u", statsCols = Seq("s"))
+    t.append(low, statsCols = Seq("s"))
+    val (kept, total) = t.prunedDirs("s", "\uFFFF", "\uD83D\uDE00")
+    assert(total === 2 && kept.size === 1)
+    assertOpens(t, col("s").between("\uFFFF", "\uD83D\uDE00"), kept, high.unionByName(low))
+  }
+
+  test("a zero probe matches both signs of zero, as Spark's = does") {
+    val s = spark
+    import s.implicits._
+    val zeros = Seq(-0.0, 1.0).toDF("x")
+    val others = Seq(2.0, 3.0).toDF("x")
+    val t = LakeTable.createTemp(spark, zeros, "graft-scan-z", bloomCols = Seq("x"))
+    t.append(others, bloomCols = Seq("x"))
+    val (kept, total) = t.prunedDirsEq("x", 0.0)
+    assert(total === 2 && kept.size === 1)
+    assertOpens(t, col("x") === 0.0, kept, zeros.unionByName(others))
+    assert(t.snapshot().filter(col("x") === 0.0).count() === 1)
+  }
+
   test("bloom equality: an Int literal against a long column prunes like prunedDirsEq") {
     val (t, base) = sliced
     val (bloom, _) = t.prunedDirsEq("event_id", 250L)
@@ -184,7 +210,7 @@ class LakeScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("a shallowClone (absolute dirs, no stats) reads every dir") {
     val (t, base) = sliced
-    val c = t.shallowClone(Files.createTempDirectory("graft-scan-clone").resolve("t"))
+    val c = t.shallowClone(TempDirs.create("graft-scan-clone").resolve("t"))
     val (all, total) = c.prunedDirs("event_id", 250, 260)
     assert(total === 5 && all.size === 5)
     assertOpens(c, col("event_id").between(250, 260), all, base)
@@ -192,11 +218,11 @@ class LakeScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("empty and schema-less tables read as before") {
     val typed = LakeTable.createEmpty(spark,
-      Files.createTempDirectory("graft-scan-e").resolve("t"), Some(events.schema))
+      TempDirs.create("graft-scan-e").resolve("t"), Some(events.schema))
     val e = typed.snapshot().filter(col("event_id") > 5)
     assert(e.count() === 0 && e.columns.contains("event_id") && lakeScans(e).isEmpty)
     val bare = LakeTable.createEmpty(spark,
-      Files.createTempDirectory("graft-scan-n").resolve("t"))
+      TempDirs.create("graft-scan-n").resolve("t"))
     assert(bare.snapshot().columns.isEmpty && bare.snapshot().count() === 0)
   }
 
